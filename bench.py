@@ -501,8 +501,9 @@ _PINNED = (
 # exactly the stdout set of the round-18 driver run, i.e. the lines a
 # cross-round diff already has a baseline for — are elided FIRST, in
 # alphabetical order; only if the budget still overflows do keep-list
-# members elide (alphabetically, _PINNED always last). Every elided
-# line remains in bench_detail.json at full precision.
+# members elide (alphabetically). _PINNED queries never elide in this
+# incremental pass; they appear alone only in the last-resort render.
+# Every elided line remains in bench_detail.json at full precision.
 _STDOUT_KEEP = frozenset(
     {
         "ann_ivf", "ann_ivf_nprobe", "ann_ivf_pq", "ann_pq_recall_eval",

@@ -689,6 +689,26 @@ def test_ivf_train_step_empty_cell_keeps_previous(spark):
     assert out[1].n_members == 0 and out[1].embedding == [-1.0, 0.0]
 
 
+def test_ivf_train_step_sequence_form_drops_none_and_rejects_empty(spark):
+    """The driver-side centroid sequence honours the DataFrame form's null
+    contract: a None vector is dropped (not a TypeError), and an empty or
+    all-None sequence is a clear ValueError (not an IndexError)."""
+    import pytest
+
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.99, 0.01])],
+        "vec_id long, embedding array<double>",
+    )
+    state = [(0, None), (1, [1.0, 0.0]), (2, [-1.0, 0.0])]
+    out = {r.centroid_id: r for r in sim.ivf_train_step(vecs, state).collect()}
+    assert set(out) == {1, 2}
+    assert out[1].n_members == 2
+    assert out[2].n_members == 0 and out[2].embedding == [-1.0, 0.0]
+    for bad in ([], [(0, None)]):
+        with pytest.raises(ValueError, match="empty or all-None"):
+            sim.ivf_train_step(vecs, bad)
+
+
 def test_resize_media_deterministic_dims(spark):
     media = mm.attach_binary_payload(docs_df(spark, ["hello world", "spark engine"]))
     out = {r.media_id: r for r in mm.resize_media(media, width=8, height=4).collect()}
@@ -833,6 +853,13 @@ def test_pq_topk_finds_group_neighbours(spark):
         # ADC neighbours of a group-g query are overwhelmingly group-g
         same_group = sum(1 for m_ in matches if m_ % 4 == qid % 4)
         assert same_group >= 4, (qid, matches)
+    # a None codes row (dirty ingest) is dropped like a None vector is,
+    # not crashed on, and changes nothing
+    dirty = codes.unionByName(
+        spark.createDataFrame([(999, None)], "vec_id long, codes array<int>")
+    )
+    again = sim.pq_topk(dirty, queries, books, k=5).collect()
+    assert sorted(map(tuple, again)) == sorted(map(tuple, rows))
 
 
 def test_ivf_pq_topk_recall_and_determinism(spark):
@@ -1238,7 +1265,9 @@ def test_sq_l2_topk_randomized_brute_equivalence(spark):
     operator's exact contract (rounded d2 asc, id asc, ALL self rows
     excluded) — sweeps magnitudes (unit vs ~1e3 coordinates, exercising
     the data-scaled margin), duplicate ids on both corpus and query ids,
-    and corpus sizes spanning the n<=k / n>k chunk branches."""
+    and corpus sizes spanning the n<=k / n>k chunk branches. The last
+    case is one partition of two full TOPK_CHUNK_ROWS chunks, so the
+    block-min threshold cut runs."""
     import numpy as np
 
     rng = np.random.default_rng(2026)
@@ -1248,6 +1277,7 @@ def test_sq_l2_topk_randomized_brute_equivalence(spark):
         (120, 10, 1000.0, 5),  # large magnitude + dups
         (300, 5, 1.0, 0),
         (200, 10, 1000.0, 20),
+        (2 * sim.TOPK_CHUNK_ROWS, 10, 1000.0, 30),
     ]):
         d = int(rng.integers(4, 17))
         ids = list(range(n))
@@ -1261,6 +1291,8 @@ def test_sq_l2_topk_randomized_brute_equivalence(spark):
         df = spark.createDataFrame(
             rows, "vec_id bigint, embedding array<double>"
         )
+        if n >= sim.TOPK_CHUNK_ROWS:
+            df = df.coalesce(1)
         qdf = spark.createDataFrame(
             [(qid, [float(x) for x in qvec])],
             "vec_id bigint, embedding array<double>",
@@ -1328,6 +1360,58 @@ def test_cosine_topk_randomized_brute_equivalence(spark):
         want = [(m, s, r + 1) for r, (m, s) in enumerate(cand[:k])]
         assert sorted(got) == sorted(want), f"case {case}"
         assert [r for _, _, r in got] == list(range(1, len(want) + 1))
+
+
+def test_pq_topk_randomized_brute_equivalence(spark):
+    """pq_topk == a per-query NumPy loop applying the operator's exact
+    contract (ADC distance = the m table lookups summed per row, rounded;
+    then id asc; all self rows excluded). Coarse rounding makes ties
+    everywhere, dup ids sit on both sides, and the one-partition case of
+    two full TOPK_CHUNK_ROWS chunks runs the block-min threshold cut."""
+    import numpy as np
+
+    rng = np.random.default_rng(1107)
+    m, sub, kc = 4, 2, 4
+    books = [rng.normal(size=(kc, sub)) for _ in range(m)]
+    for case, (n, k, digits, n_dup) in enumerate([
+        (6, 10, 9, 0),  # n <= k branch
+        (300, 5, 1, 10),
+        (2 * sim.TOPK_CHUNK_ROWS, 5, 1, 40),
+    ]):
+        ids = list(range(n))
+        for j in range(n_dup):
+            ids[n - 1 - j] = int(rng.integers(0, 4))
+        codes = rng.integers(0, kc, size=(n, m))
+        df = spark.createDataFrame(
+            [(ids[i], [int(c) for c in codes[i]]) for i in range(n)],
+            "vec_id bigint, codes array<int>",
+        )
+        if n >= sim.TOPK_CHUNK_ROWS:
+            df = df.coalesce(1)
+        qvecs = rng.normal(size=(4, m * sub))
+        qdf = spark.createDataFrame(
+            [(q, [float(x) for x in qvecs[q]]) for q in range(4)],
+            "vec_id bigint, embedding array<double>",
+        )
+        got = sorted(
+            tuple(r)
+            for r in sim.pq_topk(df, qdf, books, k=k, round_digits=digits)
+            .collect()
+        )
+        want = []
+        for q in range(4):
+            tabs = np.stack(
+                [
+                    ((qvecs[q, j * sub:(j + 1) * sub] - books[j]) ** 2).sum(1)
+                    for j in range(m)
+                ]
+            )
+            dist = np.round(tabs[np.arange(m)[None, :], codes].sum(axis=1), digits)
+            cand = sorted(
+                (float(dist[i]), ids[i]) for i in range(n) if ids[i] != q
+            )
+            want += [(q, mid, d, r + 1) for r, (d, mid) in enumerate(cand[:k])]
+        assert got == sorted(want), f"case {case}"
 
 
 def test_simhash_pairs_duplicate_ids_never_self_pair(spark):

@@ -193,5 +193,11 @@ def test_local_rows_df_slices_by_size(spark):
     )
     assert 1 < big.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
     assert big.count() == 120_000
+    # exact multiples of rows_per_slice take no extra slice
+    for n_rows, n_slices in ((50_000, 1), (100_000, 2)):
+        exact = pt.local_rows_df(
+            spark, [(i,) for i in range(n_rows)], "a long", rows_per_slice=50_000
+        )
+        assert exact.rdd.getNumPartitions() == n_slices
     empty = pt.local_rows_df(spark, [], "a long")
     assert empty.count() == 0

@@ -19,28 +19,3 @@ def md5_hash60(col: Column | str, seed: str = "") -> Column:
     seeded = F.concat(F.lit(seed), c) if seed else c
     return F.conv(F.substring(F.md5(seeded), 1, 15), 16, 10).cast("bigint")
 
-
-def log2p1(col: Column | str) -> Column:
-    """log2(x + 1), the reference's matrix transform
-    (/root/reference/xena_gdc_etl/xena_dataset.py:241)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.log2(c + F.lit(1.0))
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<numeric> columns, computed JVM-side
-    with zip_with + aggregate (no Python UDF). Inputs are cast to double
-    element-wise for precision-stable math.
-    """
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(ad, bd, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    na = F.sqrt(
-        F.aggregate(F.transform(ad, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    nb = F.sqrt(
-        F.aggregate(F.transform(bd, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    return dot / (na * nb)

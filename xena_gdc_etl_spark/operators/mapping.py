@@ -79,21 +79,6 @@ def dedup_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
     return df.dropDuplicates(subset=list(subset) if subset else None)
 
 
-def list_agg_per_key(
-    df: DataFrame,
-    key_col: str,
-    value_cols: Sequence[str],
-) -> DataFrame:
-    """Collapse repeated per-key records into per-key lists —
-    ``format_multiple_data`` (gdc.py:156 groupby('id').agg(list), used for
-    diagnoses/treatments arrays). Sorted for determinism.
-    """
-    aggs = [
-        F.array_sort(F.collect_list(F.col(c))).alias(c) for c in value_cols
-    ]
-    return df.groupBy(F.col(key_col)).agg(*aggs)
-
-
 # Xena dtypes whose matrices carry SAMPLES AS COLUMN NAMES (the reference's
 # ``sample_columns`` list, postprocessing.py:78); every other dtype is the
 # row form with a 'sample' column.

@@ -145,19 +145,6 @@ def melt_long(
     return wide_df.select(F.col(id_col), F.expr(expr))
 
 
-def drop_all_null_cols(df: DataFrame) -> DataFrame:
-    """Drop columns whose values are all null — pandas ``dropna(axis=1,
-    how='all')`` in the reference (/root/reference/xena_gdc_etl/
-    xena_dataset.py:1409). One aggregate pass to count non-nulls, then a
-    driver-side projection decision (schema-sized, not data-sized).
-    """
-    counts = df.agg(
-        *[F.count(F.col(c)).alias(c) for c in df.columns]
-    ).collect()[0]
-    keep = [c for c in df.columns if counts[c] > 0]
-    return df.select(*keep)
-
-
 def matrix_equal(
     left: DataFrame,
     right: DataFrame,

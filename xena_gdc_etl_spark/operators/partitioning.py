@@ -114,7 +114,7 @@ def local_rows_df(spark, rows: list, schema, rows_per_slice: int = 50_000):
     n = max(
         1,
         min(
-            len(rows) // rows_per_slice + 1,
+            (len(rows) + rows_per_slice - 1) // rows_per_slice,
             spark.sparkContext.defaultParallelism,
         ),
     )

@@ -6,14 +6,14 @@ once, and queries only score vectors in their own cell — pruning the
 candidate set by ~n_centroids× at 100 TB. Vector math runs as Arrow-batched
 numpy (one BLAS matmul per batch via mapInPandas/applyInPandas) — measured
 ~20× faster than Catalyst higher-order functions, which are interpreted
-per-element; a pure-JVM zip_with/aggregate cosine remains in
-xena_gdc_etl_spark.functions for tests and single-pair use.
+per-element. The brute-force top-k operators (cosine, squared L2, PQ
+ADC) share one broadcast-query batch kernel, :func:`_broadcast_topk`.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 from typing import NamedTuple
 
 import numpy as np
@@ -104,20 +104,12 @@ def _centroid_rows(
 # candidate matrix stays bounded even at the bounded-collect query
 # ceiling (65536 queries), independent of Arrow batch sizing.
 TOPK_CHUNK_ROWS = 2048
-# Block width for the two-level per-query threshold (see _local_topk):
-# the k-th largest of the row's BLOCK MAXIMA is provably <= the row's
-# k-th largest element, so thresholding on it keeps a small superset
-# while reading the candidate matrix with plain vectorized maxes
+# Block width for the two-level per-query threshold (see _broadcast_topk):
+# the k-th best of the row's BLOCK EXTREMA is provably no better than the
+# row's k-th best element, so thresholding on it keeps a small superset
+# while reading the candidate matrix with plain vectorized maxes/mins
 # instead of a per-row introselect.
 TOPK_BLOCK = 16
-
-_TOPK_SCHEMA = StructType(
-    [
-        StructField("query_id", LongType()),
-        StructField("match_id", LongType()),
-        StructField("sim", DoubleType()),
-    ]
-)
 
 
 def _spread_to_cores(df: DataFrame, par: int) -> DataFrame:
@@ -143,6 +135,210 @@ def _spread_to_cores(df: DataFrame, par: int) -> DataFrame:
     return spread(df, par, min_bytes=SPREAD_MIN_MATMUL_BYTES)
 
 
+def _query_matrix(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    what: str,
+    max_driver_rows: int,
+) -> "tuple[np.ndarray, np.ndarray]":
+    """The broadcast query side of the top-k family as driver arrays:
+    (int64 ids, float64 vector rows), collected bounded. Null vectors
+    carry no geometry and are dropped (aggregate-style null semantics — a
+    dirty ingest must not crash the plan); an empty side returns empty
+    arrays, which every consumer turns into an empty result."""
+    qrows = _collect_bounded(
+        queries.filter(F.col(vec_col).isNotNull()).select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        ),
+        what,
+        max_driver_rows,
+    )
+    q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
+    return q_ids, np.array([r.qv for r in qrows], dtype=np.float64)
+
+
+def _empty_topk(spark, score_col: str) -> DataFrame:
+    # empty-in → empty-out: a filter that matches no queries must not
+    # kill the pipeline (np.stack/argmax on empty raises AxisError)
+    return spark.createDataFrame(
+        [], f"query_id bigint, match_id bigint, {score_col} double, rank bigint"
+    )
+
+
+def _rank_topk(
+    local: DataFrame, score_col: str, k: int, descending: bool
+) -> DataFrame:
+    """The global finish of every top-k operator: a row_number window per
+    query over the batch-local candidates, ordered by the FINAL criterion
+    (score in ``descending`` or ascending order, then match_id asc), cut
+    at ``k``. The window only ever sees ≤ partitions×k-ish rows per
+    query."""
+    score = F.col(score_col).desc() if descending else F.col(score_col).asc()
+    w = Window.partitionBy("query_id").orderBy(score, F.col("match_id").asc())
+    return (
+        local.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "match_id",
+            score_col,
+            F.col("rank").cast("bigint").alias("rank"),
+        )
+    )
+
+
+class _TopkScorer(NamedTuple):
+    """One metric of :func:`_broadcast_topk`, built once per task from the
+    broadcast query matrix.
+
+    - ``load(stacked)``: a batch's stacked vector column → corpus rows;
+    - ``score(rows, out)``: fills ``out`` (|Q|, len(rows)) with candidate
+      scores and returns the cut margin — the bound on how far a
+      candidate score may sit from the exact one;
+    - ``rescore(rows, q_idx, v_idx, scores)``: the exact, rounded values
+      emitted for the surviving (query, row) cells;
+    - ``dtype``: the candidate buffer's precision.
+    """
+
+    load: Callable[[np.ndarray], np.ndarray]
+    score: Callable[[np.ndarray, np.ndarray], float]
+    rescore: Callable[..., np.ndarray]
+    dtype: type = np.float32
+
+
+def _broadcast_topk(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    q_ids: np.ndarray,
+    qm: np.ndarray,
+    scorer: Callable[[np.ndarray], _TopkScorer],
+    k: int,
+    score_col: str,
+    descending: bool,
+) -> DataFrame:
+    """Exact top-k of every broadcast query over the corpus under the
+    scorer's metric, self-match excluded: the shared two-stage plan of
+    :func:`cosine_topk`, :func:`sq_l2_topk` and :func:`pq_topk`.
+
+    The small query side (``q_ids``, ``qm``) ships to every task; each
+    Arrow batch of the (null-filtered) corpus is scored per
+    ``TOPK_CHUNK_ROWS`` chunk by ``scorer`` and emits a SUPERSET of each
+    query's batch-local top-k by the final criterion; :func:`_rank_topk`
+    finishes over partitions×k-ish rows. The corpus never shuffles
+    (beyond the underfill spread). Output: (query_id, match_id,
+    ``score_col``, rank).
+    """
+    spark = corpus.sparkSession
+    if not len(q_ids):
+        return _empty_topk(spark, score_col)
+    bc = spark.sparkContext.broadcast((q_ids, qm))
+    sink = -np.inf if descending else np.inf
+
+    def _local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # Fully vectorized batch stage — no per-query Python loop: |Q|
+        # grows with the corpus (10% rule), so at the 100× lane
+        # (|Q|=20k) an O(n) mask + lexsort per query ran |Q|×chunks
+        # Python-level lexsorts per partition and dominated the stage
+        # (measured on cosine_topk). This stage only needs to emit a
+        # SUPERSET of each query's batch-local top-k by the FINAL
+        # criterion (rounded score, then id asc) — the global window
+        # downstream applies that exact rule — so it emits every
+        # candidate whose score reaches the k-th best per query (ties
+        # included; an arbitrary argpartition tie-cut could drop the
+        # smaller-id tie the exact rule keeps).
+        # Bandwidth discipline (the 100x-lane-found knee at |Q|=20k,
+        # N=200k): 32 concurrent workers each streaming a (|Q|, chunk)
+        # float64 matrix several times saturate host DRAM — the solo-
+        # fast paths (full-matrix round, argmax passes, per-row
+        # introselect over float64) all degraded 25x under concurrency.
+        # So the BLAS scorers run their candidate pass in FLOAT32 (half
+        # the traffic) into one reused buffer, the per-query threshold
+        # comes from a two-level BLOCK cut that reads the matrix once
+        # with plain vectorized maxes/mins, and only the ~k survivors
+        # per query are re-scored exactly in float64 and rounded.
+        # Exactness: for any j, the j-th best of a row's block extrema
+        # is no better than the row's j-th best element (the best j
+        # blocks contain j distinct elements at least that good), so
+        # cutting at that threshold widened by the scorer's margin
+        # keeps a superset of the exact rounded top-k incl. ties.
+        ids, qmat = bc.value
+        load, score, rescore, dtype = scorer(qmat)
+        buf = None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            vids_all = pdf[id_col].to_numpy(dtype=np.int64)
+            rows_all = load(np.stack(pdf[vec_col].to_numpy()))
+            for lo in range(0, len(vids_all), TOPK_CHUNK_ROWS):
+                vids = vids_all[lo:lo + TOPK_CHUNK_ROWS]
+                rows = rows_all[lo:lo + TOPK_CHUNK_ROWS]
+                n = len(vids)
+                if buf is None or buf.shape != (len(ids), n):
+                    buf = np.empty((len(ids), n), dtype=dtype)
+                margin = score(rows, buf)
+                # self-match exclusion, vectorized: locate each query id
+                # in this chunk's (unsorted) vid array via searchsorted
+                # on an argsort permutation, then sink its cells.
+                # left/right bounds cover EVERY occurrence of a
+                # duplicated id (dirty ingest), not just the first —
+                # a single-position sink would let the second copy of a
+                # self row survive as a perfect match.
+                order_v = np.argsort(vids)
+                sv = vids[order_v]
+                left = np.searchsorted(sv, ids, side="left")
+                cnt = np.searchsorted(sv, ids, side="right") - left
+                if cnt.any():
+                    hit_q = np.repeat(np.arange(len(ids)), cnt)
+                    starts = np.repeat(left, cnt)
+                    offs = (
+                        np.arange(int(cnt.sum()))
+                        - np.repeat(np.cumsum(cnt) - cnt, cnt)
+                    )
+                    buf[hit_q, order_v[starts + offs]] = sink
+                # & isfinite: a chunk where a duplicated query id leaves
+                # fewer than k finite entries yields an infinite
+                # threshold, and inf vs inf would re-admit the sunk self
+                # rows — an exact-dup self copy would then rank #1,
+                # violating the self-excluded contract.
+                mask = np.isfinite(buf)
+                if n > k:
+                    nb = n // TOPK_BLOCK
+                    if n % TOPK_BLOCK == 0 and nb > k:
+                        blocks = buf.reshape(len(ids), nb, TOPK_BLOCK)
+                        ends = (
+                            blocks.max(axis=2) if descending
+                            else blocks.min(axis=2)
+                        )
+                    else:
+                        # ragged tail chunk: direct per-row introselect
+                        # on the small remainder
+                        ends, nb = buf, n
+                    kth = nb - k if descending else k - 1
+                    thr = np.partition(ends, kth, axis=1)[:, kth]
+                    if descending:
+                        mask &= buf >= (thr - margin)[:, None]
+                    else:
+                        mask &= buf <= (thr + margin)[:, None]
+                q_idx, v_idx = np.nonzero(mask)
+                yield pd.DataFrame(
+                    {
+                        "query_id": ids[q_idx],
+                        "match_id": vids[v_idx],
+                        score_col: rescore(rows, q_idx, v_idx, buf),
+                    }
+                )
+
+    local = _spread_to_cores(
+        corpus.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col),
+        spark.sparkContext.defaultParallelism,
+    ).mapInPandas(
+        _local_topk, schema=f"query_id long, match_id long, {score_col} double"
+    )
+    return _rank_topk(local, score_col, k, descending)
+
+
 def cosine_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -160,59 +356,9 @@ def cosine_topk(
     stages compose exactly); a cheap global window over partitions×k rows
     finishes. The corpus never shuffles.
     """
-    spark = vectors.sparkSession
-    # null vectors carry no geometry: dropped on BOTH sides (aggregate-
-    # style null semantics — a dirty ingest must not crash the plan)
-    vectors = vectors.filter(F.col(vec_col).isNotNull())
-    qrows = _collect_bounded(
-        queries.filter(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        "the query side of cosine_topk",
-        max_driver_rows,
-    )
-    if not qrows:
-        # empty-in → empty-out: a filter that matches no queries must not
-        # kill the pipeline (np.stack/argmax on empty raises AxisError)
-        return spark.createDataFrame(
-            [], "query_id bigint, match_id bigint, sim double, rank bigint"
-        )
-    q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
-    qm = np.array([r.qv for r in qrows], dtype=np.float64)
-    qn = qm / _safe_norms(qm)
-    bc = spark.sparkContext.broadcast((q_ids, qn))
 
-    def _local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Fully vectorized batch stage — no per-query Python loop. The
-        # previous implementation looped `for qid in ids` with an O(n)
-        # mask + lexsort per query: fine at |Q|=200, but |Q| grows with
-        # the corpus (10% rule), so at the 100× lane (|Q|=20k) the loop
-        # ran |Q|×chunks Python-level lexsorts per partition and
-        # dominated the stage. This stage only needs to emit a SUPERSET
-        # of each query's batch-local top-k by the FINAL criterion
-        # (rounded sim desc, id asc) — the global window downstream
-        # applies that exact rule — so it emits every candidate whose
-        # sim reaches the k-th largest per query (ties included; an
-        # arbitrary argpartition tie-cut could drop the smaller-id tie
-        # the exact rule keeps).
-        # Bandwidth discipline (the 100x-lane-found knee at |Q|=20k,
-        # N=200k): 32 concurrent workers each streaming a (|Q|, chunk)
-        # float64 matrix several times saturate host DRAM — the solo-
-        # fast paths (full-matrix round, argmax passes, per-row
-        # introselect over float64) all degraded 25x under concurrency.
-        # So the candidate pass runs in FLOAT32 (half the traffic) into
-        # one reused buffer, the per-query threshold comes from a
-        # two-level BLOCK-MAX cut that reads the matrix once with plain
-        # vectorized maxes, and only the ~k survivors per query are
-        # re-scored exactly in float64 and rounded. Exactness: for any
-        # j, the j-th largest of a row's block maxima is <= the row's
-        # j-th largest element (the top-j blocks contain j distinct
-        # elements >= it), so thresholding at (block-kth - 1e-3) keeps
-        # a superset of the float64 rounded top-k incl. 6-dp ties
-        # (float32 dot error at d<=4096 unit vectors is <~1e-5, orders
-        # under the margin); the downstream window applies the exact
-        # (rounded sim desc, id asc) rule to the superset.
-        ids, qmat = bc.value
+    def _scorer(qm: np.ndarray) -> _TopkScorer:
+        qmat = qm / _safe_norms(qm)
         qmat32 = qmat.astype(np.float32)
         # Unit vectors bound every |sim| by 1, so each float32 dot carries
         # deterministic error ≤ ~2·γ_d ≈ 2·d·eps32. The cut compares TWO
@@ -221,92 +367,30 @@ def cosine_topk(
         # guarantee, not a statistical one; it scales with d past the 1e-3
         # floor so very wide embeddings (d ≳ 4k) can't outgrow a constant.
         margin = max(1e-3, 4.0 * qmat.shape[1] * float(np.finfo(np.float32).eps))
-        sims_buf = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vids_all = pdf[id_col].to_numpy(dtype=np.int64)
-            vm_all = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vm_all /= _safe_norms(vm_all)
-            vm32_all = vm_all.astype(np.float32)
-            for lo in range(0, len(vids_all), TOPK_CHUNK_ROWS):
-                vids = vids_all[lo:lo + TOPK_CHUNK_ROWS]
-                vm32 = vm32_all[lo:lo + TOPK_CHUNK_ROWS]
-                n = len(vids)
-                if sims_buf is None or sims_buf.shape != (len(ids), n):
-                    sims_buf = np.empty((len(ids), n), dtype=np.float32)
-                sims = np.matmul(qmat32, vm32.T, out=sims_buf)
-                # self-match exclusion, vectorized: locate each query id
-                # in this chunk's (unsorted) vid array via searchsorted
-                # on an argsort permutation, then sink its cells to
-                # -inf. left/right bounds cover EVERY occurrence of a
-                # duplicated id (dirty ingest), not just the first —
-                # a single-position sink would let the second copy of a
-                # self row survive as sim=1.0.
-                order_v = np.argsort(vids)
-                sv = vids[order_v]
-                left = np.searchsorted(sv, ids, side="left")
-                right = np.searchsorted(sv, ids, side="right")
-                cnt = right - left
-                if cnt.any():
-                    hit_q = np.repeat(np.arange(len(ids)), cnt)
-                    total = int(cnt.sum())
-                    starts = np.repeat(left, cnt)
-                    offs = (
-                        np.arange(total)
-                        - np.repeat(np.cumsum(cnt) - cnt, cnt)
-                    )
-                    sims[hit_q, order_v[starts + offs]] = -np.inf
-                if n > k:
-                    nb = n // TOPK_BLOCK
-                    if n % TOPK_BLOCK == 0 and nb > k:
-                        bm = sims.reshape(
-                            len(ids), nb, TOPK_BLOCK
-                        ).max(axis=2)
-                        thr = np.partition(bm, nb - k, axis=1)[:, nb - k]
-                    else:
-                        # ragged tail chunk: direct per-row introselect
-                        # on the small remainder
-                        thr = np.partition(sims, n - k, axis=1)[:, n - k]
-                    # & isfinite: mirrored guard to sq_l2_topk — a chunk
-                    # where a duplicated query id leaves fewer than k
-                    # finite entries yields thr=-inf, and -inf >= -inf
-                    # would re-admit the sunk self rows.
-                    mask = (
-                        sims >= (thr - margin)[:, None]
-                    ) & np.isfinite(sims)
-                else:
-                    mask = np.isfinite(sims)
-                q_idx, v_idx = np.nonzero(mask)
-                # exact float64 re-score of the ~k survivors per query —
-                # the emitted value is identical to the all-float64 path
-                vals = np.round(
-                    np.einsum(
-                        "ij,ij->i",
-                        qmat[q_idx],
-                        vm_all[lo:lo + TOPK_CHUNK_ROWS][v_idx],
-                    ),
-                    6,
-                )
-                yield pd.DataFrame(
-                    {
-                        "query_id": ids[q_idx],
-                        "match_id": vids[v_idx],
-                        "sim": vals,
-                    }
-                )
 
-    par = spark.sparkContext.defaultParallelism
-    local = _spread_to_cores(
-        vectors.select(id_col, vec_col), par
-    ).mapInPandas(_local_topk, schema=_TOPK_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("match_id").asc()
+        def load(stacked: np.ndarray) -> np.ndarray:
+            vm = stacked.astype(np.float64)
+            vm /= _safe_norms(vm)
+            return vm
+
+        def score(vm: np.ndarray, out: np.ndarray) -> float:
+            np.matmul(qmat32, vm.astype(np.float32).T, out=out)
+            return margin
+
+        def rescore(vm, q_idx, v_idx, _sims) -> np.ndarray:
+            # exact float64 re-score of the ~k survivors per query — the
+            # emitted value is identical to the all-float64 path
+            return np.round(np.einsum("ij,ij->i", qmat[q_idx], vm[v_idx]), 6)
+
+        return _TopkScorer(load, score, rescore)
+
+    q_ids, qm = _query_matrix(
+        queries, id_col, vec_col, "the query side of cosine_topk",
+        max_driver_rows,
     )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "match_id", "sim", F.col("rank").cast("bigint").alias("rank"))
+    return _broadcast_topk(
+        vectors, id_col, vec_col, q_ids, qm, _scorer, k, "sim",
+        descending=True,
     )
 
 
@@ -335,26 +419,9 @@ def sq_l2_topk(
     ≲1e-3, far under the 0.01 margin), and the downstream window applies
     the exact rule, so results are identical to the all-float64 path.
     """
-    spark = vectors.sparkSession
-    vectors = vectors.filter(F.col(vec_col).isNotNull())
-    qrows = _collect_bounded(
-        queries.filter(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        "the query side of sq_l2_topk",
-        max_driver_rows,
-    )
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id bigint, match_id bigint, d2 double, rank bigint"
-        )
-    q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
-    qm = np.array([r.qv for r in qrows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((q_ids, qm))
 
-    def _local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, qmat = bc.value
-        qmat32 = qmat.astype(np.float32)
+    def _scorer(qm: np.ndarray) -> _TopkScorer:
+        qmat32 = qm.astype(np.float32)
         q2_32 = np.einsum("ij,ij->i", qmat32, qmat32)
         # The float32 cancellation error of the ‖v‖²+‖q‖²−2·v·q expansion
         # scales with the squared norms (γ_d·magnitude), so a FIXED
@@ -366,95 +433,31 @@ def sq_l2_topk(
         # 4·d·eps32·(max‖q‖² + max per-chunk ‖v‖²) — a deterministic
         # superset bound. The 1e-2 floor keeps the benign-case candidate
         # count unchanged.
-        eps32 = float(np.finfo(np.float32).eps)
-        dim = qmat.shape[1]
+        err = 4.0 * qm.shape[1] * float(np.finfo(np.float32).eps)
         q2max = float(q2_32.max())
-        d2_buf = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vids_all = pdf[id_col].to_numpy(dtype=np.int64)
-            vm_all = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vm32_all = vm_all.astype(np.float32)
-            for lo in range(0, len(vids_all), TOPK_CHUNK_ROWS):
-                vids = vids_all[lo:lo + TOPK_CHUNK_ROWS]
-                vm32 = vm32_all[lo:lo + TOPK_CHUNK_ROWS]
-                n = len(vids)
-                if d2_buf is None or d2_buf.shape != (len(ids), n):
-                    d2_buf = np.empty((len(ids), n), dtype=np.float32)
-                np.matmul(qmat32, vm32.T, out=d2_buf)
-                d2_buf *= -2.0
-                d2_buf += q2_32[:, None]
-                v2_32 = np.einsum("ij,ij->i", vm32, vm32)
-                d2_buf += v2_32[None, :]
-                # self-exclusion: sink EVERY occurrence of a query id in
-                # this chunk (dup-id-safe — same discipline as
-                # cosine_topk)
-                order_v = np.argsort(vids)
-                sv = vids[order_v]
-                left = np.searchsorted(sv, ids, side="left")
-                right = np.searchsorted(sv, ids, side="right")
-                cnt = right - left
-                if cnt.any():
-                    hit_q = np.repeat(np.arange(len(ids)), cnt)
-                    total = int(cnt.sum())
-                    starts = np.repeat(left, cnt)
-                    offs = (
-                        np.arange(total)
-                        - np.repeat(np.cumsum(cnt) - cnt, cnt)
-                    )
-                    d2_buf[hit_q, order_v[starts + offs]] = np.inf
-                if n > k:
-                    thr = np.partition(d2_buf, k - 1, axis=1)[:, k - 1]
-                    margin = max(
-                        1e-2,
-                        4.0 * dim * eps32 * (q2max + float(v2_32.max())),
-                    )
-                    # & isfinite: when a duplicated query id leaves fewer
-                    # than k finite entries in a chunk, thr itself is
-                    # +inf and inf <= inf+margin would re-admit the sunk
-                    # self rows — they'd re-score exactly to d2=0 and an
-                    # exact-dup self copy would rank #1, violating the
-                    # self-excluded contract.
-                    mask = (
-                        d2_buf <= (thr + margin)[:, None]
-                    ) & np.isfinite(d2_buf)
-                else:
-                    mask = np.isfinite(d2_buf)
-                q_idx, v_idx = np.nonzero(mask)
-                diff = (
-                    qmat[q_idx]
-                    - vm_all[lo:lo + TOPK_CHUNK_ROWS][v_idx]
-                )
-                vals = np.round(
-                    np.einsum("ij,ij->i", diff, diff), round_digits
-                )
-                yield pd.DataFrame(
-                    {
-                        "query_id": ids[q_idx],
-                        "match_id": vids[v_idx],
-                        "d2": vals,
-                    }
-                )
 
-    par = spark.sparkContext.defaultParallelism
-    local = _spread_to_cores(
-        vectors.select(id_col, vec_col), par
-    ).mapInPandas(
-        _local_topk, schema="query_id long, match_id long, d2 double"
+        def score(vm: np.ndarray, out: np.ndarray) -> float:
+            vm32 = vm.astype(np.float32)
+            np.matmul(qmat32, vm32.T, out=out)
+            out *= -2.0
+            out += q2_32[:, None]
+            v2_32 = np.einsum("ij,ij->i", vm32, vm32)
+            out += v2_32[None, :]
+            return max(1e-2, err * (q2max + float(v2_32.max())))
+
+        def rescore(vm, q_idx, v_idx, _d2) -> np.ndarray:
+            diff = qm[q_idx] - vm[v_idx]
+            return np.round(np.einsum("ij,ij->i", diff, diff), round_digits)
+
+        return _TopkScorer(lambda s: s.astype(np.float64), score, rescore)
+
+    q_ids, qm = _query_matrix(
+        queries, id_col, vec_col, "the query side of sq_l2_topk",
+        max_driver_rows,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("match_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "match_id",
-            "d2",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
+    return _broadcast_topk(
+        vectors, id_col, vec_col, q_ids, qm, _scorer, k, "d2",
+        descending=False,
     )
 
 
@@ -744,16 +747,7 @@ def ivf_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("match_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "match_id", "sim", F.col("rank").cast("bigint")
-        )
-    )
+    return _rank_topk(local, "sim", k, descending=True)
 
 
 # Mean-path selection for the Lloyd-round cell mean: the column path
@@ -1119,7 +1113,14 @@ def ivf_train_step(
         # driver-side state (see ivf_assign): no collect job for the
         # assignment, and the keep-previous join side becomes a ONE-slice
         # local frame — a k-slice default would cost a task per core in
-        # the broadcast-build job for k tiny rows
+        # the broadcast-build job for k tiny rows. None vectors are
+        # dropped first, as _centroid_rows does for the assignment.
+        centroids = [(c, v) for c, v in centroids if v is not None]
+        if not centroids:
+            raise ValueError(
+                "ivf_train_step needs at least one non-None centroid "
+                "vector; the centroid sequence is empty or all-None"
+            )
         if dim is None:
             dim = len(centroids[0][1])
         from xena_gdc_etl_spark.operators.partitioning import local_rows_df
@@ -1496,6 +1497,17 @@ def pq_encode(
     )
 
 
+def _adc_tables(qm: np.ndarray, codebooks: "list[np.ndarray]") -> np.ndarray:
+    """ADC lookup tables, (n_query, m, k_codebook): the squared distance
+    of each query's j-th subvector to every j-th subspace centroid."""
+    sub = codebooks[0].shape[1]
+    tables = []
+    for j, book in enumerate(codebooks):
+        diff = qm[:, None, j * sub : (j + 1) * sub] - book[None, :, :]
+        tables.append((diff**2).sum(axis=2))
+    return np.stack(tables, axis=1)
+
+
 def pq_topk(
     codes: DataFrame,
     queries: DataFrame,
@@ -1527,88 +1539,41 @@ def pq_topk(
             f"codes side lacks column(s) {missing}; have {codes.columns} — "
             "pass codes_id_col/codes_col to match your pq_encode output"
         )
-    spark = codes.sparkSession
-    m = len(codebooks)
-    qrows = _collect_bounded(
-        queries.filter(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        "the query side of pq_topk",
+
+    def _scorer(qm: np.ndarray) -> _TopkScorer:
+        tabs = _adc_tables(qm, codebooks)
+        q_all = np.arange(len(tabs))[:, None, None]
+        subspaces = np.arange(len(codebooks))[None, None, :]
+
+        def score(cm: np.ndarray, out: np.ndarray) -> float:
+            # dist[q, v] = sum_j tabs[q, j, cm[v, j]], gathered as
+            # C-contiguous (queries, rows, m) blocks of ~1M elements.
+            # numpy then sums each m-term row in its contiguous-row order
+            # (pairwise from 8 terms on, not plain left to right) — the
+            # order of ivf_pq_topk's per-row gather, so the two stay
+            # bit-identical at every m.
+            step = max(1, (1 << 20) // cm.size)
+            for lo in range(0, len(tabs), step):
+                tabs[q_all[lo:lo + step], subspaces, cm[None]].sum(
+                    axis=2, out=out[lo:lo + step]
+                )
+            np.round(out, round_digits, out=out)
+            return 0.0  # the candidate scores ARE the exact values
+
+        return _TopkScorer(
+            lambda s: s.astype(np.int64),
+            score,
+            lambda cm, q_idx, v_idx, d: d[q_idx, v_idx],
+            np.float64,
+        )
+
+    q_ids, qm = _query_matrix(
+        queries, id_col, vec_col, "the query side of pq_topk",
         DEFAULT_MAX_BROADCAST_ROWS,
     )
-    if not qrows:
-        # empty-in → empty-out (see cosine_topk): no queries, no rows
-        return spark.createDataFrame(
-            [],
-            "query_id bigint, match_id bigint, adc_dist double, rank bigint",
-        )
-    q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
-    qm = np.array([r.qv for r in qrows], dtype=np.float64)
-    sub = codebooks[0].shape[1]
-    # (n_query, m, k_codebook) lookup tables, built once on the driver
-    tables = np.stack(
-        [
-            np.stack(
-                [
-                    (
-                        (qm[:, j * sub : (j + 1) * sub][:, None, :]
-                         - codebooks[j][None, :, :])
-                        ** 2
-                    ).sum(axis=2)
-                    for j in range(m)
-                ],
-                axis=1,
-            )
-        ]
-    )[0]
-    bc = spark.sparkContext.broadcast((q_ids, tables))
-
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("match_id", LongType()),
-            StructField("adc_dist", DoubleType()),
-        ]
-    )
-
-    def _local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, tabs = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vids = pdf[codes_id_col].to_numpy(dtype=np.int64)
-            cm = np.stack(pdf[codes_col].to_numpy()).astype(np.int64)
-            out_q, out_m, out_d = [], [], []
-            for qi, qid in enumerate(ids):
-                # dist[v] = sum_j tabs[qi, j, cm[v, j]]
-                d = np.round(
-                    tabs[qi, np.arange(m)[None, :], cm].sum(axis=1),
-                    round_digits,
-                )
-                mask = vids != qid
-                cand_ids = vids[mask]
-                cand = d[mask]
-                order = np.lexsort((cand_ids, cand))[:k]
-                out_q.extend([qid] * len(order))
-                out_m.extend(cand_ids[order])
-                out_d.extend(cand[order])
-            yield pd.DataFrame(
-                {"query_id": out_q, "match_id": out_m, "adc_dist": out_d}
-            )
-
-    local = codes.mapInPandas(_local_topk, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("match_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "match_id",
-            "adc_dist",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
+    return _broadcast_topk(
+        codes, codes_id_col, codes_col, q_ids, qm, _scorer, k, "adc_dist",
+        descending=False,
     )
 
 
@@ -1853,21 +1818,12 @@ def ivf_pq_topk(
     cn = cm / _safe_norms(cm)
     # fused single-scan inverted file (assignment + codes in one pass)
     inverted = ivf_pq_encode(vectors, c_ids, cn, books, id_col, vec_col)
-    qrows = _collect_bounded(
-        queries.filter(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        "the query side of ivf_pq_topk",
+    q_ids, qm = _query_matrix(
+        queries, id_col, vec_col, "the query side of ivf_pq_topk",
         DEFAULT_MAX_BROADCAST_ROWS,
     )
-    if not qrows:
-        # empty-in → empty-out (see cosine_topk)
-        return queries.sparkSession.createDataFrame(
-            [],
-            "query_id bigint, match_id bigint, adc_dist double, rank bigint",
-        )
-    q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
-    qm = np.array([r.qv for r in qrows], dtype=np.float64)
+    if not len(q_ids):
+        return _empty_topk(spark, "adc_dist")
     qn = qm / _safe_norms(qm)
     sims = np.round(qn @ cn.T, 6)
     order = np.lexsort(
@@ -1887,20 +1843,7 @@ def ivf_pq_topk(
         "query_id long, centroid_id long",
     )
 
-    # ADC tables: (n_query, m, k_codebook) squared subdistances
-    sub = books[0].shape[1]
-    tables = np.stack(
-        [
-            np.stack(
-                [
-                    ((qm[:, j * sub : (j + 1) * sub][:, None, :]
-                      - books[j][None, :, :]) ** 2).sum(axis=2)
-                    for j in range(m)
-                ],
-                axis=1,
-            )
-        ]
-    )[0]
+    tables = _adc_tables(qm, books)
     qidx = {int(q): i for i, q in enumerate(q_ids)}
     bc = spark.sparkContext.broadcast((qidx, tables))
 
@@ -1941,19 +1884,7 @@ def ivf_pq_topk(
             )
 
     local = cand.mapInPandas(_local_topk, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("match_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "match_id",
-            "adc_dist",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _rank_topk(local, "adc_dist", k, descending=False)
 
 
 def cell_label_purity(
