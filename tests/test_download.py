@@ -362,25 +362,80 @@ def test_stale_part_sweep_is_age_gated(spark, tmp_path):
     """After a successful landing, orphaned .part files for that target
     are swept ONLY when old enough to be provably abandoned — a fresh
     .part (a concurrent live attempt mid-write) must survive, or its
-    os.replace would fail and record a spurious error row."""
+    os.replace would fail and record a spurious error row. Two targets
+    land in one task, so one sweep handles both."""
     def _fake_fetcher(url: str):
-        return "zz.tsv", iter([b"payload"])
+        uuid = url.rsplit("/", 1)[1]
+        return f"{uuid}.tsv", iter([b"payload"])
+
+    # two uuids that hash to the same download task
+    par = spark.sparkContext.defaultParallelism
+    by_task = {}
+    for r in (
+        spark.createDataFrame([(f"u{i}",) for i in range(4 * par)], ["uuid"])
+        .repartition(par, "uuid")
+        .select("uuid", F.spark_partition_id().alias("task"))
+        .collect()
+    ):
+        by_task.setdefault(r.task, []).append(r.uuid)
+    uuids = next(us for us in by_task.values() if len(us) >= 2)[:2]
 
     land = str(tmp_path / "land")
     os.makedirs(land)
-    target = os.path.join(land, "zz.tsv")
-    stale = target + ".part.999.1"
-    fresh = target + ".part.999.2"
-    for p in (stale, fresh):
+    old = time.time() - 7200
+    stale, fresh = [], []
+    for uuid in uuids:
+        target = os.path.join(land, f"{uuid}.tsv")
+        stale.append(target + ".part.999.1")
+        fresh.append(target + ".part.999.2")
+    # a landed name that merely contains ".part." is not a tmp of the
+    # target it starts with
+    lookalike = os.path.join(land, f"{uuids[0]}.tsv.part.gz")
+    for p in (*stale, *fresh, lookalike):
         with open(p, "wb") as fh:
             fh.write(b"partial")
-    old = time.time() - 7200
-    os.utime(stale, (old, old))  # abandoned two hours ago
+    for p in (*stale, lookalike):
+        os.utime(p, (old, old))  # abandoned two hours ago
 
     status = download_files(
-        spark.createDataFrame([("zz",)], ["uuid"]), land,
+        spark.createDataFrame([(u,) for u in uuids], ["uuid"]), land,
         fetcher=_fake_fetcher,
     ).collect()
-    assert status[0].error is None
-    assert not os.path.exists(stale), "abandoned orphan must be swept"
-    assert os.path.exists(fresh), "a live writer's fresh .part must survive"
+    assert [r.error for r in status] == [None, None]
+    for p in stale:
+        assert not os.path.exists(p), "abandoned orphan must be swept"
+    for p in fresh:
+        assert os.path.exists(p), "a live writer's fresh .part must survive"
+    assert os.path.exists(lookalike)
+
+
+def test_download_runs_one_task_per_core(spark, tmp_path):
+    """The download stage fans out to ``defaultParallelism`` Python tasks:
+    each Python task pays a fixed start-up wait, so more tasks than cores
+    only adds it."""
+    def _fake_fetcher(url: str):
+        uuid = url.rsplit("/", 1)[1]
+        return f"{uuid}.tsv", iter([b"x"])
+
+    sc = spark.sparkContext
+    group = f"download-fanout-{tmp_path.name}"
+    sc.setJobGroup(group, "download fan-out")
+    try:
+        download_files(
+            spark.createDataFrame([(f"f{i}",) for i in range(40)], ["uuid"]),
+            str(tmp_path / "land"),
+            fetcher=_fake_fetcher,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    stage_ids = sorted(
+        sid
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    )
+    # the last stage runs the mapInPandas download
+    assert tracker.getStageInfo(stage_ids[-1]).numTasks == (
+        sc.defaultParallelism
+    )

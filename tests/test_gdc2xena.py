@@ -197,3 +197,84 @@ def test_etl_download_transform_offline_end_to_end(spark, tmp_path):
     # star_counts recipe: log2(x+1)
     assert math.isclose(vals[("TCGA-ZZ-0001-01", "ENSG2")], math.log2(71), rel_tol=1e-9)
     assert math.isclose(vals[("TCGA-ZZ-0002-01", "ENSG1")], math.log2(31), rel_tol=1e-9)
+
+
+def _land(spark, land: str, uuids: list[str], fail=(), bare=(), gz=()):
+    """Land one 2-gene TSV per uuid through ``download_files``; uuids in
+    ``fail`` error, uuids in ``bare`` land without an extension and uuids
+    in ``gz`` land gzip-compressed."""
+    from xena_gdc_etl_spark.sources.download import download_files
+
+    def fetch(url: str, _fail=tuple(fail), _bare=tuple(bare), _gz=tuple(gz)):
+        import gzip
+
+        uuid = url.rsplit("/", 1)[1]
+        if uuid in _fail:
+            raise OSError("gone")
+        body = f"gene_id\tunstranded\nENSG1\t1\nENSG2\t{len(uuid)}\n".encode()
+        if uuid in _gz:
+            return f"{uuid}.tsv.gz", iter([gzip.compress(body)])
+        return ("" if uuid in _bare else f"{uuid}.tsv"), iter([body])
+
+    manifest = spark.createDataFrame(
+        [(u, f"S-{u}") for u in uuids], ["uuid", "sample"]
+    )
+    return manifest, download_files(manifest, land, fetcher=fetch)
+
+
+def test_read_landed_matrix_reads_exactly_the_landed_files(spark, tmp_path):
+    """Stray files in the landing directory contribute no rows: an orphaned
+    .part tmp, a stale file of a uuid whose download failed this time, an
+    unrelated file and a TSV in a subdirectory. A bare-uuid landing (no
+    extension) still parses, and so does a gzipped one, which is also the
+    file the schema's header is read from."""
+    from xena_gdc_etl_spark.gdc2xena import read_landed_matrix
+
+    land = str(tmp_path / "landed")
+    manifest, status = _land(
+        spark, land, ["ua", "ub", "uc", "ud"], fail=("ud",), bare=("uc",),
+        gz=("ua",),
+    )
+    assert os.path.exists(os.path.join(land, "ua.tsv.gz"))
+    assert os.path.exists(os.path.join(land, "uc"))
+    stray = "gene_id\tunstranded\nSTRAY\t9\n"
+    os.makedirs(os.path.join(land, "nested"))
+    for name in ("ub.tsv.part.1.2", "ud.tsv", "notes.txt", "nested/ub.tsv"):
+        with open(os.path.join(land, name), "w") as fh:
+            fh.write(stray)
+
+    got = read_landed_matrix(
+        spark, manifest, status, "gene_id", "unstranded"
+    ).collect()
+    assert sorted((r.sample, r.feature, r.value) for r in got) == [
+        (f"S-{u}", gene, value)
+        for u in ("ua", "ub", "uc")
+        for gene, value in (("ENSG1", 1.0), ("ENSG2", 2.0))
+    ]
+
+
+def test_read_landed_matrix_fires_no_listing_jobs(spark, tmp_path):
+    """Above Spark's 32-path parallel-listing threshold, explicit file paths
+    made every read run listing jobs; the directory read with a given
+    schema runs at most the status collect."""
+    from xena_gdc_etl_spark.gdc2xena import read_landed_matrix
+
+    uuids = [f"u{i:02d}" for i in range(36)]
+    manifest, status = _land(spark, str(tmp_path / "landed"), uuids)
+    sc = spark.sparkContext
+    group = f"read-landed-{tmp_path.name}"
+    sc.setJobGroup(group, "read_landed_matrix")
+    try:
+        long_raw = read_landed_matrix(
+            spark, manifest, status, "gene_id", "unstranded"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    job_ids = list(sc.statusTracker().getJobIdsForGroup(group))
+    store = sc._jsc.sc().statusStore()
+    descriptions = [store.job(j).description() for j in job_ids]
+    descriptions = [d.get() for d in descriptions if d.isDefined()]
+    assert len(job_ids) <= 2, descriptions
+    assert not [d for d in descriptions if d.startswith("Listing leaf files")]
+    assert long_raw.count() == 2 * len(uuids)

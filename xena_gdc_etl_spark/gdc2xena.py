@@ -18,6 +18,8 @@ reference's on-disk layout (``<root>/<project>/Raw_Data/...``).
 
 from __future__ import annotations
 
+import csv
+import gzip
 import json
 import logging
 import os
@@ -28,6 +30,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 # dtypes routed to each dataset kind (reference gdc2xena.py:86-92)
 PHENO_DTYPES = ("clinical", "biospecimen", "raw_phenotype", "GDC_phenotype")
@@ -198,6 +201,23 @@ def gdc2xena(
     return results
 
 
+def _tsv_header(path: str) -> list[str]:
+    """Column names of a landed TSV's first line, made safe the way Spark's
+    CSV header inference does it: an empty name becomes ``_c<i>`` and a
+    case-insensitive duplicate gets its index appended. ``.gz`` files are
+    read through gzip, as Spark's reader decompresses them."""
+    opener = gzip.open if path.endswith(".gz") else open
+    with opener(path, "rt", encoding="utf-8", newline="") as fh:
+        row = next(csv.reader(fh, delimiter="\t"), [])
+    lowered = [name.lower() for name in row]
+    return [
+        f"_c{i}" if not name
+        else f"{name}{i}" if lowered.count(name.lower()) > 1
+        else name
+        for i, name in enumerate(row)
+    ]
+
+
 def read_landed_matrix(
     spark: SparkSession,
     manifest: DataFrame,
@@ -213,27 +233,46 @@ def read_landed_matrix(
     The reference merges per-sample TSVs driver-side one file at a time
     (xena_dataset.py ``GDCOmicset.transform`` read-and-merge loop); here
     the landed files are one distributed CSV scan — every file is a scan
-    split, so parse parallelism is the cluster, not a Python loop. The
-    file→sample mapping joins through the manifest (uuid → sample) on the
-    uuid embedded in the landed filename (``target_path`` names files
+    split, so parse parallelism is the cluster, not a Python loop.
+
+    - The scan reads the landed files' parent directories, not each file
+      (``download_files`` lands into one). Spark lists one directory on
+      the driver; more than 32 explicit paths would run a parallel
+      listing job on every read.
+    - The schema is the header of the first non-empty landed file (all
+      columns strings), so no job infers it over the files.
+    - A ``_metadata.file_name`` filter keeps exactly the status's landed
+      files. Spark applies it while listing, so failed downloads' stale
+      files, orphaned ``.part`` tmps and unrelated files are pruned before
+      the scan, and no job runs for it. Files in subdirectories are not
+      read.
+
+    The file→sample mapping joins through the manifest (uuid → sample) on
+    the uuid embedded in the landed filename (``target_path`` names files
     ``<uuid>.<ext>``); the manifest is tiny and broadcasts.
     """
     paths = [r.path for r in status.select("path").collect() if r.path]
     if not paths:
         raise ValueError("no successfully downloaded files to parse")
+    header = next(filter(None, map(_tsv_header, sorted(paths))), [])
     raw = (
-        spark.read.options(sep="\t", header=True, inferSchema=False)
-        .csv(paths)
-        .withColumn(
-            "__uuid",
-            # the extension is OPTIONAL: a download with no
-            # Content-Disposition filename lands as the bare uuid, and a
-            # dot-requiring pattern would extract '' and the manifest
-            # join would silently drop every row of that file
-            F.regexp_extract(
-                F.input_file_name(), r"([^/.]+)(?:\.[^/]*)?$", 1
-            ),
+        spark.read.schema(
+            StructType([StructField(name, StringType()) for name in header])
         )
+        .options(sep="\t", header=True)
+        .csv(sorted({os.path.dirname(p) for p in paths}))
+    )
+    raw = raw.filter(
+        raw.metadataColumn("_metadata")
+        .getField("file_name")
+        .isin([os.path.basename(p) for p in paths])
+    ).withColumn(
+        "__uuid",
+        # the extension is OPTIONAL: a download with no
+        # Content-Disposition filename lands as the bare uuid, and a
+        # dot-requiring pattern would extract '' and the manifest
+        # join would silently drop every row of that file
+        F.regexp_extract(F.input_file_name(), r"([^/.]+)(?:\.[^/]*)?$", 1),
     )
     uuid_to_sample = manifest.select(
         F.col(uuid_col).alias("__uuid"), F.col(sample_col).alias("sample")
@@ -276,9 +315,11 @@ def etl_download_transform(
         root_dir=root_dir,
         gdc_release=gdc_release,
     )
+    # already an eager local checkpoint: the failure check and the path
+    # list read it without re-running the downloads
     status = download_files(
         manifest, download_dir, md5_col=md5_col, fetcher=fetcher
-    ).persist()  # consumed twice: failure check + path list
+    )
     failed = status.filter(F.col("error").isNotNull()).count()
     if failed:
         print(f"{failed} download(s) failed; continuing with the rest.")
@@ -286,5 +327,4 @@ def etl_download_transform(
         spark, manifest, status, feature_col, value_col
     )
     out = ds.export(ds.transform(long_raw))
-    status.unpersist()
     return out, status

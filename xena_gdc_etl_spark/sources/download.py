@@ -20,9 +20,9 @@ behind an import-try.
 
 from __future__ import annotations
 
-import glob
 import hashlib
 import os
+import re
 import time
 from collections.abc import Callable, Iterator
 
@@ -44,6 +44,8 @@ from xena_gdc_etl_spark.sources.gdc_api import data_url
 # chunks and keeps its mtime fresh. One hour is ~3 orders of magnitude
 # above any per-chunk gap a live HTTP stream produces.
 _STALE_PART_SECONDS = 3600
+# A writer's tmp name, ``<target>.part.<pid>.<thread id>``.
+_PART_NAME = re.compile(r"(.+)\.part\.\d+\.\d+")
 
 # Extensions the reference recognizes (gdc.py:27 _SUPPORTED_FILE_TYPES).
 SUPPORTED_FILE_TYPES = frozenset(
@@ -112,6 +114,38 @@ def _unlink_quiet(path: str | None) -> None:
         return
     try:
         os.unlink(path)
+    except OSError:
+        pass
+
+
+def _sweep_stale_parts(download_dir: str, landed: set[str]) -> None:
+    """Remove the abandoned ``<target>.part.<pid>.<tid>`` files of the
+    ``landed`` target names, with one scan of ``download_dir``.
+
+    A zombie or speculative attempt killed mid-write never reaches its own
+    unlink handler, so its orphans are swept once a complete copy of the
+    target has landed. AGE-GATED: a concurrent LIVE attempt for the same
+    uuid (the very scenario the distinct tmp names exist for) also has a
+    .part here, and unlinking it mid-write would make ITS os.replace raise
+    and record a spurious error row for a file that landed. A live writer
+    keeps its tmp's mtime fresh; only files idle for
+    >= ``_STALE_PART_SECONDS`` are provably abandoned. Never raises.
+    """
+    if not landed:
+        return
+    now = time.time()
+    try:
+        with os.scandir(download_dir) as entries:
+            for entry in entries:
+                tmp = _PART_NAME.fullmatch(entry.name)
+                if tmp is None or tmp[1] not in landed:
+                    continue
+                try:
+                    idle = now - entry.stat().st_mtime
+                except OSError:
+                    continue  # raced away already
+                if idle >= _STALE_PART_SECONDS:
+                    _unlink_quiet(entry.path)
     except OSError:
         pass
 
@@ -209,13 +243,16 @@ def download_files(
     uuid_col: str = "uuid",
     md5_col: str | None = None,
     fetcher: Fetcher | None = None,
-    tasks_per_core: int = 4,
 ) -> DataFrame:
     """Download every UUID in ``manifest`` on executors; return a status
     DataFrame (uuid, path, n_bytes, md5, md5_ok, error).
 
-    - Fan-out: the manifest repartitions to ``cores × tasks_per_core`` so a
-      straggling server never idles the cluster; each row is independent.
+    - Fan-out: the manifest repartitions to ``defaultParallelism``, one
+      Python task per core. A Python task waits 0.15–0.44 s from worker
+      start to its function on a 4-core host, so four tasks per core made a
+      45-file download 2–3× slower than one per core. A straggling server is
+      Spark speculation's job: the distinct ``.part.<pid>.<tid>`` names and
+      the age-gated orphan sweep make a speculative attempt safe.
     - md5 is computed WHILE streaming to disk (no second read); when the
       manifest carries an expected digest (``md5_col``), ``md5_ok`` records
       the comparison — the reference's separate ``get_md5sum`` pass, fused.
@@ -230,12 +267,13 @@ def download_files(
         if md5_col
         else F.lit(None).cast("string").alias("__md5")
     )
-    par = spark.sparkContext.defaultParallelism * tasks_per_core
+    par = spark.sparkContext.defaultParallelism
 
     def _download(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         os.makedirs(download_dir, exist_ok=True)
         for pdf in batches:
             rows = []
+            landed = set()
             for uuid, expected in zip(pdf["uuid"], pdf["__md5"]):
                 tmp = None
                 try:
@@ -276,28 +314,7 @@ def download_files(
                             if attempt == 1:
                                 raise
                     os.replace(tmp, path)  # atomic: no truncated landings
-                    # a zombie/speculative attempt killed mid-write never
-                    # reaches its own unlink handler — sweep ITS orphans
-                    # for this target now that a complete copy landed.
-                    # AGE-GATED: a concurrent LIVE attempt for the same
-                    # uuid (the very scenario the distinct tmp names
-                    # exist for) also has a .part here, and unlinking it
-                    # mid-write would make ITS os.replace raise and
-                    # record a spurious error row for a file that
-                    # landed. A live writer's tmp has a fresh mtime (it
-                    # is actively appending); only files idle for
-                    # >= _STALE_PART_SECONDS are provably abandoned.
-                    now = time.time()
-                    for stale in glob.glob(glob.escape(path) + ".part.*"):
-                        try:
-                            old = (
-                                now - os.path.getmtime(stale)
-                                >= _STALE_PART_SECONDS
-                            )
-                        except OSError:
-                            continue  # raced away already
-                        if old:
-                            _unlink_quiet(stale)
+                    landed.add(os.path.basename(path))
                     digest = h.hexdigest()
                     ok = None if expected is None else digest == expected
                     rows.append((uuid, path, n, digest, ok, None))
@@ -307,6 +324,7 @@ def download_files(
                         (uuid, None, None, None, None,
                          f"{type(exc).__name__}: {exc}"[:500])
                     )
+            _sweep_stale_parts(download_dir, landed)
             yield pd.DataFrame(
                 rows,
                 columns=["uuid", "path", "n_bytes", "md5", "md5_ok", "error"],
