@@ -160,49 +160,26 @@ def main() -> None:
         ).alias("agg"),
         F.row_number().over(Window.partitionBy(F.col("id") % 8).orderBy("id")).alias("rn"),
     ).count()
-    # Materialize the shared minhash signature table up front and report it
-    # as its own line: four family queries start from it, and whichever ran
-    # first used to absorb the whole build cost — making per-query numbers
-    # incomparable across rounds (the attribution drift flagged in round 2).
-    from xena_gdc_etl_spark.workload import (
-        _shared_dup_pairs,
-        _shared_ivf_assigned,
-        _shared_lsh_pairs,
-        _shared_signatures,
-    )
+    # Materialize each shared tier up front and report its build as its
+    # own line: several queries start from each (minhash signatures and
+    # the LSH pairs read off them, the IVF assignment and its τ-pairs,
+    # the token-statistics frame, the pack layout), and whichever ran
+    # first used to absorb the whole build cost — making per-query
+    # numbers incomparable across rounds (the attribution drift flagged
+    # in round 2).
+    from xena_gdc_etl_spark import workload as wl
 
-    start = time.perf_counter()
-    _shared_signatures(spark, SF_DIR).count()
-    timings["shared_signatures_warm"] = round(time.perf_counter() - start, 4)
-    # ...and the LSH candidate-pair expansion three queries read off it.
-    start = time.perf_counter()
-    _shared_lsh_pairs(spark, SF_DIR).count()
-    timings["shared_lsh_pairs_warm"] = round(time.perf_counter() - start, 4)
-    # Same attribution story for the embedding family (ann_ivf,
-    # embed_cosine_dup, semantic_dedup): the shared IVF assignment is
-    # materialized once per session; report its build as its own line.
-    start = time.perf_counter()
-    _shared_ivf_assigned(spark, SF_DIR).count()
-    timings["shared_ivf_warm"] = round(time.perf_counter() - start, 4)
-    # ...and the τ-pair frame both embed_cosine_dup and semantic_dedup
-    # read (embed_cosine_dup IS this frame; semantic_dedup clusters it).
-    start = time.perf_counter()
-    _shared_dup_pairs(spark, SF_DIR).count()
-    timings["shared_pairs_warm"] = round(time.perf_counter() - start, 4)
-    # The (doc_id, tok, tf) token-statistics frame five unigram queries
-    # share, and the pack layout sequence_pack/pack_stats share — same
-    # attribution story as the signature/IVF caches above.
-    from xena_gdc_etl_spark.workload import (
-        _shared_doc_tf,
-        _shared_pack_layout,
-    )
-
-    start = time.perf_counter()
-    _shared_doc_tf(spark, SF_DIR).count()
-    timings["shared_tf_warm"] = round(time.perf_counter() - start, 4)
-    start = time.perf_counter()
-    _shared_pack_layout(spark, SF_DIR).count()
-    timings["shared_pack_warm"] = round(time.perf_counter() - start, 4)
+    for label, fn in (
+        ("shared_signatures_warm", wl._shared_signatures),
+        ("shared_lsh_pairs_warm", wl._shared_lsh_pairs),
+        ("shared_ivf_warm", wl._shared_ivf_assigned),
+        ("shared_pairs_warm", wl._shared_dup_pairs),
+        ("shared_tf_warm", wl._shared_doc_tf),
+        ("shared_pack_warm", wl._shared_pack_layout),
+    ):
+        start = time.perf_counter()
+        fn(spark, SF_DIR).count()
+        timings[label] = round(time.perf_counter() - start, 4)
     # Compile the ITERATIVE-TRAINER plan family on tiny synthetic frames:
     # the IVF-PQ train/encode/probe pipeline and the distributed logreg
     # round schedule several unique Arrow plans whose first execution

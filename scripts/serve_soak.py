@@ -1,14 +1,15 @@
 """Serving-session soak: bounded memory over many mixed queries.
 
-The seam registry (operators/seams.py) and the session-scoped shared
-caches (workload._shared_*) were built so a LONG-LIVED serving session —
-one SparkSession answering queries for hours — neither accumulates
-cached frames nor creeps in heap. tests/test_seams.py pins the
-mechanics (cache-manager empty after release, bounded registry); this
-script measures the CLAIM: run ITERS iterations of a seam-heavy query
-basket with the serving discipline (``release_seams`` between
-iterations; shared warm caches stay, by design — they are bounded at
-one entry per family), and record per iteration:
+The per-session artifact store (operators/seams.py) bounds both the
+operator-internal seams and the shared tiers (workload._shared_*) so a
+LONG-LIVED serving session — one SparkSession answering queries for
+hours — neither accumulates cached frames nor creeps in heap.
+tests/test_seams.py pins the mechanics (cache-manager empty after
+release, bounded store); this script measures the CLAIM: run ITERS
+iterations of a seam-heavy query basket with the serving discipline
+(``release(spark, "seam")`` between iterations; the shared tiers stay,
+by design — they are bounded at one entry per tier), and record per
+iteration:
 
 - wall seconds for the basket (creep = a leak somewhere),
 - post-GC JVM heap used (the cached-bytes + broadcast + py4j story),
@@ -108,7 +109,6 @@ def run_soak(spark, sf_dir: str, iters: int, basket: list | None = None) -> dict
     from pyspark.sql import functions as F
 
     from xena_gdc_etl_spark.operators import seams
-    from xena_gdc_etl_spark.operators.seams import release_seams
     from xena_gdc_etl_spark.workload import QUERIES
 
     # None means "use the default basket"; an explicitly passed empty list
@@ -130,7 +130,7 @@ def run_soak(spark, sf_dir: str, iters: int, basket: list | None = None) -> dict
         for name in basket:
             rows += consume(QUERIES[name](spark, sf_dir))
         wall = time.perf_counter() - t0
-        released = release_seams(spark)
+        released = seams.release(spark, "seam")
         n_cached, cached_bytes = cached_storage(spark)
         rec = {
             "iter": it,

@@ -283,19 +283,13 @@ def build_tpch_fixture(spark, sf_dir: str, work_dir: str) -> None:
 
 
 def _reset_caches(spark) -> None:
-    """Between-trial reset: drop the session-scoped shared caches and
-    every operator-internal seam so trial 2 re-pays the full build (a
-    min-of-2 over WARM second runs would measure the cache, not the
-    stage)."""
-    from xena_gdc_etl_spark import workload as wl
-    from xena_gdc_etl_spark.operators.seams import release_seams
+    """Between-trial reset: drop (and unpersist) the session-scoped
+    shared tiers and every operator-internal seam so trial 2 re-pays the
+    full build (a min-of-2 over WARM second runs would measure the
+    cache, not the stage)."""
+    from xena_gdc_etl_spark.operators.seams import release
 
-    release_seams(spark)
-    for cache in (
-        wl._SIG_CACHE, wl._IVF_CACHE, wl._PAIRS_CACHE,
-        wl._LSH_PAIRS_CACHE, wl._TF_CACHE, wl._PACK_CACHE,
-    ):
-        cache.pop(spark, None)
+    release(spark)
     spark.catalog.clearCache()
 
 

@@ -23,9 +23,10 @@ def _sweep_queries(spark, data_dir, skip=(), label=None, max_workers=16):
     round-trips, not compute. Spark's scheduler accepts concurrent
     actions from multiple Python threads; ``list.append`` is atomic under
     the GIL, so the failure report needs no lock. The only shared state a
-    query touches is the workload's session-scoped persist caches, whose
-    worst concurrent case is a duplicate build (check-then-set), never a
-    wrong result — and the sweep asserts completion, not values."""
+    query touches is the session's artifact store (operators/seams.py),
+    which builds each shared tier once under its session lock and
+    registers seams atomically — and the sweep asserts completion, not
+    values."""
     from concurrent.futures import ThreadPoolExecutor
 
     from xena_gdc_etl_spark.workload import QUERIES

@@ -183,6 +183,16 @@ def test_spread_min_bytes_floor(spark):
     assert pt.spread(rdd_backed, 8, min_bytes=1 << 60) is not rdd_backed
 
 
+def test_spread_min_bytes_floor_wins_over_narrow_repartition(spark):
+    # the floor is checked before the explicit-width branch: a sub-floor
+    # frame under a Repartition narrower than the target stays as is
+    narrow = spark.range(1000).repartition(1)
+    assert pt.explicit_partition_width(narrow) == 1
+    assert pt.spread(narrow, 8, min_bytes=1 << 20) is narrow
+    # without the floor the narrow width still triggers the spread
+    assert pt.explicit_partition_width(pt.spread(narrow, 8)) == 8
+
+
 def test_local_rows_df_slices_by_size(spark):
     # tiny driver products must not fan out to a partition per core
     tiny = pt.local_rows_df(spark, [(1, 2), (3, 4)], "a long, b long")

@@ -1,14 +1,14 @@
-"""Operator-internal persist seams (operators/seams.py): bounded
-per-session registry, deterministic release, and the round-12 contract
-that a serving loop calling seam-bearing operators repeatedly does NOT
-accumulate cached frames for the session's lifetime."""
+"""The per-session artifact store (operators/seams.py): bounded seams
+and shared tiers, deterministic release, thread safety, and the round-12
+contract that a serving loop calling seam-bearing operators repeatedly
+does NOT accumulate cached frames for the session's lifetime."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from xena_gdc_etl_spark.operators import seams
-from xena_gdc_etl_spark.operators.seams import release_seams, seam
+from xena_gdc_etl_spark.operators.seams import release, seam, stats
 
 
 def _cache_empty(spark) -> bool:
@@ -18,8 +18,8 @@ def _cache_empty(spark) -> bool:
 def _fresh(spark):
     # tests share a session-scoped SparkSession: start each test from a
     # clean cache so isEmpty() assertions are about THIS test's frames
+    release(spark)
     spark.catalog.clearCache()
-    seams._REG.pop(spark, None)
 
 
 def test_release_empties_cache_manager(spark):
@@ -28,18 +28,18 @@ def test_release_empties_cache_manager(spark):
     s = seam(df.groupBy("k").agg(F.count(F.lit(1)).alias("n")))
     assert s.count() == 7
     assert not _cache_empty(spark)
-    assert release_seams(spark) == 1
+    assert release(spark, "seam") == 1
     assert _cache_empty(spark)
     # idempotent
-    assert release_seams(spark) == 0
+    assert release(spark, "seam") == 0
 
 
 def test_same_plan_reregisters_one_slot(spark):
     _fresh(spark)
     for _ in range(5):
         seam(spark.range(50).selectExpr("id % 3 as k").distinct())
-    assert len(seams._REG[spark]) == 1
-    assert release_seams(spark) == 1
+    assert stats(spark)["seam", "entries"] == 1
+    assert release(spark, "seam") == 1
     assert _cache_empty(spark)
 
 
@@ -48,10 +48,9 @@ def test_registry_bounded_evicts_oldest(spark):
     for i in range(seams.SEAM_CAP + 4):
         # distinct literals -> distinct plans -> distinct seams
         seam(spark.range(10 + i).selectExpr(f"id + {i} as v"))
-    reg = seams._REG[spark]
-    assert len(reg) == seams.SEAM_CAP
+    assert stats(spark)["seam", "entries"] == seams.SEAM_CAP
     # the JVM cache holds exactly the registered survivors
-    assert release_seams(spark) == seams.SEAM_CAP
+    assert release(spark, "seam") == seams.SEAM_CAP
     assert _cache_empty(spark)
 
 
@@ -73,7 +72,7 @@ def test_operators_leave_no_unreleased_persist(spark, sf_dir):
     dd.ngram_jaccard_pairs(docs, n=3).count()  # 1 seam
     tx.bigram_logprob_scores(docs).count()  # 1 seam
     assert not _cache_empty(spark)
-    assert release_seams(spark) == 4
+    assert release(spark, "seam") == 4
     assert _cache_empty(spark)
 
 
@@ -86,7 +85,7 @@ def test_evicted_seam_recomputes_correctly(spark):
     for i in range(seams.SEAM_CAP + 1):  # push `held` out of the registry
         seam(spark.range(5 + i).selectExpr(f"id * {i + 2} as v"))
     assert derived.collect()[0]["s"] == sum(range(11))
-    release_seams(spark)
+    release(spark, "seam")
     assert _cache_empty(spark)
 
 
@@ -99,14 +98,10 @@ def test_serving_soak_memory_bounded(spark, sf_dir):
     import importlib.util
     import os
 
+    # _fresh drops (and unpersists) every warm shared tier, so the bound
+    # is established by iteration 1
     _fresh(spark)
-    from xena_gdc_etl_spark import workload
-
-    # drop warm shared caches so the bound is established by iteration 1
-    for cache in (workload._IVF_CACHE, workload._PAIRS_CACHE):
-        entry = cache.pop(spark, None)
-        if entry is not None:
-            entry[-1].unpersist()
+    assert not any(k == "entries" for _, k in stats(spark))
     spec = importlib.util.spec_from_file_location(
         "serve_soak",
         os.path.join(
@@ -133,11 +128,69 @@ def test_eviction_counter_tracks_cap_evictions(spark):
     every iteration."""
     _fresh(spark)
     before = seams.EVICTIONS
+    session_before = stats(spark)["seam", "evictions"]
     extra = 4
     for i in range(seams.SEAM_CAP + extra):
         seam(spark.range(20 + i).selectExpr(f"id + {100 + i} as v"))
     assert seams.EVICTIONS - before == extra
-    assert release_seams(spark) == seams.SEAM_CAP
+    assert stats(spark)["seam", "evictions"] - session_before == extra
+    assert release(spark, "seam") == seams.SEAM_CAP
+    assert _cache_empty(spark)
+
+
+def test_concurrent_tier_builds_once(spark, sf_dir):
+    """8 threads asking a cold session for the LSH-pair tier (which nests
+    the signatures tier inside the session lock) build each tier once,
+    all get the same frame, and nobody deadlocks."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from xena_gdc_etl_spark.workload import _shared_lsh_pairs
+
+    _fresh(spark)
+    # per-session counts live as long as the (shared) test session:
+    # assert deltas
+    before = stats(spark)
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        futs = [
+            pool.submit(_shared_lsh_pairs, spark, sf_dir) for _ in range(8)
+        ]
+        frames = [f.result(timeout=300) for f in futs]
+    assert len({id(f) for f in frames}) == 1
+    delta = stats(spark)
+    delta.subtract(before)
+    assert [
+        delta[n, k]
+        for n in ("signatures", "lsh_pairs")
+        for k in ("hits", "misses")
+    ] == [0, 1, 7, 1]
+    assert release(spark) == 2
+    assert _cache_empty(spark)
+
+
+def test_concurrent_seams_bounded_and_counted(spark):
+    """8 threads registering 40 distinct seams leave exactly SEAM_CAP = 8
+    entries, and the process-wide EVICTIONS total and the session's
+    eviction count both grow by exactly 32."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    _fresh(spark)
+    before = seams.EVICTIONS
+    misses = stats(spark)["seam", "misses"]
+    evictions = stats(spark)["seam", "evictions"]
+
+    def register(t):
+        for i in range(5):
+            j = 5 * t + i
+            seam(spark.range(10 + j).selectExpr(f"id + {200 + j} as v"))
+
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        for f in [pool.submit(register, t) for t in range(8)]:
+            f.result(timeout=300)
+    assert stats(spark)["seam", "entries"] == seams.SEAM_CAP
+    assert stats(spark)["seam", "misses"] - misses == 40
+    assert stats(spark)["seam", "evictions"] - evictions == 32
+    assert seams.EVICTIONS - before == 32
+    assert release(spark, "seam") == seams.SEAM_CAP
     assert _cache_empty(spark)
 
 

@@ -1374,7 +1374,7 @@ def containment_pairs(
     #   needs anyway), after which the relation reports ACTUAL bytes —
     #   downstream joins broadcast at small scale and shuffle at corpus
     #   scale, the right plan at every size with no hand-placed hints —
-    #   and registers the frame for bounded eviction + release_seams().
+    #   and registers the frame for bounded eviction + release().
     sh = seam(shingles(docs, id_col, text_col, k=k, distinct=True))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
     a_sh = sh.select(F.col(id_col).alias("a"), "shingle")

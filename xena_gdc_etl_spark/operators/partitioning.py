@@ -131,8 +131,10 @@ def spread(
     frames that already fill the cores.
 
     ``min_bytes``: identity when the KNOWN size estimate is below this
-    floor. The default 0 keeps the module's err-toward-spreading posture
-    — a 100-300× explode consumer must spread even a tiny frame.
+    floor — checked first, so it also wins over an explicit Repartition
+    narrower than ``parallelism``. The default 0 keeps the module's
+    err-toward-spreading posture — a 100-300× explode consumer must
+    spread even a tiny frame.
     Constant-fan-out consumers (the broadcast-matmul Arrow family, where
     per-row work is microseconds and output ≈ input) pass a floor: for
     them a sub-floor frame costs more in the repartition exchange + one
@@ -145,12 +147,12 @@ def spread(
         # stream is meaningless (and .rdd is illegal on one)
         return df
     par = parallelism or df.sparkSession.sparkContext.defaultParallelism
-    width = explicit_partition_width(df)
-    if width is not None:
-        return df if width >= par else df.repartition(par)
     size = estimated_size_bytes(df)
     if size < min_bytes:
         return df
+    width = explicit_partition_width(df)
+    if width is not None:
+        return df if width >= par else df.repartition(par)
     if par * SPREAD_BYTES_PER_CORE <= size < SIZE_UNKNOWN_SENTINEL:
         return df
     return df.repartition(par)

@@ -81,7 +81,7 @@ def heavy_hitters(
     # regardless of exchange-reuse behavior (persist, not lazy
     # localCheckpoint, whose .rdd conversion executes stages at
     # construction under AQE — see dedup.containment_pairs); registered
-    # for bounded eviction + release_seams (operators/seams.py).
+    # for bounded eviction + release (operators/seams.py).
     from xena_gdc_etl_spark.operators.seams import seam
 
     counts = seam(

@@ -28,6 +28,7 @@ from xena_gdc_etl_spark.operators import mapping as mp
 from xena_gdc_etl_spark.operators import matrix as mx
 from xena_gdc_etl_spark.operators import phenotype as ph
 from xena_gdc_etl_spark.operators import snv
+from xena_gdc_etl_spark.operators.seams import shared
 from xena_gdc_etl_spark.operators import survival as sv
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -35,44 +36,28 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# Session-scoped shared-intermediate cache: four minhash-family queries
-# (dedup_minhash, minhash_lsh_pairs, dedup_clusters, minhash_jaccard_est)
-# start from the SAME shingle→signature pipeline — the expensive part of all
-# of them. A real deployment materializes signatures once and fans the LSH
-# stages out from there; the local analog is one persisted signature table
-# per (session, sf_dir). Bounded by construction: at most one entry per
-# live session (replaced — and unpersisted — when sf_dir changes; the
-# WeakKeyDictionary entry dies with the session), unlike the unscoped
-# per-query persists this replaces.
-import weakref as _weakref
-
-_SIG_CACHE: "_weakref.WeakKeyDictionary[SparkSession, tuple[str, DataFrame]]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
+# Shared tiers: session-scoped artifacts several queries start from,
+# held by the session artifact store in operators/seams.py (one entry
+# per tier, keyed by sf_dir[, τ]).
+#
+# Four minhash-family queries (dedup_minhash, minhash_lsh_pairs,
+# dedup_clusters, minhash_jaccard_est) start from the SAME
+# shingle→signature pipeline — the expensive part of all of them. A real
+# deployment materializes signatures once and fans the LSH stages out
+# from there.
 def _shared_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xena_gdc_etl_spark.operators import dedup as dd
 
-    entry = _SIG_CACHE.get(spark)
-    if entry is not None:
-        if entry[0] == sf_dir:
-            return entry[1]
-        entry[1].unpersist()
-    sig = dd.minhash_signatures(
+    return shared(spark, "signatures", sf_dir, lambda: dd.minhash_signatures(
         dd.shingles(Catalog(spark, sf_dir).documents, k=5, distinct=False),
         num_hashes=8,
-    ).persist()
-    _SIG_CACHE[spark] = (sf_dir, sig)
-    return sig
+    ).persist())
 
 
 # The embedding family (ann_ivf, embed_cosine_dup, semantic_dedup) buckets
 # the corpus by the SAME deterministic centroids (the first
 # ``n_cells`` vec_ids) — in a real deployment the inverted file is built
-# once and every consumer reads it. Same bounded session-scoped cache
-# contract as _shared_signatures: one persisted assignment per live
-# session, replaced (and unpersisted) when sf_dir changes.
+# once and every consumer reads it.
 #
 # The cell count SCALES with the corpus: n_cells = max(8, ceil(N/250)).
 # A fixed n_cells=8 means cells grow ∝ corpus and the within-cell pair
@@ -95,124 +80,66 @@ _IVF_CELLS_SQL = (
     "FROM embeddings)"
 )
 
-_IVF_CACHE: "_weakref.WeakKeyDictionary[SparkSession, tuple[str, DataFrame]]" = (
-    _weakref.WeakKeyDictionary()
-)
 
-
-# n_cells is a pure function of the embeddings corpus, so one count()
-# per (session, sf_dir) suffices — without the memo every
-# ann_ivf_nprobe call (and every _shared_ivf_assigned cache miss) pays
-# a redundant full-corpus scan just to re-derive the same integer.
-_IVF_N_CELLS_CACHE: (
-    "_weakref.WeakKeyDictionary[SparkSession, dict[str, int]]"
-) = _weakref.WeakKeyDictionary()
-
-
+# n_cells is a pure function of the embeddings corpus: held as a tier so
+# ann_ivf_nprobe and every IVF-assignment build skip a full-corpus count.
 def _ivf_n_cells(spark: SparkSession, sf_dir: str) -> int:
     from xena_gdc_etl_spark.operators import similarity as sim
 
-    per_session = _IVF_N_CELLS_CACHE.setdefault(spark, {})
-    cached = per_session.get(sf_dir)
-    if cached is not None:
-        return cached
-    n = Catalog(spark, sf_dir).embeddings.count()
-    n_cells = sim.suggest_n_cells(
-        n, target_cell_rows=IVF_TARGET_CELL_ROWS, min_cells=8
-    )
-    per_session[sf_dir] = n_cells
-    return n_cells
+    return shared(spark, "ivf_n_cells", sf_dir, lambda: sim.suggest_n_cells(
+        Catalog(spark, sf_dir).embeddings.count(),
+        target_cell_rows=IVF_TARGET_CELL_ROWS,
+        min_cells=8,
+    ))
 
 
 def _shared_ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xena_gdc_etl_spark.operators import similarity as sim
 
-    entry = _IVF_CACHE.get(spark)
-    if entry is not None:
-        if entry[0] == sf_dir:
-            return entry[1]
-        entry[1].unpersist()
-    emb = Catalog(spark, sf_dir).embeddings
-    centroids = emb.filter(
-        F.col("vec_id") < _ivf_n_cells(spark, sf_dir)
-    ).select(F.col("vec_id").alias("centroid_id"), "embedding")
-    assigned = sim.ivf_assign(emb, centroids).persist()
-    _IVF_CACHE[spark] = (sf_dir, assigned)
-    return assigned
+    def build() -> DataFrame:
+        emb = Catalog(spark, sf_dir).embeddings
+        centroids = emb.filter(
+            F.col("vec_id") < _ivf_n_cells(spark, sf_dir)
+        ).select(F.col("vec_id").alias("centroid_id"), "embedding")
+        return sim.ivf_assign(emb, centroids).persist()
+
+    return shared(spark, "ivf_assigned", sf_dir, build)
 
 
-# One more tier of the same pattern: embed_cosine_dup IS the τ-pair frame
-# and semantic_dedup clusters it — in a deployment the pair table is
-# materialized once and both the dup report and the cluster pass read it.
-# τ is part of the cache key so a different-threshold caller never gets a
-# stale frame.
-_PAIRS_CACHE: "_weakref.WeakKeyDictionary[SparkSession, tuple[str, float, DataFrame]]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
+# embed_cosine_dup IS the τ-pair frame and semantic_dedup clusters it —
+# in a deployment the pair table is materialized once and both the dup
+# report and the cluster pass read it. τ is part of the key so a
+# different-threshold caller never gets a stale frame.
 def _shared_dup_pairs(
     spark: SparkSession, sf_dir: str, threshold: float = 0.3
 ) -> DataFrame:
     from xena_gdc_etl_spark.operators import similarity as sim
 
-    entry = _PAIRS_CACHE.get(spark)
-    if entry is not None:
-        if entry[0] == sf_dir and entry[1] == threshold:
-            return entry[2]
-        entry[2].unpersist()
-    pairs = sim.cosine_dup_pairs(
-        _shared_ivf_assigned(spark, sf_dir), threshold=threshold
-    ).persist()
-    _PAIRS_CACHE[spark] = (sf_dir, threshold, pairs)
-    return pairs
+    return shared(spark, "dup_pairs", (sf_dir, threshold), lambda: (
+        sim.cosine_dup_pairs(
+            _shared_ivf_assigned(spark, sf_dir), threshold=threshold
+        ).persist()
+    ))
 
 
 # The LSH candidate-pair expansion off the shared signature table is read
 # by three queries (the pair report, the Jaccard estimator gate, and
-# containment scoring) — the expansion is the expensive half of each, so
-# it gets the same session-scoped cache tier. ~2 bigints per pair; the
-# frame persists comfortably even at web-scale candidate counts because
-# the pre-expansion bucket cap bounds it.
-_LSH_PAIRS_CACHE: "_weakref.WeakKeyDictionary[SparkSession, tuple[str, DataFrame]]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
+# containment scoring) — the expansion is the expensive half of each.
 def _shared_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xena_gdc_etl_spark.operators import dedup as dd
 
-    entry = _LSH_PAIRS_CACHE.get(spark)
-    if entry is not None:
-        if entry[0] == sf_dir:
-            return entry[1]
-        entry[1].unpersist()
-    pairs = dd.lsh_candidate_pairs(
+    return shared(spark, "lsh_pairs", sf_dir, lambda: dd.lsh_candidate_pairs(
         _shared_signatures(spark, sf_dir), num_hashes=8, band_size=2
-    ).persist()
-    _LSH_PAIRS_CACHE[spark] = (sf_dir, pairs)
-    return pairs
+    ).persist())
 
 
 # The (doc_id, tok, tf) term-frequency frame is the shared first stage of
 # five unigram-statistics queries (lm_score, quality_buckets, oov_rate,
 # tfidf_topk, vocab_topk) — a real pipeline materializes this
-# token-statistics artifact once per corpus snapshot and fans the
-# consumers out from it. Same bounded session-scoped contract as
-# _shared_signatures.
-_TF_CACHE: "_weakref.WeakKeyDictionary[SparkSession, tuple[str, DataFrame]]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
+# token-statistics artifact once per corpus snapshot.
 def _shared_doc_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xena_gdc_etl_spark.operators import text as tx
 
-    entry = _TF_CACHE.get(spark)
-    if entry is not None:
-        if entry[0] == sf_dir:
-            return entry[1]
-        entry[1].unpersist()
     # Materialize the artifact PARTITIONED BY doc_id: doc_term_freqs ends
     # hash-partitioned by (doc_id, tok), which satisfies no downstream
     # clustering, so every per-doc consumer (oov probe, lm_score,
@@ -221,55 +148,46 @@ def _shared_doc_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already-combined tf rows, far below the raw token stream) buys
     # shuffle-free per-doc aggregation for all consumers — the cached
     # plan's HashPartitioning(doc_id) satisfies their groupBy clustering.
-    tf = (
+    return shared(spark, "doc_tf", sf_dir, lambda: (
         tx.doc_term_freqs(Catalog(spark, sf_dir).documents)
         .repartition("doc_id")
         .persist()
-    )
-    _TF_CACHE[spark] = (sf_dir, tf)
-    return tf
+    ))
 
 
 # The pack layout (doc → pack_id/pack_offset under concat-and-chunk) is
 # consumed by sequence_pack (IS the frame) and pack_stats (aggregates it)
-# — in a deployment the layout is computed once per training-mix freeze
-# and every loader/diagnostic reads it. Sharing it also means the prefix
-# scan's boundary-sample job runs once per (session, sf_dir) instead of
-# once per consumer call.
-_PACK_CACHE: "_weakref.WeakKeyDictionary[SparkSession, tuple[str, DataFrame]]" = (
-    _weakref.WeakKeyDictionary()
-)
-
+# — in a deployment the layout is computed once per training-mix freeze.
+# Sharing it also runs the prefix scan's boundary-sample job once per
+# (session, sf_dir) instead of once per consumer call.
 _PACK_BUDGET = 256
 
 
 def _shared_pack_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xena_gdc_etl_spark.operators.prefix import group_prefix_sum
 
-    entry = _PACK_CACHE.get(spark)
-    if entry is not None:
-        if entry[0] == sf_dir:
-            return entry[1]
-        entry[1].unpersist()
-    docs = Catalog(spark, sf_dir).documents
-    toks = docs.select(
-        "doc_id",
-        "source",
-        F.size(F.array_remove(F.split(F.col("text"), WS_RE), ""))
-        .cast("bigint")
-        .alias("n_tokens"),
-    )
-    cum = group_prefix_sum(toks, ["source"], ["doc_id"], "n_tokens", "__cum")
-    start = F.col("__cum") - F.col("n_tokens")
-    layout = cum.select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        F.floor(start / _PACK_BUDGET).cast("bigint").alias("pack_id"),
-        (start % _PACK_BUDGET).cast("bigint").alias("pack_offset"),
-    ).persist()
-    _PACK_CACHE[spark] = (sf_dir, layout)
-    return layout
+    def build() -> DataFrame:
+        docs = Catalog(spark, sf_dir).documents
+        toks = docs.select(
+            "doc_id",
+            "source",
+            F.size(F.array_remove(F.split(F.col("text"), WS_RE), ""))
+            .cast("bigint")
+            .alias("n_tokens"),
+        )
+        cum = group_prefix_sum(
+            toks, ["source"], ["doc_id"], "n_tokens", "__cum"
+        )
+        start = F.col("__cum") - F.col("n_tokens")
+        return cum.select(
+            "doc_id",
+            "source",
+            "n_tokens",
+            F.floor(start / _PACK_BUDGET).cast("bigint").alias("pack_id"),
+            (start % _PACK_BUDGET).cast("bigint").alias("pack_offset"),
+        ).persist()
+
+    return shared(spark, "pack_layout", sf_dir, build)
 
 
 def query(name: str, oracle: str | None = None):
