@@ -21,6 +21,25 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture
+def job_ids(spark, request):
+    """``job_ids(fn)`` runs ``fn`` under a job group of its own and
+    returns ``(fn(), ids of the Spark jobs it fired)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-{request.node.name}-{id(fn)}"
+        sc.setJobGroup(group, request.node.name)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 def run_cli_inprocess(*args: str):
     """Drive ``cli.main`` in-process against the shared test SparkSession.
 

@@ -9,6 +9,11 @@ Shapes exercised: random edge soups, chains (worst diameter), stars,
 cliques (densest), disjoint mixes thereof, plus edge-free singletons; ids
 as ints and as strings (lexicographic min ≠ numeric min is part of the
 point). Oracle: pure-Python union-find with min-id labels.
+
+The bipartite form (``connected_components_bipartite``) gets the same
+treatment over random (node, bucket) memberships: bucket keys drawn from
+the node ids' own type and range (so an untagged bucket would collide
+with a node id), plus nodes that sit in no bucket.
 """
 
 from __future__ import annotations
@@ -131,3 +136,50 @@ def test_cc_paths_match_union_find_oracle(spark, graph, driver_max_edges):
         f"path={'distributed' if not driver_max_edges else 'auto'} "
         f"n={n} edges={edge_ids}"
     )
+
+
+@st.composite
+def _memberships(draw):
+    n = draw(st.integers(min_value=1, max_value=14))
+    rows = draw(
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=n - 1),
+                st.integers(min_value=0, max_value=5),
+            ),
+            min_size=0,
+            max_size=20,
+        )
+    )
+    return n, rows, draw(st.booleans())
+
+
+@_SLOW
+@given(m=_memberships())
+def test_cc_bipartite_paths_match_union_find_oracle(spark, m):
+    n, rows, as_str = m
+
+    def _id(i):
+        return f"d{i}" if as_str else i
+
+    node_ids = [_id(i) for i in range(n)]
+    members: dict = {}
+    for v, b in rows:
+        members.setdefault(b, []).append(_id(v))
+    expected = _oracle_labels(
+        node_ids, [(ms[0], v) for ms in members.values() for v in ms[1:]]
+    )
+
+    typ = "string" if as_str else "long"
+    nodes = spark.createDataFrame([(v,) for v in node_ids], f"doc_id {typ}")
+    assign = spark.createDataFrame(
+        [(_id(v), _id(b)) for v, b in rows], f"doc_id {typ}, bkey {typ}"
+    )
+    for cap in (10_000, None):
+        got = {
+            r.doc_id: r.cluster_id
+            for r in dd.connected_components_bipartite(
+                nodes, assign, driver_max_edges=cap
+            ).collect()
+        }
+        assert got == expected, f"cap={cap} n={n} rows={rows}"

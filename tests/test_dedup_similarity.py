@@ -416,6 +416,41 @@ def test_connected_components_string_ids_driver_path(spark):
     assert out == {"d-a": "d-a", "d-b": "d-a", "d-c": "d-a", "d-z": "d-z"}
 
 
+@pytest.mark.parametrize(
+    "cap", [dd.CC_DRIVER_MAX_EDGES, None], ids=["driver", "distributed"]
+)
+@pytest.mark.parametrize("form", ["pairs", "bipartite"])
+def test_connected_components_null_links_connect_nothing(spark, form, cap):
+    """A null pair endpoint or a null bucket links nothing, on both forms
+    and both branches: one row per node, and a node whose only links are
+    null is a singleton. Null endpoints used to raise ``KeyError: nan``
+    (long ids) or a ``TypeError`` (string ids) on the pairwise driver
+    branch; the bipartite distributed branch dropped null-bucket-only
+    nodes and its driver branch merged them into one cluster."""
+    for typ, ids in (("long", [1, 2, 3, 4]), ("string", ["a", "b", "c", "d"])):
+        n1, n2, n3, n4 = ids
+        nodes = spark.createDataFrame([(i,) for i in ids], f"doc_id {typ}")
+        if form == "pairs":
+            links = spark.createDataFrame(
+                [(n1, n2), (n3, None), (None, n4), (None, None)],
+                f"a {typ}, b {typ}",
+            )
+            out = dd.connected_components(links, nodes, driver_max_edges=cap)
+        else:
+            links = spark.createDataFrame(
+                [(n1, "b1"), (n2, "b1"), (n3, None), (n4, None), (None, "b1")],
+                f"doc_id {typ}, bkey string",
+            )
+            out = dd.connected_components_bipartite(
+                nodes, links, driver_max_edges=cap
+            )
+        rows = out.collect()
+        assert len(rows) == 4, (typ, rows)
+        assert {r.doc_id: r.cluster_id for r in rows} == {
+            n1: n1, n2: n1, n3: n3, n4: n4,
+        }, typ
+
+
 def test_connected_components_validate_rejects_foreign_ids(spark):
     # pairs ⊆ nodes is a documented precondition (the two paths
     # legitimately differ under a violation); validate=True pays one

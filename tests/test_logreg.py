@@ -84,6 +84,37 @@ def test_tiny_cap_takes_distributed_path_and_matches(spark):
     assert abs(b - br) < 1e-9
 
 
+def test_driver_path_is_one_job(spark, job_ids):
+    """The path probe IS the driver-path collect: one bounded toPandas,
+    not a count probe followed by a second full collect (3 jobs)."""
+    import random
+
+    rnd = random.Random(0)
+    df = spark.createDataFrame(
+        [(rnd.random(), rnd.random(), float(i % 2)) for i in range(200)],
+        ["f0", "f1", "y"],
+    )
+    (w, b), ids = job_ids(
+        lambda: logreg.logistic_train(df, ["f0", "f1"], "y", iterations=3)
+    )
+    assert len(ids) == 1, ids
+    rows = [([r.f0, r.f1], r.y) for r in df.collect()]
+    wr, br = logreg._reference_train(rows, iterations=3)
+    assert all(abs(a - c) < 1e-9 for a, c in zip(w, wr))
+    assert abs(b - br) < 1e-9
+
+
+def test_empty_input_raises_value_error_on_both_paths(spark):
+    import pytest
+
+    empty = spark.createDataFrame([], "f0 double, f1 double, y double")
+    for cap in (2_000_000, 0):
+        with pytest.raises(ValueError, match="no rows"):
+            logreg.logistic_train(
+                empty, ["f0", "f1"], "y", iterations=2, driver_max_rows=cap
+            )
+
+
 def test_loss_decreases_and_separates(spark):
     df = _df(spark, 2)
     w0, b0 = [0.0, 0.0], 0.0

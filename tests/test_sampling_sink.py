@@ -208,6 +208,21 @@ def test_write_manifest_rejects_wide_key(spark, tmp_path):
         write_manifest(df, str(tmp_path), partition_by=["id"], max_partitions=10)
 
 
+def test_write_manifest_keyed_is_two_jobs(spark, tmp_path, job_ids):
+    """The width check is the bounded collect of the keyed aggregate
+    itself (its shuffle stage + the collect), not a distinct-count probe
+    in front of it (5 jobs)."""
+    from xena_gdc_etl_spark.sources.parquet_sink import write_manifest
+
+    df = spark.range(200).withColumn("g", F.col("id") % 4)
+    m, ids = job_ids(
+        lambda: write_manifest(df, str(tmp_path), partition_by=["g"])
+    )
+    assert len(ids) == 2, ids
+    assert [p["g"] for p in m["partitions"]] == [0, 1, 2, 3]
+    assert [p["rows"] for p in m["partitions"]] == [50] * 4
+
+
 def test_write_manifest_digest_sees_paired_duplicate_swap(spark, tmp_path):
     """The XOR fold this digest replaced cancelled paired duplicates:
     {r1, r1} and {r2, r2} both XORed to 0 with equal counts. The wrapping

@@ -13,7 +13,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from xena_gdc_etl_spark.functions import md5_hash60
-from xena_gdc_etl_spark.operators.partitioning import local_rows_df
+from xena_gdc_etl_spark.operators.partitioning import (
+    collect_at_most,
+    local_rows_df,
+)
 from xena_gdc_etl_spark.operators.seams import seam
 from xena_gdc_etl_spark.operators.text import WS_CLASS, WS_RE
 
@@ -214,13 +217,12 @@ def lsh_candidate_pairs(
     )
 
 
-def _driver_union_find(
-    edge_pairs,
-) -> dict:
+def _driver_union_find(edge_pairs):
     """Union-find with path compression over an in-driver edge list;
-    returns {node_key: min-node-of-component} for every key seen. The
-    min-label result is exactly what the distributed propagation loops
-    converge to, so the two paths are interchangeable by construction.
+    returns ``find``, which maps every key seen to its component's root
+    (an arbitrary member, not the min — :func:`_driver_labels` picks the
+    min node per root). Keys only need equality and hashing, so bucket
+    keys can ride as tagged tuples next to plain node ids.
     """
     parent: dict = {}
 
@@ -237,6 +239,48 @@ def _driver_union_find(
         if ra != rb:
             parent[ra] = rb
     return find
+
+
+def _driver_labels(
+    links: DataFrame, nodes: DataFrame, id_col: str, cap: int, bipartite=False
+) -> "DataFrame | None":
+    """The driver branch of both connected-components forms: ``None``
+    when ``links`` has more than ``cap`` rows, else every node's min-id
+    label from ONE bounded collect and a union-find. ``links`` is a
+    null-free (node, other) frame whose first column holds every linked
+    node: symmetric edges, or (node, bucket) rows with ``bipartite=True``,
+    which tags the buckets apart from node ids. The label map joins onto
+    ``nodes`` in broadcast (the node set never collects); link-free nodes
+    label themselves."""
+    pdf = collect_at_most(links, cap, pandas=True) if cap else None
+    if pdf is None:
+        return None
+    node, other = pdf.iloc[:, 0], pdf.iloc[:, 1]
+    if bipartite:
+        other = (("bucket", b) for b in other)
+    find = _driver_union_find(zip(node, other))
+    seen = set(node)
+    best: dict = {}
+    for n in seen:
+        r = find(n)
+        if r not in best or n < best[r]:
+            best[r] = n
+    id_type = nodes.schema[id_col].dataType
+    # size-proportional slicing: the default core-count slicing made the
+    # broadcast build of this tiny label map a task-per-core job
+    mdf = local_rows_df(
+        nodes.sparkSession,
+        [(_py(n), _py(best[find(n)])) for n in seen],
+        StructType([StructField("node", id_type), StructField("__cl", id_type)]),
+    )
+    return (
+        nodes.select(F.col(id_col).alias("node"))
+        .join(F.broadcast(mdf), "node", "left")
+        .select(
+            F.col("node").alias(id_col),
+            F.coalesce("__cl", "node").alias("cluster_id"),
+        )
+    )
 
 
 def connected_components(
@@ -267,20 +311,22 @@ def connected_components(
     precondition instead; pass ``validate=True`` (tests / new callers)
     to pay one anti-join and fail loudly on foreign ids.
 
+    A null endpoint connects nothing: such pairs are dropped before
+    either path runs, so every node still gets one row.
+
     Two paths, identical min-label semantics:
 
-    - pair set ≤ ``driver_max_edges`` (one cheap count probe): the GATED
-      pair list — already reduced from the corpus by LSH + a similarity
-      threshold — collects to the driver (two ids per edge; ≈64 MB at the
-      default cap) and a union-find labels it directly, replacing an
-      O(rounds) loop whose every round costs a join + groupBy +
-      checkpoint + convergence job. Same small-frame economics as the
-      prefix-scan and logreg fallbacks. The full node set never collects:
-      non-edge nodes stay distributed and keep their own id as label.
-      The default cap is the MEASURED dispatch crossover (see
-      ``CC_DRIVER_MAX_EDGES`` above): driver strictly faster ≤ 2M edges
-      on both bracket shapes, distributed faster by 8.5M (real sf1 LSH
-      graph).
+    - pair set ≤ ``driver_max_edges``: the GATED pair list — already
+      reduced from the corpus by LSH + a similarity threshold — collects
+      in its own bounded probe (two ids per edge; ≈64 MB at the default
+      cap) and a union-find labels it (:func:`_driver_labels`, shared
+      with the bipartite form), replacing an O(rounds) loop whose every
+      round costs a join + groupBy + checkpoint + convergence job. The
+      full node set never collects: non-edge nodes stay distributed and
+      keep their own id as label. The default cap is the MEASURED
+      dispatch crossover (see ``CC_DRIVER_MAX_EDGES`` above): driver
+      strictly faster ≤ 2M edges on both bracket shapes, distributed
+      faster by 8.5M (real sf1 LSH graph).
     - otherwise: alternating large-star/small-star contraction (Kiveris
       et al., "Connected Components in MapReduce and Beyond", SoCC'14)
       — O(log² n) rounds on ANY graph shape, each round two partial-
@@ -299,9 +345,11 @@ def connected_components(
     (the sf1 stress lane records these in BASELINE.md §sf1).
     """
     import time as _time
+    pairs = pairs.select(
+        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+    ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        pairs.union(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
         .persist()
     )
@@ -323,52 +371,17 @@ def connected_components(
                 f"nodes (first few: {[r[0] for r in foreign]}) — the "
                 "pairs ⊆ nodes precondition is violated"
             )
-    # LIMIT-bounded probe (logreg.py driver-cap pattern): collect up to
-    # cap+1 rows in ONE job — if the edge set fits, the collected frame
-    # IS the full set (limit ≤ total returns everything), so the probe
-    # and the driver-path collect are the same action instead of a
-    # count job followed by a toPandas job over the same persisted
-    # frame. A graph destined for the distributed path pays one ≈64 MB
-    # bounded transfer instead of a scalar count — noise next to the
-    # contraction loop it then runs.
-    cap = 2 * driver_max_edges if driver_max_edges else 0
-    pdf = edges.limit(cap + 1).toPandas() if driver_max_edges else None
-    if pdf is not None and len(pdf) <= cap:
+    # symmetric edges: src covers both sides, so each undirected edge is
+    # two probe rows. A graph destined for the distributed path pays one
+    # ≈64 MB bounded transfer — noise next to the contraction loop.
+    labeled = _driver_labels(
+        edges, nodes, id_col, 2 * driver_max_edges if driver_max_edges else 0
+    )
+    if labeled is not None:
         if stats is not None:
             stats["path"] = "driver_union_find"
-        find = _driver_union_find(zip(pdf["src"], pdf["dst"]))
-        seen = set(pdf["src"])  # symmetric edges: src covers both sides
-        best: dict = {}
-        for n in seen:
-            r = find(n)
-            if r not in best or n < best[r]:
-                best[r] = n
-        id_type = nodes.schema[id_col].dataType
-        # size-proportional slicing: the default core-count slicing made
-        # the broadcast build of this tiny label map a task-per-core job
-        mdf = local_rows_df(
-            pairs.sparkSession,
-            [
-                (_py(n), _py(best[find(n)]))
-                for n in seen
-            ],
-            StructType(
-                [
-                    StructField("node", id_type),
-                    StructField("__cl", id_type),
-                ]
-            ),
-        )
         edges.unpersist()
-        return (
-            nodes.select(F.col(id_col).alias("node"))
-            .join(F.broadcast(mdf), "node", "left")
-            .select(
-                F.col("node").alias(id_col),
-                F.coalesce("__cl", "node").alias("cluster_id"),
-            )
-        )
-    del pdf  # cap+1-row probe frame: release before the contraction loop
+        return labeled
     # ---- distributed path: alternating large-star / small-star --------
     # (Kiveris et al., "Connected Components in MapReduce and Beyond",
     # SoCC'14 — public algorithm.) Unlike min-label propagation, which
@@ -558,63 +571,38 @@ def connected_components_bipartite(
     :func:`connected_components`' precondition — a membership filter
     would shuffle the full corpus id set per call.
 
-    Like :func:`connected_components`, an assignment table under
-    ``driver_max_edges`` rows (one cheap count probe against the already-
-    persisted frame) is labeled by an in-driver union-find over (node,
-    bucket) keys — identical min-label result, none of the per-round
-    join/checkpoint/convergence jobs; the full node set never collects
-    (nodes without buckets stay distributed as singletons). Above the cap
-    — the 100 TB path — each round alternates two tiny partial-aggregated
-    shuffles (bucket-min of member labels, doc-min of bucket labels) and
-    converges in half the bucket-graph diameter. ``driver_max_edges=None``
-    (or 0) forces the distributed path.
+    A null doc id or null bucket links nothing: those rows are dropped
+    before either path runs, so every node still gets one row and a
+    node whose only buckets are null is a singleton.
+
+    An assignment table of at most ``driver_max_edges`` rows is labeled
+    by :func:`_driver_labels`, the driver branch shared with
+    :func:`connected_components`: one bounded probe collects it and a
+    union-find over node ids and tagged bucket keys labels it — identical
+    min-label result, none of the per-round join/checkpoint/convergence
+    jobs; the full node set never collects (nodes without buckets stay
+    distributed as singletons). Above the cap — the 100 TB path — each
+    round alternates two tiny partial-aggregated shuffles (bucket-min of
+    member labels, doc-min of bucket labels) and converges in half the
+    bucket-graph diameter. ``driver_max_edges=None`` (or 0) forces the
+    distributed path.
     """
-    assign = assignments.select(
-        F.col(id_col).alias("node"), F.col(bucket_col).alias("bkey")
-    ).persist()
+    assign = (
+        assignments.select(
+            F.col(id_col).alias("node"), F.col(bucket_col).alias("bkey")
+        )
+        .filter(F.col("node").isNotNull() & F.col("bkey").isNotNull())
+        .persist()
+    )
+    labeled = _driver_labels(
+        assign, nodes, id_col, driver_max_edges or 0, bipartite=True
+    )
+    if labeled is not None:
+        assign.unpersist()
+        return labeled
     all_labels = nodes.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("cluster_id")
     )
-    # same one-job probe+collect as connected_components: limit ≤ total
-    # returns the full assignment table, so a fitting table is collected
-    # by its own probe instead of a count job followed by toPandas
-    pdf = (
-        assign.limit(driver_max_edges + 1).toPandas()
-        if driver_max_edges
-        else None
-    )
-    if pdf is not None and len(pdf) <= driver_max_edges:
-        find = _driver_union_find(
-            (("n", n), ("b", b)) for n, b in zip(pdf["node"], pdf["bkey"])
-        )
-        seen = set(pdf["node"])
-        best: dict = {}
-        for n in seen:
-            r = find(("n", n))
-            if r not in best or n < best[r]:
-                best[r] = n
-        id_type = nodes.schema[id_col].dataType
-        # size-proportional slicing — same rationale as the pairwise path
-        mdf = local_rows_df(
-            nodes.sparkSession,
-            [(_py(n), _py(best[find(("n", n))])) for n in seen],
-            StructType(
-                [
-                    StructField("node", id_type),
-                    StructField("__cl", id_type),
-                ]
-            ),
-        )
-        assign.unpersist()
-        return (
-            all_labels.drop("cluster_id")
-            .join(F.broadcast(mdf), "node", "left")
-            .select(
-                F.col("node").alias(id_col),
-                F.coalesce("__cl", "node").alias("cluster_id"),
-            )
-        )
-    del pdf  # cap+1-row probe frame: release before the propagation loop
     # Nodes with no bucket (e.g. empty docs with zero shingles) are
     # singletons: the first hop's inner join on node drops them from the
     # iteration automatically — at corpus scale that whole population rides

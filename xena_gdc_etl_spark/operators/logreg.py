@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from xena_gdc_etl_spark.operators.partitioning import collect_at_most
+
 __all__ = ["logistic_train", "logistic_train_step", "logistic_predict", "loss"]
 
 
@@ -81,10 +83,11 @@ def logistic_train(
       ``driver_max_rows`` is calibrated for d=3 (2M × 4 doubles ≈ 64 MB)
       and the effective row cap scales as ``4/(d+1)`` so a wide feature
       list cannot balloon the collect (d=100 would otherwise pull
-      ≈1.6 GB). The path probe is a LIMIT-bounded count (scans at most
-      cap+1 rows) — the distributed path never pays a full input scan
-      just to pick the path; it learns the true n from its own first
-      gradient aggregate.
+      ≈1.6 GB). The path probe IS that collect, bounded to cap+1 rows
+      (``partitioning.collect_at_most``) — a fitting input is collected
+      by its own probe, and the distributed path never pays a full input
+      scan just to pick the path; it learns the true n from its own
+      first gradient aggregate.
     - otherwise (the 100 TB path): one job per round — an Arrow-batched
       partial gradient per partition (numpy sigmoid + BLAS ``errᵀ·X``
       under the *broadcast* weights) folds into a d+2-column JVM ``sum``
@@ -110,14 +113,14 @@ def logistic_train(
     gcols = [f"g{i}" for i in range(d)]
     xcols = [f"__x{i}" for i in range(d)]
     effective_cap = _effective_driver_cap(driver_max_rows, d)
-    # LIMIT-bounded path probe: scans at most cap+1 rows, so a 100 TB
-    # input pays ~cap rows here, not a full count — the distributed
-    # path's first gradient aggregate supplies the true n
-    probe = base.limit(effective_cap + 1).count()
-    if not probe:
+    # one bounded probe-and-collect: a 100 TB input pays ~cap rows here,
+    # not a full count — the distributed path's first gradient aggregate
+    # supplies the true n. A zero cap still probes one row, so an empty
+    # input fails here on either path.
+    pdf = collect_at_most(base, effective_cap, pandas=True)
+    if pdf is not None and pdf.empty:
         raise ValueError("logistic_train: input has no rows")
-    if probe <= effective_cap:
-        pdf = base.toPandas()
+    if pdf is not None:
         # the same loop _reference_train pins the distributed path
         # against — shared, not re-implemented, so the two can't diverge
         return _gd_loop(

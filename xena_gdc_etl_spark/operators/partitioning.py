@@ -121,6 +121,17 @@ def local_rows_df(spark, rows: list, schema, rows_per_slice: int = 50_000):
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, n), schema)
 
 
+def collect_at_most(df: DataFrame, cap: int, pandas: bool = False):
+    """The one driver-shortcut probe: ONE ``limit(cap + 1)`` action is
+    both the size check and the collect. Returns the rows (a pandas frame
+    with ``pandas=True``) when ``df`` has at most ``cap``, else ``None``.
+    ``toPandas`` runs a limit as one job at any partition count;
+    ``collect`` scans incrementally, one job per partition wave."""
+    small = df.limit(cap + 1)
+    rows = small.toPandas() if pandas else small.collect()
+    return rows if len(rows) <= cap else None
+
+
 def spread(
     df: DataFrame,
     parallelism: int | None = None,

@@ -29,6 +29,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from xena_gdc_etl_spark.operators.partitioning import collect_at_most
+
+
 def _safe_norms(m: np.ndarray) -> np.ndarray:
     """Row L2 norms with zeros replaced by 1.0 — a zero vector then keeps
     cosine 0.0 against everything instead of poisoning the matmul with NaN
@@ -58,8 +61,8 @@ SPREAD_MIN_MATMUL_BYTES = int(
 def _collect_bounded(df: DataFrame, what: str, limit: int) -> list:
     """Collect a deliberately-small DataFrame, failing clearly (instead of
     an opaque driver OOM) when it exceeds ``limit`` rows."""
-    rows = df.limit(limit + 1).collect()
-    if len(rows) > limit:
+    rows = collect_at_most(df, limit)
+    if rows is None:
         raise ValueError(
             f"{what} has more than {limit} rows — this side is collected "
             "to the driver and broadcast, so it must stay small; raise "
@@ -1295,13 +1298,11 @@ def semantic_dedup(
     Plan: candidate pairs come cell-bucketed from ``cosine_dup_pairs``
     (never global O(n²); hot cells sub-shard into block-pair tasks, so
     the pair set is exact and matches a caps-free oracle); clusters are
-    connected components over the
-    pair graph, run through the bipartite propagation engine
-    (``connected_components_bipartite``, dedup.py) by treating every pair
-    as a 2-member bucket node — O(pairs) edges, aggregate-only driver
-    loop, the same 100 TB shape as the MinHash cluster path. The keep
-    decision (smallest id represents the cluster) is a projection off the
-    labels, not a per-cluster window.
+    ``connected_components`` (dedup.py) over the τ-pair graph itself —
+    a union-find on the driver under its measured edge cap, the
+    alternating-star contraction above it. The keep decision (smallest id
+    represents the cluster) is a projection off the labels, not a
+    per-cluster window.
 
     Returns (id, cluster_id, keep ∈ {0,1}); singletons keep themselves.
 
@@ -1314,22 +1315,14 @@ def semantic_dedup(
     τ, so the caller owns that consistency (the workload cache keys on
     (sf_dir, τ) for exactly this reason).
     """
-    from xena_gdc_etl_spark.operators.dedup import (
-        connected_components_bipartite,
-    )
+    from xena_gdc_etl_spark.operators.dedup import connected_components
 
     if pairs is None:
         pairs = cosine_dup_pairs(
             assigned, id_col=id_col, vec_col=vec_col,
             centroid_id=centroid_id, threshold=threshold,
         )
-    bkey = F.concat_ws("_", F.col("a"), F.col("b")).alias("bkey")
-    edges = pairs.select(F.col("a").alias(id_col), bkey).unionByName(
-        pairs.select(F.col("b").alias(id_col), bkey)
-    )
-    labels = connected_components_bipartite(
-        assigned.select(id_col), edges, id_col=id_col
-    )
+    labels = connected_components(pairs, assigned.select(id_col), id_col=id_col)
     return labels.select(
         F.col(id_col),
         F.col("cluster_id"),

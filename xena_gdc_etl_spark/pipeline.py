@@ -26,7 +26,11 @@ from xena_gdc_etl_spark.gdc_pipelines import (
     transform_segment_dtype,
 )
 from xena_gdc_etl_spark.metadata import build_metadata, write_metadata
-from xena_gdc_etl_spark.sources.xena_tsv import write_xena_tsv
+from xena_gdc_etl_spark.sources.xena_tsv import write_wide_tsv, write_xena_tsv
+
+
+def _projects_str(projects: str | list[str]) -> str:
+    return ",".join(projects) if isinstance(projects, list) else projects
 
 
 @dataclass
@@ -89,29 +93,19 @@ class XenaDatasetSpark:
     # -- step 3: sink + metadata sidecar -----------------------------------
     @property
     def matrix_dir(self) -> str:
-        projects = (
-            ",".join(self.projects)
-            if isinstance(self.projects, list)
-            else self.projects
-        )
         # reference layout: <root>/<projects>/Xena_Matrices (xena_dataset.py:460)
-        return os.path.join(self.root_dir, projects, "Xena_Matrices")
+        return os.path.join(
+            self.root_dir, _projects_str(self.projects), "Xena_Matrices"
+        )
 
     def export(self, matrix: DataFrame, name: str | None = None) -> str:
-        projects = (
-            ",".join(self.projects)
-            if isinstance(self.projects, list)
-            else self.projects
-        )
-        name = name or f"{projects}.{self.xena_dtype}.tsv"
+        name = name or f"{_projects_str(self.projects)}.{self.xena_dtype}.tsv"
         out = os.path.join(self.matrix_dir, name)
         if DTYPE_SPECS[self.xena_dtype].kind == "matrix":
             write_xena_tsv(matrix, out)
         else:
             # segment/MAF matrices are row-stacked tables, not pivoted
-            matrix.coalesce(1).write.options(
-                sep="\t", header=True, nullValue="NA"
-            ).mode("overwrite").csv(out)
+            write_wide_tsv(matrix, out)
         self.metadata(out)
         return out
 
@@ -126,10 +120,6 @@ class XenaDatasetSpark:
         """download → transform → export, as the reference's CLI does per
         dataset (main.py etl subcommand)."""
         return self.export(self.transform(self.load(spark, source_path)))
-
-
-def _projects_str(projects: str | list[str]) -> str:
-    return ",".join(projects) if isinstance(projects, list) else projects
 
 
 @dataclass
@@ -213,9 +203,7 @@ class GDCPhenosetSpark:
     def export(self, matrix: DataFrame, name: str | None = None) -> str:
         name = name or f"{_projects_str(self.projects)}.{self.xena_dtype}.tsv"
         out = os.path.join(self.matrix_dir, name)
-        matrix.coalesce(1).write.options(
-            sep="\t", header=True, nullValue="NA"
-        ).mode("overwrite").csv(out)
+        write_wide_tsv(matrix, out)
         meta = build_metadata(
             self.projects, "clinical", out, self.gdc_release
         )
@@ -269,9 +257,7 @@ class GDCSurvivalsetSpark:
         # Xena's header spells it "OS.time" (xena_dataset.py:1545); the
         # engine keeps OS_time internally (dots in Spark names fight column
         # resolution) and renames only at the sink.
-        matrix.withColumnRenamed("OS_time", "OS.time").coalesce(1).write.options(
-            sep="\t", header=True, nullValue="NA"
-        ).mode("overwrite").csv(out)
+        write_wide_tsv(matrix.withColumnRenamed("OS_time", "OS.time"), out)
         meta = build_metadata(self.projects, "survival", out, self.gdc_release)
         write_metadata(meta, out)
         return out

@@ -64,33 +64,36 @@ def write_manifest(
     loss/truncation/corruption, not an adversarial MAC.) Re-running the
     manifest on a re-written dataset is the cheap way to verify a 100 TB
     copy landed intact — no file listing, no byte comparison.
+
+    More than ``max_partitions`` distinct partition-key tuples raise a
+    ``ValueError``. The check is the bounded collect of the keyed
+    aggregate itself, so an over-wide key is rejected after the aggregate
+    job has run, not before it.
     """
-    import json
     import os
 
     from pyspark.sql import functions as F
 
+    from xena_gdc_etl_spark.operators.partitioning import collect_at_most
+
     keys = list(partition_by)
+    # decimal(38,0) partial sums: |hash| ≤ 2^63 ≈ 9.2e18, so even 10^19
+    # rows stay under the 38-digit cap — no overflow at any real scale
+    row_hash = F.xxhash64(*[F.col(c) for c in df.columns]).cast("decimal(38,0)")
+    aggs = [F.count(F.lit(1)).alias("rows"), F.sum(row_hash).alias("digest")]
     if keys:
         # the manifest is driver-sized by construction ONLY if the
         # partition key space is — fail loudly instead of OOMing the
         # driver when someone passes a high-cardinality key
-        n_parts = df.select(*keys).distinct().limit(max_partitions + 1).count()
-        if n_parts > max_partitions:
+        grouped = collect_at_most(df.groupBy(*keys).agg(*aggs), max_partitions)
+        if grouped is None:
             raise ValueError(
                 f"write_manifest: >{max_partitions} distinct partition-key "
                 "tuples; a manifest this wide is not driver-sized — "
                 "partition on a coarser key or raise max_partitions"
             )
-    # decimal(38,0) partial sums: |hash| ≤ 2^63 ≈ 9.2e18, so even 10^19
-    # rows stay under the 38-digit cap — no overflow at any real scale
-    row_hash = F.xxhash64(*[F.col(c) for c in df.columns]).cast("decimal(38,0)")
-    aggs = [F.count(F.lit(1)).alias("rows"), F.sum(row_hash).alias("digest")]
-    grouped = (
-        df.groupBy(*keys).agg(*aggs).collect()
-        if keys
-        else df.agg(*aggs).collect()
-    )
+    else:
+        grouped = df.agg(*aggs).collect()
     parts = [
         {
             # partition-key values to JSON-safe forms: date/timestamp/

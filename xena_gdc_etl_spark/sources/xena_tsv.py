@@ -81,10 +81,10 @@ def write_xena_tsv(
     Pivot width = number of samples; exporting is only sane for bounded
     sample sets, which is exactly the reference's use case (TCGA cohorts
     top out near 11k samples; pan-cancer ~12.6k). The distinct sample list
-    becomes the output HEADER, so it is collected driver-side through the
-    bounded-collect guard (similarity._collect_bounded): an over-wide
-    pivot — a driver-OOM-by-collect otherwise — fails with an actionable
-    error naming the ``max_columns`` knob.
+    becomes the output HEADER, so it is collected driver-side by the
+    bounded probe (``partitioning.collect_at_most``): an over-wide pivot
+    — a driver-OOM-by-collect otherwise — fails with an actionable
+    ``ValueError`` naming the ``max_columns`` knob.
 
     ``feature_header`` renames the output's first (index) column; the
     reference preserves the input matrix's index header (e.g.
@@ -93,20 +93,18 @@ def write_xena_tsv(
     """
     from pyspark.sql import functions as F
 
-    from xena_gdc_etl_spark.operators.similarity import _collect_bounded
+    from xena_gdc_etl_spark.operators.partitioning import collect_at_most
 
-    try:
-        sample_rows = _collect_bounded(
-            long_df.select(sample_col).distinct().orderBy(sample_col),
-            f"write_xena_tsv: the distinct {sample_col!r} set (the output "
-            "header)",
-            max_columns,
-        )
-    except ValueError as e:
+    sample_rows = collect_at_most(
+        long_df.select(sample_col).distinct().orderBy(sample_col), max_columns
+    )
+    if sample_rows is None:
         raise ValueError(
-            f"{e} — a pivot this wide is not driver-sized (and not a sane "
-            "TSV); export a bounded cohort or raise max_columns"
-        ) from None
+            f"write_xena_tsv: the distinct {sample_col!r} set (the output "
+            f"header) has more than {max_columns} rows — a pivot this wide "
+            "is not driver-sized (and not a sane TSV); export a bounded "
+            "cohort or raise max_columns"
+        )
     samples = [r[0] for r in sample_rows]
     wide = (
         long_df.groupBy(feature_col)

@@ -1424,8 +1424,8 @@ def embed_cosine_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # 27b. Semantic dedup (SemDeDup): embedding near-dup pairs → connected
 #      components → keep one representative per cluster. The Spark side
-#      runs the bipartite min-label propagation engine (pair = 2-member
-#      bucket); the oracle closes the same pair graph with a recursive CTE.
+#      runs connected_components on the τ-pairs; the oracle closes the
+#      same pair graph with a recursive CTE.
 # --------------------------------------------------------------------------
 @query(
     "semantic_dedup",
