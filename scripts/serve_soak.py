@@ -59,9 +59,11 @@ BASKET = [
 
 # --evict basket: EVERY seam-bearing registered query (12 seam
 # registrations per iteration — winnow_contamination and
-# incremental_keep_decisions register 2 each — against SEAM_CAP=8), so
-# FIFO cap-eviction fires 4× per iteration, every iteration. This is the
-# r13-documented eviction-broadcast-misplan risk run hot: each query
+# incremental_keep_decisions register 2 each). The soak runs it with the
+# seam store's byte budget at 0, a SEAM_CAP=8 FIFO, so eviction fires 4×
+# per iteration, every iteration (at the default budget these few MB all
+# stay held). This is the r13-documented eviction-broadcast-misplan risk
+# run hot: each query
 # consumes its plan before the next registers, so evicted seams are
 # always already-consumed — the soak pins that the discipline holds
 # under sustained eviction pressure (rows stable, no wall/heap creep,
@@ -188,6 +190,10 @@ def main() -> None:
     from xena_gdc_etl_spark.session import get_spark
 
     spark = get_spark(app_name="serve-soak")
+    if evict:
+        from xena_gdc_etl_spark.operators import seams
+
+        seams._BUDGET_FRACTION = 0.0
     try:
         out = run_soak(
             spark, sf_dir, iters, EVICT_BASKET if evict else BASKET

@@ -5,6 +5,7 @@ does NOT accumulate cached frames for the session's lifetime."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from xena_gdc_etl_spark.operators import seams
@@ -22,10 +23,28 @@ def _fresh(spark):
     spark.catalog.clearCache()
 
 
+def _cached_bytes(spark) -> int:
+    """The block manager's cached bytes, memory plus disk."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(i.memSize() + i.diskSize() for i in infos)
+
+
+def _in_cache(spark, df) -> bool:
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).isDefined()
+
+
+@pytest.fixture
+def zero_budget(monkeypatch):
+    """The seam bound with no byte budget: a SEAM_CAP-entry FIFO."""
+    monkeypatch.setattr(seams, "_BUDGET_FRACTION", 0.0)
+
+
 def test_release_empties_cache_manager(spark):
     _fresh(spark)
     df = spark.range(100).selectExpr("id", "id % 7 as k")
     s = seam(df.groupBy("k").agg(F.count(F.lit(1)).alias("n")))
+    assert stats(spark)["seam", "bytes"] == _cached_bytes(spark) > 0
     assert s.count() == 7
     assert not _cache_empty(spark)
     assert release(spark, "seam") == 1
@@ -43,7 +62,7 @@ def test_same_plan_reregisters_one_slot(spark):
     assert _cache_empty(spark)
 
 
-def test_registry_bounded_evicts_oldest(spark):
+def test_registry_bounded_evicts_oldest(spark, zero_budget):
     _fresh(spark)
     for i in range(seams.SEAM_CAP + 4):
         # distinct literals -> distinct plans -> distinct seams
@@ -76,7 +95,7 @@ def test_operators_leave_no_unreleased_persist(spark, sf_dir):
     assert _cache_empty(spark)
 
 
-def test_evicted_seam_recomputes_correctly(spark):
+def test_evicted_seam_recomputes_correctly(spark, zero_budget):
     """Eviction past the cap unpersists a seam an unconsumed plan may
     still reference — the plan must silently recompute, not fail."""
     _fresh(spark)
@@ -121,7 +140,7 @@ def test_serving_soak_memory_bounded(spark, sf_dir):
     )
 
 
-def test_eviction_counter_tracks_cap_evictions(spark):
+def test_eviction_counter_tracks_cap_evictions(spark, zero_budget):
     """seams.EVICTIONS grows by exactly (registrations - SEAM_CAP) when
     a loop registers past the cap — the observability hook the --evict
     soak (scripts/serve_soak.py) reads to prove eviction actually fired
@@ -167,7 +186,7 @@ def test_concurrent_tier_builds_once(spark, sf_dir):
     assert _cache_empty(spark)
 
 
-def test_concurrent_seams_bounded_and_counted(spark):
+def test_concurrent_seams_bounded_and_counted(spark, zero_budget):
     """8 threads registering 40 distinct seams leave exactly SEAM_CAP = 8
     entries, and the process-wide EVICTIONS total and the session's
     eviction count both grow by exactly 32."""
@@ -194,7 +213,7 @@ def test_concurrent_seams_bounded_and_counted(spark):
     assert _cache_empty(spark)
 
 
-def test_eviction_pressure_soak_results_stable(spark, sf_dir):
+def test_eviction_pressure_soak_results_stable(spark, sf_dir, zero_budget):
     """The r13-documented eviction risk, run hot (r14 verdict task 7):
     a serving basket with MORE seam registrations per iteration than
     SEAM_CAP must evict every iteration AND keep results identical and
@@ -223,3 +242,132 @@ def test_eviction_pressure_soak_results_stable(spark, sf_dir):
     assert all(
         r["seams_evicted"] >= 1 for r in out["iterations"]
     ), out["iterations"]
+
+
+def test_held_filled_seam_hit_fires_no_job(spark, job_ids):
+    """Re-registering a held, filled seam is a hit that fires no job and
+    hands the caller its own frame, served from the cached relation."""
+    _fresh(spark)
+
+    def frame():
+        return spark.range(1000).selectExpr("id % 13 as k").distinct()
+
+    seam(frame())
+    hits = stats(spark)["seam", "hits"]
+    mine = frame()
+    out, jobs = job_ids(lambda: seam(mine))
+    assert jobs == []
+    assert out is mine
+    assert stats(spark)["seam", "hits"] - hits == 1
+    assert "InMemoryRelation" in out._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(r["k"] for r in out.collect()) == list(range(13))
+    assert release(spark, "seam") == 1
+    assert _cache_empty(spark)
+
+
+def test_cyclic_seams_past_cap_hit_at_default_budget(spark, job_ids):
+    """A loop over SEAM_CAP + 1 distinct seams, run twice, fits the byte
+    budget: nothing is evicted and the second pass fires no fill job."""
+    _fresh(spark)
+
+    def frames():
+        return [
+            spark.range(30 + i).selectExpr(f"id * {i + 3} as v")
+            for i in range(seams.SEAM_CAP + 1)
+        ]
+
+    evictions = stats(spark)["seam", "evictions"]
+    for f in frames():
+        seam(f)
+    second = frames()
+    _, jobs = job_ids(lambda: [seam(f) for f in second])
+    assert jobs == []
+    assert stats(spark)["seam", "evictions"] == evictions
+    assert stats(spark)["seam", "entries"] == seams.SEAM_CAP + 1
+    assert release(spark, "seam") == seams.SEAM_CAP + 1
+    assert _cache_empty(spark)
+
+
+def test_over_budget_evicts_oldest_beyond_newest_cap(spark, monkeypatch):
+    """With the budget below the held bytes, each registration past
+    SEAM_CAP evicts and unpersists the oldest seam; the newest SEAM_CAP
+    are never evicted."""
+    _fresh(spark)
+    monkeypatch.setattr(seams, "_BUDGET_FRACTION", 1e-12)
+    evictions = stats(spark)["seam", "evictions"]
+    held = []
+    for i in range(seams.SEAM_CAP + 3):
+        held.append(seam(spark.range(40 + i).selectExpr(f"id + {300 + i} as v")))
+        assert all(_in_cache(spark, f) for f in held[-seams.SEAM_CAP:])
+        assert not any(_in_cache(spark, f) for f in held[: -seams.SEAM_CAP])
+    assert stats(spark)["seam", "evictions"] - evictions == 3
+    assert release(spark, "seam") == seams.SEAM_CAP
+    assert _cache_empty(spark)
+
+
+def test_older_seams_stay_while_bytes_fit(spark, monkeypatch):
+    """Eviction stops once the reading, less each evicted seam's cached
+    bytes, fits the budget: the big oldest seam goes, and a small seam
+    beyond the newest SEAM_CAP stays."""
+    _fresh(spark)
+    big = seam(spark.range(200_000).selectExpr("id", "id * 7 as w"))
+    small = [
+        seam(spark.range(20 + i).selectExpr(f"id + {400 + i} as v"))
+        for i in range(seams.SEAM_CAP)
+    ]
+    cached, most = seams._storage(spark)
+    big_bytes = cached[seams._filled_rdd(big)]
+    assert big_bytes > 2**17
+    # room for everything held but `big`, plus one more small seam
+    budget = sum(cached.values()) - big_bytes + 2**16
+    monkeypatch.setattr(seams, "_BUDGET_FRACTION", budget / most)
+    evictions = stats(spark)["seam", "evictions"]
+    newest = seam(spark.range(30).selectExpr("id + 500 as v"))
+    assert stats(spark)["seam", "evictions"] - evictions == 1
+    assert stats(spark)["seam", "entries"] == seams.SEAM_CAP + 1
+    assert not _in_cache(spark, big)
+    assert all(_in_cache(spark, f) for f in small + [newest])
+    assert release(spark, "seam") == seams.SEAM_CAP + 1
+    assert _cache_empty(spark)
+
+
+def test_evicted_plan_registered_again_is_filled_again(
+    spark, job_ids, zero_budget
+):
+    _fresh(spark)
+
+    def first():
+        return spark.range(500).selectExpr("id % 17 as k").distinct()
+
+    seam(first())
+    for i in range(seams.SEAM_CAP):
+        seam(spark.range(5 + i).selectExpr(f"id * {i + 50} as v"))
+    assert not _in_cache(spark, first())
+    misses = stats(spark)["seam", "misses"]
+    again = first()
+    out, jobs = job_ids(lambda: seam(again))
+    assert jobs, "an evicted plan registered again must be filled again"
+    assert stats(spark)["seam", "misses"] - misses == 1
+    assert seams._filled_rdd(out) is not None
+    release(spark, "seam")
+    assert _cache_empty(spark)
+
+
+def test_consumed_lazy_seam_charged_its_cached_bytes(spark):
+    """An eager=False seam filled by its consumer is charged what the
+    block manager caches for it, read at the next registration."""
+    _fresh(spark)
+    lazy = seam(spark.range(100_000).selectExpr("id", "id % 5 as k"), eager=False)
+    before = stats(spark)["seam", "bytes"]
+    assert seams._filled_rdd(lazy) is None
+    assert lazy.count() == 100_000  # the consumer fills the cache
+    other = seam(spark.range(10).selectExpr("id + 600 as v"))
+    cached, _ = seams._storage(spark)
+    lazy_bytes = cached[seams._filled_rdd(lazy)]
+    assert lazy_bytes > 0
+    assert (
+        stats(spark)["seam", "bytes"] - before
+        == lazy_bytes + cached[seams._filled_rdd(other)]
+    )
+    assert release(spark, "seam") == 2
+    assert _cache_empty(spark)

@@ -1,7 +1,7 @@
 """One per-session artifact store: the shared workload tiers and the
 operator-internal persist seams.
 
-Per session the store maps a NAME to a bounded FIFO of ``key → value``
+Per session the store maps a NAME to an ordered ``key → value`` slot
 under one re-entrant lock, counts hits, misses and evictions per name,
 and unpersists any DataFrame it pushes out. It has two uses:
 
@@ -24,29 +24,46 @@ and unpersists any DataFrame it pushes out. It has two uses:
   (an unfilled InMemoryRelation reports its child's estimate — the same
   lie; both baited corpus-sized broadcasts at the 100x lane, see
   ``dedup.containment_pairs``). Seams are keyed by the plan's semantic
-  hash — a repeated call with the same inputs refreshes the same entry
-  (Spark's CacheManager already dedupes same-plan ``persist()`` calls,
-  so the store mirrors what the JVM caches) instead of growing — and a
-  session holds at most ``SEAM_CAP`` of them, so a serving session no
-  longer accumulates cached frames until block-level LRU churns.
+  hash, so one slot tracks one JVM cache entry (Spark's CacheManager
+  dedupes same-plan ``persist()`` calls). A repeated call with the same
+  inputs is a HIT: when the JVM entry is already filled it fires no
+  job — the caller gets its own frame back, and the CacheManager swaps
+  the cached relation in by plan wherever that frame is used, so its
+  column references resolve and the planner still sees the filled
+  cache's actual bytes.
 
-Registering a seam beyond the cap unpersists the OLDEST one. With <=2
-seams per operator call, an in-flight plan's seams are only evicted if
-the caller interleaves 4+ other seam-bearing operators before consuming.
-The fallout of that eviction is WORSE than a silent recompute: a
-downstream join over the evicted seam plans from the child's size
-ESTIMATE again (the eager fill's actual-bytes statistics die with the
-cache entry), which re-opens the mis-sized corpus-scale broadcast
-failure the eager fill exists to prevent — explode fan-out hidden by
-static stats can bait a broadcast of a corpus-sized side. Callers that
-build many seam-bearing plans before executing any of them must consume
-as they go; the in-repo operators consume each plan before registering
-4 more, so the cap is safe for every registered query.
+The seam bound is the block manager's own figure, not an entry count:
 
-``release(spark, name=None)`` deterministically unpersists what the
-store holds (one name, or everything) — the between-queries hook for
-benches and serving loops that want the cache manager empty.
-``stats(spark)`` reads the per-name counters.
+- the newest ``SEAM_CAP`` seams are always held;
+- older seams stay while the session's cached bytes (memory plus disk,
+  ``getRDDStorageInfo``) fit within half of the block managers' maximum
+  storage memory (``_BUDGET_FRACTION``), so a serving loop that repeats
+  a few more plans than ``SEAM_CAP`` hits instead of refilling;
+- past that budget the oldest beyond the newest ``SEAM_CAP`` are
+  unpersisted first, each taking its cached bytes off the reading. A
+  storage figure that cannot be read counts as over budget, and a
+  fraction of 0 leaves a plain ``SEAM_CAP``-entry FIFO.
+
+Eviction only ever reaches seams older than the newest ``SEAM_CAP``.
+With <=2 seams per operator call, an in-flight plan's seams are only
+evicted if the caller interleaves 4+ other seam-bearing operators before
+consuming. The fallout of that eviction is WORSE than a silent
+recompute: a downstream join over the evicted seam plans from the
+child's size ESTIMATE again (the eager fill's actual-bytes statistics
+die with the cache entry), which re-opens the mis-sized corpus-scale
+broadcast failure the eager fill exists to prevent — explode fan-out
+hidden by static stats can bait a broadcast of a corpus-sized side.
+Callers that build many seam-bearing plans before executing any of them
+must consume as they go; the in-repo operators consume each plan before
+registering 4 more, so the floor is safe for every registered query.
+
+A held seam serves its cached rows until it is released or evicted,
+just as a CacheManager entry does: rewriting the files under a held
+seam's plan does not refresh it. ``release(spark, name=None)``
+deterministically unpersists what the store holds (one name, or
+everything) — the between-queries hook for benches and serving loops
+that want the cache manager empty. ``stats(spark)`` reads the per-name
+counters and the last storage reading the seam bound acted on.
 
 The store holds only handles (the cached bytes live in the JVM block
 manager); a session's store dies with the session via the
@@ -65,37 +82,39 @@ from pyspark.sql import DataFrame, SparkSession
 
 SEAM_CAP = 8
 
-# Process-wide total of seam cap evictions, under _LOCK: the eviction-
+# Share of the block managers' maximum storage memory the session's
+# cached bytes may fill before seams older than the newest SEAM_CAP are
+# evicted; 0 evicts past SEAM_CAP unconditionally.
+_BUDGET_FRACTION = 0.5
+
+# Process-wide total of seam evictions, under _LOCK: the eviction-
 # pressure soak (scripts/serve_soak.py --evict) reads its per-iteration
-# delta, which grows by (registrations - SEAM_CAP) for a loop that hits
-# the cap. Per-session counts are in stats().
+# delta, which grows by (registrations - SEAM_CAP) for a loop that
+# overruns the budget. Per-session counts are in stats().
 EVICTIONS = 0
 
 _LOCK = threading.Lock()
 
 
 class _Store:
-    __slots__ = ("lock", "slots", "counts")
+    __slots__ = ("lock", "slots", "counts", "seam_bytes")
 
     def __init__(self) -> None:
         self.lock = threading.RLock()
         self.slots: dict[str, OrderedDict] = {}
         self.counts: Counter = Counter()  # (name, "hits"|"misses"|"evictions")
+        self.seam_bytes: int | None = None  # last reading the bound acted on
 
-    def miss(self, name: str) -> OrderedDict:
-        """Count a miss on ``name`` and evict its oldest entries until
-        one more fits. Caller holds ``self.lock``."""
+    def evict_oldest(self, name: str) -> None:
+        """Pop, count and unpersist ``name``'s oldest entry. Caller holds
+        ``self.lock``."""
         global EVICTIONS
-        self.counts[name, "misses"] += 1
-        slot = self.slots.setdefault(name, OrderedDict())
-        while len(slot) >= (SEAM_CAP if name == "seam" else 1):
-            _, old = slot.popitem(last=False)
-            self.counts[name, "evictions"] += 1
-            if name == "seam":
-                with _LOCK:
-                    EVICTIONS += 1
-            _unpersist(old)
-        return slot
+        _, old = self.slots[name].popitem(last=False)
+        self.counts[name, "evictions"] += 1
+        if name == "seam":
+            with _LOCK:
+                EVICTIONS += 1
+        _unpersist(old)
 
 
 _STORES: "weakref.WeakKeyDictionary[SparkSession, _Store]" = (
@@ -127,11 +146,13 @@ def shared(
     previous entry is unpersisted."""
     st = _store(spark)
     with st.lock:
-        slot = st.slots.get(name)
-        if slot is not None and key in slot:
+        slot = st.slots.setdefault(name, OrderedDict())
+        if key in slot:
             st.counts[name, "hits"] += 1
             return slot[key]
-        slot = st.miss(name)
+        st.counts[name, "misses"] += 1
+        while slot:
+            st.evict_oldest(name)
         slot[key] = value = build()
         return value
 
@@ -146,6 +167,61 @@ def _plan_key(df: DataFrame):
         return id(df._jdf)
 
 
+def _filled_rdd(df: DataFrame) -> int | None:
+    """Id of the RDD that caches ``df``'s plan once every partition is
+    in the block manager; None while unfilled, uncached or unreadable.
+    Fires no job: an unloaded builder is never asked for its RDD."""
+    try:
+        found = (
+            df.sparkSession._jsparkSession.sharedState()
+            .cacheManager()
+            .lookupCachedData(df._jdf)
+        )
+        if found.isDefined():
+            builder = found.get().cachedRepresentation().cacheBuilder()
+            if builder.isCachedColumnBuffersLoaded():
+                return builder.cachedColumnBuffers().id()
+    except Exception:  # pragma: no cover - internal-API drift guard
+        pass
+    return None
+
+
+def _storage(spark: SparkSession) -> tuple[dict[int, int], int] | None:
+    """The block manager's cached bytes (memory plus disk) per RDD id and
+    the block managers' maximum storage memory, or None if unreadable."""
+    try:
+        sc = spark.sparkContext._jsc.sc()
+        cached = {
+            i.id(): i.memSize() + i.diskSize() for i in sc.getRDDStorageInfo()
+        }
+        limits = sc.getExecutorMemoryStatus().values().iterator()
+        most = 0
+        while limits.hasNext():
+            most += limits.next()._1()
+        return cached, most
+    except Exception:  # pragma: no cover - stopped-session race
+        return None
+
+
+def _bound_seams(st: _Store, spark: SparkSession) -> None:
+    """Evict seams beyond the newest ``SEAM_CAP``, oldest first, while
+    the session's cached bytes exceed the budget. Caller holds
+    ``st.lock``."""
+    slot = st.slots["seam"]
+    reading = _storage(spark) if _BUDGET_FRACTION > 0 else None
+    if reading is not None:
+        cached, most = reading
+        held = st.seam_bytes = sum(cached.values())
+    # an unread figure counts as over budget: a SEAM_CAP-entry FIFO
+    while len(slot) > SEAM_CAP and (
+        reading is None or held > _BUDGET_FRACTION * most
+    ):
+        rdd = _filled_rdd(next(iter(slot.values())))
+        st.evict_oldest("seam")
+        if reading is not None:
+            held -= cached.get(rdd, 0)
+
+
 def seam(df: DataFrame, eager: bool = True) -> DataFrame:
     """Persist ``df`` as a bounded, releasable operator-internal seam.
 
@@ -156,23 +232,39 @@ def seam(df: DataFrame, eager: bool = True) -> DataFrame:
     hide explode fan-out). Pass ``eager=False`` for seams whose first
     consumer fills the cache anyway (e.g. a boundary-sample collect) —
     they still get registered for bounded eviction + release.
+
+    The plan key is looked up first: a held seam whose JVM cache entry
+    is filled is a hit that fires no job — its recency is refreshed and
+    ``df`` itself comes back, served from the cached relation. Anything
+    else persists, fills when ``eager``, and then bounds the store (see
+    the module docstring): the newest ``SEAM_CAP`` seams always stay,
+    older ones while the session's cached bytes fit the budget.
     """
-    df = df.persist()
-    if eager:
-        df.count()
     key = _plan_key(df)
     st = _store(df.sparkSession)
     with st.lock:
         slot = st.slots.get("seam")
-        if slot is not None and key in slot:
-            # same plan re-registered: one JVM cache entry, one slot —
-            # refresh recency, do NOT unpersist (it would clear the
-            # shared CacheManager entry under the earlier handle too)
+        if slot is not None and key in slot and _filled_rdd(df) is not None:
             st.counts["seam", "hits"] += 1
             slot.move_to_end(key)
+            return df
+    df = df.persist()
+    if eager:
+        df.count()
+    with st.lock:
+        slot = st.slots.setdefault("seam", OrderedDict())
+        if key in slot:
+            # held but unfilled (or a racing registration): one JVM cache
+            # entry, one slot — refresh recency, do NOT unpersist (it
+            # would clear the shared CacheManager entry under the
+            # earlier handle too)
+            st.counts["seam", "hits"] += 1
+            slot.move_to_end(key)
+            slot[key] = df
         else:
-            slot = st.miss("seam")
-        slot[key] = df
+            st.counts["seam", "misses"] += 1
+            slot[key] = df
+            _bound_seams(st, df.sparkSession)
     return df
 
 
@@ -192,8 +284,12 @@ def release(spark: SparkSession, name: str | None = None) -> int:
 
 def stats(spark: SparkSession) -> Counter:
     """The session's counts, keyed ``(name, kind)`` with kind one of
-    ``hits``, ``misses``, ``evictions`` and ``entries`` (held now)."""
+    ``hits``, ``misses``, ``evictions`` and ``entries`` (held now), plus
+    ``("seam", "bytes")``: the session's cached bytes at the last storage
+    reading the seam bound acted on."""
     st = _store(spark)
     with st.lock:
         held = Counter({(n, "entries"): len(v) for n, v in st.slots.items()})
+        if st.seam_bytes is not None:
+            held["seam", "bytes"] = st.seam_bytes
         return st.counts + held
