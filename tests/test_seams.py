@@ -371,3 +371,37 @@ def test_consumed_lazy_seam_charged_its_cached_bytes(spark):
     )
     assert release(spark, "seam") == 2
     assert _cache_empty(spark)
+
+
+def test_concurrent_repeats_register_each_plan_once(spark):
+    """8 threads each registering the same SEAM_CAP + 2 plans twice at
+    the default budget: every plan misses exactly once, every other
+    registration is a hit, and nothing is evicted."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    _fresh(spark)
+    n = seams.SEAM_CAP + 2
+    before = stats(spark)
+
+    def register(_):
+        for _ in range(2):
+            for i in range(n):
+                seam(spark.range(15 + i).selectExpr(f"id + {700 + i} as v"))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            for f in [pool.submit(register, t) for t in range(8)]:
+                f.result(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    delta = stats(spark)
+    delta.subtract(before)
+    assert delta["seam", "misses"] == n
+    assert delta["seam", "hits"] == 8 * 2 * n - n
+    assert delta["seam", "evictions"] == 0
+    assert stats(spark)["seam", "entries"] == n
+    assert release(spark, "seam") == n
+    assert _cache_empty(spark)

@@ -78,6 +78,7 @@ from collections import Counter, OrderedDict
 from collections.abc import Callable
 from typing import Any
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 SEAM_CAP = 8
@@ -181,7 +182,7 @@ def _filled_rdd(df: DataFrame) -> int | None:
             builder = found.get().cachedRepresentation().cacheBuilder()
             if builder.isCachedColumnBuffersLoaded():
                 return builder.cachedColumnBuffers().id()
-    except Exception:  # pragma: no cover - internal-API drift guard
+    except (Py4JError, AttributeError):  # pragma: no cover - API drift
         pass
     return None
 
@@ -199,7 +200,7 @@ def _storage(spark: SparkSession) -> tuple[dict[int, int], int] | None:
         while limits.hasNext():
             most += limits.next()._1()
         return cached, most
-    except Exception:  # pragma: no cover - stopped-session race
+    except (Py4JError, AttributeError):  # pragma: no cover - stopped session
         return None
 
 
@@ -260,11 +261,10 @@ def seam(df: DataFrame, eager: bool = True) -> DataFrame:
             # earlier handle too)
             st.counts["seam", "hits"] += 1
             slot.move_to_end(key)
-            slot[key] = df
         else:
             st.counts["seam", "misses"] += 1
-            slot[key] = df
-            _bound_seams(st, df.sparkSession)
+        slot[key] = df
+        _bound_seams(st, df.sparkSession)
     return df
 
 
