@@ -63,12 +63,11 @@ BASKET = [
 # seam store's byte budget at 0, a SEAM_CAP=8 FIFO, so eviction fires 4×
 # per iteration, every iteration (at the default budget these few MB all
 # stay held). This is the r13-documented eviction-broadcast-misplan risk
-# run hot: each query
-# consumes its plan before the next registers, so evicted seams are
-# always already-consumed — the soak pins that the discipline holds
-# under sustained eviction pressure (rows stable, no wall/heap creep,
-# evictions growing linearly), not just under the default basket that
-# stays below the cap.
+# run hot: each query consumes its plan before the next registers, so
+# evicted seams are always already-consumed — the soak pins that the
+# discipline holds under sustained eviction pressure (rows stable, no
+# wall/heap creep, evictions growing linearly), not just under the
+# default basket that stays below the cap.
 EVICT_BASKET = [
     "ngram_jaccard",
     "dup_spans",

@@ -32,7 +32,8 @@ and unpersists any DataFrame it pushes out. It has two uses:
   column references resolve and the planner still sees the filled
   cache's actual bytes.
 
-The seam bound is the block manager's own figure, not an entry count:
+The seam bound is a floor of entries under a budget of bytes, read from
+the block manager rather than from any plan statistic:
 
 - the newest ``SEAM_CAP`` seams are always held;
 - older seams stay while the session's cached bytes (memory plus disk,
