@@ -16,6 +16,7 @@ from xena_gdc_etl_spark.functions import md5_hash60
 from xena_gdc_etl_spark.operators.partitioning import (
     collect_at_most,
     local_rows_df,
+    spread,
 )
 from xena_gdc_etl_spark.operators.seams import seam
 from xena_gdc_etl_spark.operators.text import WS_CLASS, WS_RE
@@ -38,28 +39,6 @@ CC_DRIVER_MAX_EDGES = 2_000_000
 def _py(v):
     """numpy scalar → plain python (createDataFrame rejects np types)."""
     return v.item() if hasattr(v, "item") else v
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread to cluster parallelism before a row-inflating explode — but
-    ONLY when the plan says the scan underfills the cores.
-
-    Document tables are compact on disk (one scan partition can hold
-    millions of rows), but shingling/tokenizing inflates rows ~100-300×
-    and adds a digest per row — without a spread an underfilled pipeline
-    runs at scan parallelism (possibly 1 task). The pre-explode shuffle
-    moves only the small un-exploded rows; a 100 TB scan whose input
-    splits already fill the cluster never pays it. The underfill probe
-    is fill-aware and strictly plan-only — see
-    :mod:`xena_gdc_etl_spark.operators.partitioning` for why partition
-    COUNTS (byte-range slices) were the wrong signal and why ``.rdd``
-    probes were unsafe under AQE. Every consumer of this helper
-    aggregates order-invariantly (min-hash, ±1 sums, counts), so the
-    conditional partitioning cannot change results.
-    """
-    from xena_gdc_etl_spark.operators.partitioning import spread
-
-    return spread(df)
 
 
 def _offsets(text_col: str, width: int) -> Column:
@@ -104,7 +83,7 @@ def shingles(
     need it.
     """
     offsets = _offsets(text_col, k)
-    out = _spread(docs).select(
+    out = spread(docs).select(
         F.col(id_col),
         F.explode(offsets).alias("__i"),
         F.col(text_col),
@@ -701,7 +680,7 @@ def simhash(
             f"lane_width must be in [8, 62] (the multiply-spread needs "
             f"lanes < lane_width for carry-free packing); got {lane_width}"
         )
-    tokens = _spread(docs).select(
+    tokens = spread(docs).select(
         F.col(id_col),
         F.explode(F.split(F.col(text_col), WS_RE)).alias("tok"),
     ).filter(F.col("tok") != "")
@@ -977,7 +956,7 @@ def ngram_jaccard_pairs(
     the query loudly (``assert_true`` in the sizes aggregate) instead of
     returning a silently wrong denominator.
     """
-    grams = _spread(docs).select(
+    grams = spread(docs).select(
         F.col(id_col),
         F.col(bucket_col).alias("bucket"),
         F.explode(_offsets(text_col, n)).alias("__i"),
@@ -1115,12 +1094,12 @@ def ngram_contamination(
     from xena_gdc_etl_spark.operators.text import _tokens, ngram_structs
 
     def grams(df: DataFrame) -> DataFrame:
-        # _spread: documents are compact on disk — without the pre-explode
+        # spread: documents are compact on disk — without the pre-explode
         # repartition the tokenize+explode runs at scan parallelism.
         # ngram_structs (codegen tuples), not word_ngrams (interpreted
         # string join): grams are internal keys here, never output, and
         # tuple equality == string equality.
-        return _spread(df).select(
+        return spread(df).select(
             F.col(id_col),
             F.explode(
                 ngram_structs(_tokens(F.lower(F.col(text_col))), n)
@@ -1190,7 +1169,7 @@ def dup_span_stats(
     # broadcasts). Grams are codegen tuples (ngram_structs), not joined
     # strings: internal keys only, tuple distinct == string distinct.
     grams = seam(
-        _spread(docs).select(
+        spread(docs).select(
             F.col(id_col),
             F.explode(
                 F.array_distinct(

@@ -39,16 +39,14 @@ conditional partitioning cannot change results.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 # Per-core byte threshold for the "underfilled" verdict. 16 MiB of
 # compressed parquet per core ≈ one small row group; scans denser than
-# this fill their splits with real rows. Overridable for tests/tuning.
-SPREAD_BYTES_PER_CORE = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_BYTES_PER_CORE", str(16 * 1024 * 1024))
-)
+# this fill their splits with real rows. Read at call time, so tests
+# override it with monkeypatch.setattr and lanes with
+# ``scripts/lanes.py --set partitioning.SPREAD_BYTES_PER_CORE=...``.
+SPREAD_BYTES_PER_CORE = 16 * 1024 * 1024
 
 # Catalyst reports ``spark.sql.defaultSizeInBytes`` (Long.MaxValue by
 # default) for relations it cannot estimate — JDBC scans, stat-less DSv2

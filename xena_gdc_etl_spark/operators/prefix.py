@@ -40,7 +40,6 @@ the cluster.
 from __future__ import annotations
 
 import functools
-import os
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, Window
@@ -69,21 +68,16 @@ _DEFAULT_SAMPLE_CAP = 8192
 # O(hot_rows · preceding) while tail-carry pays a ~4-5 s constant (three
 # scans, five exchanges). §hot-carry-r17/r18 measured plain faster at
 # 1M/4M/16M on a 40 %-hot fixture and tail-carry winning from ~2× that;
-# the default sits at the measured break-even. Env-overridable for
-# clusters whose constant differs.
-_CARRY_MIN_ROWS = int(
-    os.environ.get("SPARK_GRAFT_CARRY_MIN_ROWS", str(24_000_000))
-)
+# the default sits at the measured break-even. Read at call time, so
+# tests override it with monkeypatch.setattr and lanes with
+# ``scripts/lanes.py --set prefix._CARRY_MIN_ROWS=...``.
+_CARRY_MIN_ROWS = 24_000_000
 # Plan-size estimate above which the row-count probe is SKIPPED and
 # tail-carry engages directly: a frame this big is beyond any plausible
 # crossover, and the probe (one column-pruned count pass) would be the
 # only full scan a 100 TB input pays for a decision that is already
 # obvious. Sized ~10× a worst-case 24M-row frame of fat rows.
-_CARRY_COUNT_SKIP_BYTES = int(
-    os.environ.get(
-        "SPARK_GRAFT_CARRY_COUNT_SKIP_BYTES", str(32 * 1024**3)
-    )
-)
+_CARRY_COUNT_SKIP_BYTES = 32 * 1024**3
 
 
 def _below_carry_crossover(df: DataFrame, min_rows: int) -> bool:
@@ -101,10 +95,10 @@ def _below_carry_crossover(df: DataFrame, min_rows: int) -> bool:
     bitwise-identical (see group_rolling's routing comment).
 
     UNKNOWN Catalyst stats (sizeInBytes = Long.Max default — JDBC/RDD
-    sources) count as huge, exactly like _spread's treatment: the skip
-    exists to never probe-scan something web-scale, and an unknown size
-    cannot prove the frame small. Streaming inputs skip the probe too
-    (count() would throw) and keep tail-carry.
+    sources) count as huge, exactly like partitioning.spread's treatment:
+    the skip exists to never probe-scan something web-scale, and an
+    unknown size cannot prove the frame small. Streaming inputs skip the
+    probe too (count() would throw) and keep tail-carry.
     """
     from xena_gdc_etl_spark.operators.partitioning import (
         estimated_size_bytes,

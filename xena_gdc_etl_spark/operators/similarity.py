@@ -12,7 +12,6 @@ ADC) share one broadcast-query batch kernel, :func:`_broadcast_topk`.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Iterator, Sequence
 from typing import NamedTuple
 
@@ -52,10 +51,9 @@ DEFAULT_MAX_BROADCAST_ROWS = 1 << 16
 # partitioning. 4 MiB ≈ 16k d=64 double vectors — a single-core BLAS
 # pass over that is ~ms, far below one repartition exchange + 32 Arrow
 # task round-trips (A/B on the sf0.1 embedding frame: 0.71 s unspread
-# vs 1.00 s spread). Env-overridable for cluster tuning.
-SPREAD_MIN_MATMUL_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_MATMUL_BYTES", str(4 * 1024 * 1024))
-)
+# vs 1.00 s spread). Read at call time, like
+# partitioning.SPREAD_BYTES_PER_CORE.
+SPREAD_MIN_MATMUL_BYTES = 4 * 1024 * 1024
 
 
 def _collect_bounded(df: DataFrame, what: str, limit: int) -> list:

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from xena_gdc_etl_spark.operators.partitioning import spread
 from xena_gdc_etl_spark.operators.seams import seam
 
 # Small, fixed stopword lists for the heuristic language scorer.
@@ -33,18 +34,6 @@ TOKEN_PATTERN = rf"[A-Za-z]+|[0-9]|[^A-Za-z0-9{WS_CLASS}]"
 
 FINGERPRINT_MOD = 1_000_000_007
 FINGERPRINT_BASE = 31
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread to cluster parallelism before a row-inflating tokenize —
-    ONLY when the plan says the scan underfills the cores (same contract
-    as dedup._spread: the fill-aware probe is strictly plan-only — see
-    operators/partitioning.py — a filled 100 TB scan never pays the
-    shuffle, and every consumer here aggregates counts, which are
-    order-invariant)."""
-    from xena_gdc_etl_spark.operators.partitioning import spread
-
-    return spread(df)
 
 
 def _tokens(text_col: Column) -> Column:
@@ -239,7 +228,7 @@ def passage_dedup_stats(
     output is per-doc, so cardinality never exceeds the corpus.
     """
     chunks = (
-        _spread(docs)
+        spread(docs)
         .select(
             F.col(id_col),
             F.explode(word_chunks(_tokens(F.col(text_col)), width)).alias(
@@ -487,14 +476,14 @@ def doc_term_freqs(
     ranking, tf-idf, OOV probing, vocabulary building). One explode + one
     (id, tok) groupBy; an underfilled scan is spread past scan
     parallelism before the explode (document tables are compact on disk;
-    a filled scan skips the shuffle — see _spread).
+    a filled scan skips the shuffle — see partitioning.spread).
 
     A real pipeline materializes this frame ONCE per corpus snapshot (it
     is the token-statistics artifact) and fans every consumer out from it
     — the ``tf=`` parameter on the consumers below is that seam; the
     workload's ``_shared_doc_tf`` session cache is the local analog.
     """
-    toks = _spread(docs).select(
+    toks = spread(docs).select(
         F.col(id_col),
         F.explode(F.split(F.lower(F.col(text_col)), WS_RE)).alias("tok"),
     ).filter(F.col("tok") != "")
@@ -562,7 +551,7 @@ def bigram_logprob_scores(
     # string: it never reaches the output, tuple equality == string
     # equality, and the head word is a field access instead of a
     # split_part re-parse.
-    bigrams = _spread(docs).select(
+    bigrams = spread(docs).select(
         F.col(id_col),
         F.explode(
             ngram_structs(_tokens(F.lower(F.col(text_col))), 2)
@@ -1159,7 +1148,7 @@ def source_vocab_overlap(
     from pyspark.sql import Window
 
     n_shards = 64
-    toks = _spread(docs).select(
+    toks = spread(docs).select(
         F.col(source_col).alias("source"),
         F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok"),
     )

@@ -14,7 +14,6 @@ hash, with columns sorted by name):
 from __future__ import annotations
 
 import os
-
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +24,7 @@ from xena_gdc_etl_spark.operators.text import WS_RE
 from xena_gdc_etl_spark.filters import search
 from xena_gdc_etl_spark.operators import events as ev
 from xena_gdc_etl_spark.operators import mapping as mp
+from xena_gdc_etl_spark.operators.partitioning import spread
 from xena_gdc_etl_spark.operators import matrix as mx
 from xena_gdc_etl_spark.operators import phenotype as ph
 from xena_gdc_etl_spark.operators import snv
@@ -939,9 +939,9 @@ def minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xena_gdc_etl_spark.operators import dedup as dd
 
-    # _spread: the three-regex normalization is the expensive part and
+    # spread: the three-regex normalization is the expensive part and
     # would otherwise run at scan parallelism (compact doc files = 1 task)
-    docs = dd._spread(Catalog(spark, sf_dir).documents)
+    docs = spread(Catalog(spark, sf_dir).documents)
     return dd.dedup_exact(
         docs.withColumn("text", dd.normalize_text("text"))
     )
@@ -1910,13 +1910,13 @@ def json_props_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from xena_gdc_etl_spark.operators import dedup as dd
     from xena_gdc_etl_spark.operators.text import repetition_scores
 
-    # _spread: tokenize+distinct is the expensive part; compact doc files
+    # spread: tokenize+distinct is the expensive part; compact doc files
     # scan as one task locally, so spread past scan parallelism (at real
-    # scale the scan has parallelism and the operator itself is shuffleless)
-    return repetition_scores(dd._spread(Catalog(spark, sf_dir).documents))
+    # scale the scan has parallelism and the operator itself is
+    # shuffleless)
+    return repetition_scores(spread(Catalog(spark, sf_dir).documents))
 
 
 # --------------------------------------------------------------------------
@@ -4028,7 +4028,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def prefix_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xena_gdc_etl_spark.operators import dedup as dd
 
-    docs = dd._spread(Catalog(spark, sf_dir).documents)
+    docs = spread(Catalog(spark, sf_dir).documents)
     return dd.dedup_exact(
         docs.withColumn(
             "text", F.substring(dd.normalize_text("text"), 1, 128)
@@ -4568,7 +4568,7 @@ def salted_event_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 def suffix_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xena_gdc_etl_spark.operators import dedup as dd
 
-    docs = dd._spread(Catalog(spark, sf_dir).documents)
+    docs = spread(Catalog(spark, sf_dir).documents)
     return dd.dedup_exact(
         docs.withColumn(
             "text",
