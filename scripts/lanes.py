@@ -18,8 +18,8 @@ reads at call time: a constant bound as a default argument (for example
 ``dedup.CC_DRIVER_MAX_EDGES``) keeps its import-time value.
 
 ``--gen LABEL=SF,DOCS,VECS`` adds a data dir written by
-``perfbench.fixtures.write_tables(seed=--seed, sf=SF, n_documents=DOCS,
-n_embeddings=VECS)`` under ``--work`` (kept, and reused by a later run
+``perfbench.fixtures.write_tables(seed=1, sf=SF, n_documents=DOCS,
+n_embeddings=VECS)`` under ``.lanes/`` (kept, and reused by a later run
 with the same spec). It holds the TPC-H-like tables, ``documents`` and
 ``embeddings``, but no ``events``.
 
@@ -59,6 +59,7 @@ if ROOT not in sys.path:
 from perfbench.serve import consume  # noqa: E402
 from perfbench.tracing import Tracer  # noqa: E402
 
+GEN_SEED = 1
 _PACKAGES = ("", "xena_gdc_etl_spark.", "xena_gdc_etl_spark.operators.")
 _PHASES = ("analysis_ms", "optimization_ms", "planning_ms")
 
@@ -182,14 +183,14 @@ def run(spark, queries, data, variants=(), trials: int = 3, log=None) -> list[di
     return out
 
 
-def _gen_dir(work: str, seed: int, spec: str) -> tuple[str, str]:
+def _gen_dir(spec: str) -> tuple[str, str]:
     from perfbench.fixtures import write_tables
 
     label, _, sizes = spec.partition("=")
     sf, docs, vecs = sizes.split(",")
-    out = os.path.join(work, f"{label}-{sf}-{docs}-{vecs}-{seed}")
+    out = os.path.join(ROOT, ".lanes", f"{label}-{sf}-{docs}-{vecs}-{GEN_SEED}")
     if not os.path.isdir(out):
-        write_tables(out + ".tmp", seed, sf=float(sf), n_documents=int(docs),
+        write_tables(out + ".tmp", GEN_SEED, sf=float(sf), n_documents=int(docs),
                      n_embeddings=int(vecs))
         os.rename(out + ".tmp", out)
     return label, out
@@ -204,8 +205,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--set", action="append", default=[], dest="variants",
                     metavar="MODULE.NAME=VALUE")
     ap.add_argument("--trials", type=int, default=3)
-    ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--work", default=os.path.join(ROOT, ".lanes"))
     ap.add_argument("--out", default=os.path.join(ROOT, "lanes.json"))
     args = ap.parse_args(argv)
 
@@ -216,10 +215,8 @@ def main(argv: list[str] | None = None) -> int:
     unknown = [q for q in args.query if q not in W.QUERIES]
     if unknown or not (args.data or args.gen):
         ap.error(f"unknown queries {unknown}" if unknown else "give --data or --gen")
-    for variant in args.variants:
-        parse_variant(variant)
     data = [tuple(d.split("=", 1)) for d in args.data]
-    data += [_gen_dir(args.work, args.seed, g) for g in args.gen]
+    data += [_gen_dir(g) for g in args.gen]
 
     # Python workers find the library (and perfbench) through PYTHONPATH.
     os.environ["PYTHONPATH"] = os.pathsep.join(

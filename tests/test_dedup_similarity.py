@@ -663,7 +663,7 @@ def test_norm_outliers_flags_and_null_safety(spark):
 
 def test_cc_dispatch_default_is_the_measured_crossover():
     """The driver/distributed dispatch cap is a measured constant
-    (scripts/cc_crossover.py; BASELINE §cc-crossover): driver strictly
+    (BASELINE §cc-crossover): driver strictly
     faster ≤ 2M edges on both bracket shapes, distributed faster by the
     real 8.5M-edge sf1 graph. Pin the default to the documented
     measurement so a drive-by edit can't silently detach them; both

@@ -138,7 +138,7 @@ def test_bad_mean_path_rejected(spark):
 
 
 def test_auto_threshold_is_row_count_aware(spark):
-    # measured crossover anchors (ivf_mean_dim_probe.json): ≈160 at 2k
+    # measured crossover anchors (BASELINE §mean-dim-r18): ≈160 at 2k
     # rows, 320 at 100k rows, log-interpolated between. d=192 sits
     # between the anchors, so the SAME dim routes arrow on a small frame
     # (threshold 160) and column on a larger one (threshold > 192).

@@ -75,6 +75,14 @@ class Catalog:
     # when a workload touches the same tables repeatedly). Keyed by a weakref
     # to the session so a stopped+collected session never aliases a new one
     # (id() reuse), and dead entries vanish with their session.
+    #
+    # Growth is bounded by the distinct table paths a session reads: one
+    # entry per path, holding an unexecuted plan handle and its file
+    # listing, never rows (nothing here is persisted). A serving session
+    # over one data dir holds at most len(TPCH_TABLES) entries. The one
+    # caller that reads several dirs in a session, scripts/lanes.py,
+    # held 8 after its committed two-dir, four-table run
+    # (``catalog_resolved`` in lanes.json).
     _RESOLVED: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
         weakref.WeakKeyDictionary()
     )

@@ -23,16 +23,15 @@ from xena_gdc_etl_spark.operators.text import WS_CLASS, WS_RE
 
 
 # Driver-union-find vs distributed-alternating-star dispatch cap for the
-# connected-components operators, CHOSEN FROM MEASUREMENT
-# (scripts/cc_crossover.py, local[32]; cc_crossover.json + BASELINE.md
-# §cc-crossover): the driver path is strictly faster through 2M edges on
-# both bracket shapes (clustered 16.4s vs 30.1s, chained 29.9s vs 88.8s at
-# 2M), while the REAL 8.49M-edge sf1 LSH graph flips (distributed 21.5s vs
-# driver 24.6s, BASELINE §sf1) — the crossover sits between 2M and 8.5M,
-# so the default stays at the largest size where the driver side measured
-# faster everywhere. Collect volume at the cap is 2×2M ids ≈ tens of MB —
-# far below driver-memory relevance; above it the distributed path is the
-# safe-and-soon-faster choice.
+# connected-components operators, CHOSEN FROM MEASUREMENT (local[32],
+# BASELINE.md §cc-crossover): the driver path is strictly faster through
+# 2M edges on both bracket shapes (clustered 16.4s vs 30.1s, chained
+# 29.9s vs 88.8s at 2M), while the REAL 8.49M-edge sf1 LSH graph flips
+# (distributed 21.5s vs driver 24.6s, BASELINE §sf1) — the crossover
+# sits between 2M and 8.5M, so the default stays at the largest size
+# where the driver side measured faster everywhere. Collect volume at
+# the cap is 2×2M ids ≈ tens of MB — far below driver-memory relevance;
+# above it the distributed path is the safe-and-soon-faster choice.
 CC_DRIVER_MAX_EDGES = 2_000_000
 
 
@@ -873,7 +872,8 @@ def simhash_pairs(
         # (3.35 vs 3.36 s min). Route by profile and keep the single
         # flatten/transform expression for combination banding — it is
         # the exact form whose 100× lane evidence is pinned
-        # (sf10_spotlane e=0.120), so the scale claim needs no re-pin.
+        # (BASELINE §sf10-r14b, e=0.120), so the scale claim needs no
+        # re-pin.
         # Both forms emit identical rows (equality-checked in the A/B).
         return (
             grouped.select(

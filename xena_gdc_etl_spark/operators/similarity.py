@@ -763,17 +763,17 @@ def ivf_topk(
 # equivalence-pinned at d=64 and the plan shapes are pinned at d=512
 # (tests/test_trainer_mean_path.py).
 #
-# The crossover is ROW-COUNT-dependent (ivf_mean_dim_probe.json, round
-# 18/19): the column path's fixed codegen/compile premium amortizes over
-# rows while the Arrow path's per-row boundary cost does not, so the
-# break-even dim RISES with the row count — measured ≈160 at 2k rows and
-# between 256 (column wins) and 384 (arrow wins) at 100k rows. "auto"
-# interpolates log-linearly between those measured anchors from the
-# PLAN-ONLY size estimate (no probe job — same posture as spread());
-# frames with unknown Catalyst stats fall back to this dim-only
-# constant. Anchors are clamped, never extrapolated: beyond 100k rows
-# the threshold stays at the largest measured value — the plan-size
-# cliff argument for Arrow at real embedding widths is unchanged.
+# The crossover is ROW-COUNT-dependent (BASELINE §mean-dim-r18): the
+# column path's fixed codegen/compile premium amortizes over rows while
+# the Arrow path's per-row boundary cost does not, so the break-even dim
+# RISES with the row count — measured ≈160 at 2k rows and between 256
+# (column wins) and 384 (arrow wins) at 100k rows. "auto" interpolates
+# log-linearly between those measured anchors from the PLAN-ONLY size
+# estimate (no probe job — same posture as spread()); frames with
+# unknown Catalyst stats fall back to this dim-only constant. Anchors
+# are clamped, never extrapolated: beyond 100k rows the threshold stays
+# at the largest measured value — the plan-size cliff argument for Arrow
+# at real embedding widths is unchanged.
 IVF_MEAN_ARROW_MIN_DIM = 256
 _MEAN_CROSSOVER_ANCHORS = ((2_000, 160.0), (100_000, 320.0))
 

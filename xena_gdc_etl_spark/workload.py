@@ -64,7 +64,7 @@ def _shared_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stage (cosine_dup_pairs, O(Σ cell²)) goes quadratic — the round-13
 # 100× lane knee: at 100× the sf0.1 corpus, 8 cells hold ~25k vectors
 # each and the τ-pair stage pays 10,000× the x1 work. Holding cells near
-# 250 rows makes it O(N·250), linear (see ivf_cells_scaling.json for the
+# 250 rows makes it O(N·250), linear (BASELINE §ivf-cells has the
 # measured fixed-vs-scaled A/B). 250 is chosen so the HISTORICAL gate
 # outputs are bit-identical: ceil(2000/250)=8 at sf0.1 and
 # max(8, ceil(500/250))=8 at sf0.01 — exactly the 8 cells every prior
