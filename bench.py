@@ -208,10 +208,10 @@ def main() -> None:
     _lr.logistic_train(
         _wfeat, ["f0", "f1"], "y", iterations=2, driver_max_rows=0
     )
-    # ...and the frozen-state single-round twins. kmeans_round's 64-avg
-    # aggregate compiles a LARGE whole-stage source whose cost is
-    # column-count-specific, so the warm uses the full 64 dims on a
-    # 64-row synthetic frame; logreg_round's plan is cheap but rides
+    # ...and the frozen-state single-round twins. kmeans_round's round
+    # runs the Arrow cell-mean fold (a mapInPandas partial and an
+    # applyInPandas), so the warm runs that same shape at its 64 dims on
+    # a 64-row synthetic frame; logreg_round's plan is cheap but rides
     # along.
     _wv64 = spark.range(64).select(
         F.col("id").alias("vec_id"),
@@ -223,7 +223,7 @@ def main() -> None:
         [(i, [float((i + j) % 5) for j in range(64)]) for i in range(4)],
         "centroid_id long, embedding array<double>",
     )
-    _sim.ivf_train_step(_wv64, _wc64, dim=64).count()
+    _sim.ivf_train_step(_wv64, _wc64).count()
     _lr.logistic_train_step(
         _wfeat, ["f0", "f1"], "y", [0.0, 0.0], 0.0
     ).count()

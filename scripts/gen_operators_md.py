@@ -11,7 +11,8 @@ Columns:
 - impl: workload.py line of the registered query function
 - oracle: `full` (DuckDB oracle, hash-gated) or `rows-only`
 - operators: xena_gdc_etl_spark/operators modules the query's source
-  (plus any `_shared_*` workload helpers it calls) references
+  (plus any `_shared_*` workload helpers it calls) imports, or reaches
+  through a module-level alias of workload.py (`mx.`, `sv.`, ...)
 - streaming twin: streaming/ functions whose docstring names the query
 - knobs: scale/cost knobs the query source sets explicitly (from the
   curated knob-name list below)
@@ -21,6 +22,7 @@ Run:  python scripts/gen_operators_md.py          # rewrites OPERATORS.md
 
 from __future__ import annotations
 
+import ast
 import inspect
 import os
 import re
@@ -57,8 +59,23 @@ def _query_sources(workload, fn) -> str:
     return src
 
 
+def _module_aliases(workload) -> dict[str, str]:
+    """Module-level ``from xena_gdc_etl_spark.operators import X as Y``
+    in workload.py, as {Y: X} (Y is X when there is no ``as``)."""
+    tree = ast.parse(inspect.getsource(workload))
+    return {
+        a.asname or a.name: a.name
+        for node in tree.body
+        if isinstance(node, ast.ImportFrom)
+        and node.module == "xena_gdc_etl_spark.operators"
+        for a in node.names
+    }
+
+
 def build() -> str:
     from xena_gdc_etl_spark import streaming, workload
+
+    aliases = _module_aliases(workload)
 
     twins: dict[str, list[str]] = {}
     for name, fn in inspect.getmembers(streaming, inspect.isfunction):
@@ -88,6 +105,7 @@ def build() -> str:
         mods = sorted(
             set(re.findall(r"operators\.(\w+) import", src))
             | set(re.findall(r"operators import (\w+)", src))
+            | {m for a, m in aliases.items() if re.search(rf"\b{a}\.", src)}
         )
         knobs = sorted(k for k in KNOBS if re.search(rf"\b{k}\s*=", src))
         lines.append(

@@ -8,10 +8,10 @@
         --set similarity.SPREAD_MIN_MATMUL_BYTES=0 --trials 3 --out lanes.json
 
 One invocation is one ``local[--cores]`` session. Every ``--query`` (a
-``workload.QUERIES`` name) runs on every data dir, first with the
-library's defaults and then once per ``--set module.NAME=value``
-variant. A variant is set with ``setattr`` and restored afterwards; the
-module is a dotted path, tried as given and then under
+``workload.QUERIES`` name) runs on every data dir with the library's
+defaults and once per ``--set module.NAME=value`` variant. A variant is
+set with ``setattr`` and restored afterwards; the module is a dotted
+path, tried as given and then under
 ``xena_gdc_etl_spark`` and ``xena_gdc_etl_spark.operators``, and the
 value is a Python literal. ``--set`` reaches only constants the library
 reads at call time: a constant bound as a default argument (for example
@@ -23,12 +23,15 @@ n_embeddings=VECS)`` under ``.lanes/`` (kept, and reused by a later run
 with the same spec). It holds the TPC-H-like tables, ``documents`` and
 ``embeddings``, but no ``events``.
 
-A cell is one (query, data dir, variant). It starts from an empty
-artifact store (``seams.release``), so shared tiers are rebuilt under
-the cell's own constants, then runs once to warm and ``--trials`` times
-the request ``perfbench/serve.py`` times: a ``workload`` span around the
-query builder, an ``exec`` span around the full-row xxhash consumer, and
-the consumed frame's Catalyst phase times. One row per cell goes to
+A cell is one (query, data dir, variant). The cells of one (query,
+data dir) take turns: trial t runs every cell once, in the order
+``(default, *variants)`` rotated by t, so no cell always runs first.
+Each timed request starts from an empty artifact store
+(``seams.release``), so shared tiers are rebuilt under the cell's own
+constants, runs the query once to warm and then once as the request
+``perfbench/serve.py`` times: a ``workload`` span around the query
+builder, an ``exec`` span around the full-row xxhash consumer, and the
+consumed frame's Catalyst phase times. One row per cell goes to
 ``--out``: min and median wall seconds (build + exec), median build
 seconds, and per-trial medians of the build jobs, the exec jobs, stages,
 tasks and shuffle-write bytes, and the Catalyst milliseconds (analysis,
@@ -104,21 +107,20 @@ def _applied(variant: str | None):
         setattr(module, attr, old)
 
 
-def _cell(spark, tracer: Tracer, name: str, data_dir: str, trials: int) -> list:
-    """Warm once, then ``trials`` traced requests; returns one
-    (build span, exec span, (rows, xor)) per trial."""
+def _request(spark, tracer: Tracer, name: str, data_dir: str) -> tuple:
+    """Empty the artifact store, warm once, then one traced request;
+    returns its (build span, exec span, (rows, xor))."""
     from xena_gdc_etl_spark import workload as W
+    from xena_gdc_etl_spark.operators import seams
 
+    seams.release(spark)
     consume(W.QUERIES[name](spark, data_dir))
-    runs = []
-    for _ in range(trials):
-        with tracer.span("workload", name) as build:
-            df = W.QUERIES[name](spark, data_dir)
-        with tracer.span("exec", name) as ex:
-            consumed, got = consume(df)
-        tracer.catalyst(ex, consumed)
-        runs.append((build, ex, got))
-    return runs
+    with tracer.span("workload", name) as build:
+        df = W.QUERIES[name](spark, data_dir)
+    with tracer.span("exec", name) as ex:
+        consumed, got = consume(df)
+    tracer.catalyst(ex, consumed)
+    return build, ex, got
 
 
 def _row(name: str, label: str, variant: str | None, runs: list) -> dict:
@@ -160,22 +162,24 @@ def run(spark, queries, data, variants=(), trials: int = 3, log=None) -> list[di
         parse_variant(variant)  # fail before any cell runs
     tracer = Tracer(spark, True)
     out: list[dict] = []
+    cells = (None, *variants)
     for label, data_dir in data:
         for name in queries:
-            ref = None
-            for variant in (None, *variants):
-                seams.release(spark)
-                with _applied(variant):
-                    runs = _cell(spark, tracer, name, data_dir, trials)
-                row = _row(name, label, variant, runs)
+            runs: list[list] = [[] for _ in cells]
+            for t in range(trials):  # round-robin, start rotated by t
+                for i in ((t + j) % len(cells) for j in range(len(cells))):
+                    with _applied(cells[i]):
+                        runs[i].append(_request(spark, tracer, name, data_dir))
+            ref = runs[0][0][2]
+            for variant, cell in zip(cells, runs):
                 where = f"{name} on {label} ({variant or 'default'})"
-                for *_, got in runs:
-                    if got != runs[0][2]:
-                        raise Mismatch(f"{where}: trial {got} != first trial {runs[0][2]}")
-                if ref is None:
-                    ref = runs[0][2]
-                elif runs[0][2] != ref:
-                    raise Mismatch(f"{where}: {runs[0][2]} != default {ref}")
+                first = cell[0][2]
+                for *_, got in cell:
+                    if got != first:
+                        raise Mismatch(f"{where}: trial {got} != first trial {first}")
+                if first != ref:
+                    raise Mismatch(f"{where}: {first} != default {ref}")
+                row = _row(name, label, variant, cell)
                 out.append(row)
                 if log is not None:
                     log(row)

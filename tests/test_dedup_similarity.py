@@ -184,7 +184,7 @@ def test_ivf_assign_and_train_step_accept_driver_rows(spark):
     b = sim.ivf_assign(emb, cent_rows)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
-    sa = sim.ivf_train_step(emb, cent_df, dim=len(cent_rows[0][1]))
+    sa = sim.ivf_train_step(emb, cent_df)
     sb = sim.ivf_train_step(emb, cent_rows)
     assert sa.exceptAll(sb).count() == 0 and sb.exceptAll(sa).count() == 0
 

@@ -1,5 +1,6 @@
-"""scripts/lanes.py: one row schema, and the routing assertion that a
-variant (or a repeated trial) returns the same (rows, xor)."""
+"""scripts/lanes.py: one row schema, the rotated cell order, and the
+routing assertion that a variant (or a repeated trial) returns the same
+(rows, xor)."""
 
 from __future__ import annotations
 
@@ -36,15 +37,25 @@ def test_lane_variant_matches_default_and_is_restored(spark, sf_dir, monkeypatch
     lanes = _lanes()
     default = pt.SPREAD_BYTES_PER_CORE
     data = [("sf0.001", sf_dir)]
-    rows = lanes.run(spark, ["doc_repetition"], data, [VARIANT], trials=1)
+    real = lanes.consume
+    seen = []
+
+    def recording(df):
+        seen.append(pt.SPREAD_BYTES_PER_CORE)
+        return real(df)
+
+    monkeypatch.setattr(lanes, "consume", recording)
+    rows = lanes.run(spark, ["doc_repetition"], data, [VARIANT], trials=2)
+    # round-robin with the start rotated per trial; each request warms
+    # and runs under its own constant: trial 1 default then variant,
+    # trial 2 variant then default
+    assert seen == [default] * 2 + [1] * 4 + [default] * 2
     assert [r["variant"] for r in rows] == [None, VARIANT]
-    assert all(set(r) == ROW_KEYS and r["trials"] == 1 for r in rows)
+    assert all(set(r) == ROW_KEYS and r["trials"] == 2 for r in rows)
     assert rows[0]["rows"] > 0
     assert (rows[0]["rows"], rows[0]["xor"]) == (rows[1]["rows"], rows[1]["xor"])
     assert rows[0]["shuffle_bytes"] > rows[1]["shuffle_bytes"]
     assert pt.SPREAD_BYTES_PER_CORE == default
-
-    real = lanes.consume
 
     def variant_differs(df):
         consumed, (n, x) = real(df)
@@ -57,11 +68,11 @@ def test_lane_variant_matches_default_and_is_restored(spark, sf_dir, monkeypatch
 
     calls = itertools.count()
 
-    def third_call_differs(df):  # warm, first trial, second trial
+    def second_trial_differs(df):  # warm, trial 1, warm, trial 2
         consumed, (n, x) = real(df)
-        return consumed, (n, x ^ (next(calls) == 2))
+        return consumed, (n, x ^ (next(calls) == 3))
 
-    monkeypatch.setattr(lanes, "consume", third_call_differs)
+    monkeypatch.setattr(lanes, "consume", second_trial_differs)
     with pytest.raises(lanes.Mismatch, match="!= first trial"):
         lanes.run(spark, ["doc_repetition"], data, trials=2)
 

@@ -751,155 +751,26 @@ def ivf_topk(
     return _rank_topk(local, "sim", k, descending=True)
 
 
-# Mean-path selection for the Lloyd-round cell mean: the column path
-# builds ONE F.avg(vec[i]) aggregate column PER DIMENSION — fine at the
-# fixture's d=64, but at real embedding widths (768–4096) that is
-# thousands of codegen aggregate expressions per training round: a
-# plan-size/compile cliff that only bites at deployment. Above this
-# threshold the mean folds through the same Arrow (sum, count) partial
-# shape pq_train already uses, whose plan size is O(1) in d. 256 keeps
-# every in-repo fixture on the zero-Python codegen path while routing
-# real embedding widths to the partial path; the two paths are
-# equivalence-pinned at d=64 and the plan shapes are pinned at d=512
-# (tests/test_trainer_mean_path.py).
-#
-# The crossover is ROW-COUNT-dependent (BASELINE §mean-dim-r18): the
-# column path's fixed codegen/compile premium amortizes over rows while
-# the Arrow path's per-row boundary cost does not, so the break-even dim
-# RISES with the row count — measured ≈160 at 2k rows and between 256
-# (column wins) and 384 (arrow wins) at 100k rows. "auto" interpolates
-# log-linearly between those measured anchors from the PLAN-ONLY size
-# estimate (no probe job — same posture as spread()); frames with
-# unknown Catalyst stats fall back to this dim-only constant. Anchors
-# are clamped, never extrapolated: beyond 100k rows the threshold stays
-# at the largest measured value — the plan-size cliff argument for Arrow
-# at real embedding widths is unchanged.
-IVF_MEAN_ARROW_MIN_DIM = 256
-_MEAN_CROSSOVER_ANCHORS = ((2_000, 160.0), (100_000, 320.0))
-
-
-def _arrow_mean_min_dim(n_rows_est: int) -> float:
-    """Measured break-even dim for the cell-mean Arrow path at an
-    estimated row count (see the crossover note above)."""
-    import math
-
-    (r0, d0), (r1, d1) = _MEAN_CROSSOVER_ANCHORS
-    if n_rows_est <= r0:
-        return d0
-    if n_rows_est >= r1:
-        return d1
-    frac = (math.log(n_rows_est) - math.log(r0)) / (
-        math.log(r1) - math.log(r0)
-    )
-    return d0 + frac * (d1 - d0)
-
-
-def _catalyst_row_bytes(schema) -> int:
-    """Catalyst's defaultSize of one row of ``schema`` — the divisor
-    that converts a plan size estimate into a row-count estimate.
-    Mirrors DataType.defaultSize: fixed-width types their width,
-    strings 20, ARRAYS ONE ELEMENT (Catalyst cannot see lengths, which
-    is exactly why bytes/(8·dim) is the wrong divisor for vector
-    frames). Exact for local relations (whose stats are rows ×
-    defaultSize); for parquet scans the file-bytes estimate then
-    OVERcounts rows (real vector rows are far wider than defaultSize),
-    which only clamps the threshold at the big-rows anchor — the safe
-    direction at scale."""
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType,
-        ByteType,
-        DoubleType,
-        FloatType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-        StructType,
-    )
-
-    def one(dt) -> int:
-        if isinstance(dt, (ByteType, BooleanType)):
-            return 1
-        if isinstance(dt, ShortType):
-            return 2
-        if isinstance(dt, (IntegerType, FloatType)):
-            return 4
-        if isinstance(dt, (LongType, DoubleType)):
-            return 8
-        if isinstance(dt, StringType):
-            return 20
-        if isinstance(dt, ArrayType):
-            return one(dt.elementType)
-        if isinstance(dt, StructType):
-            return sum(one(f.dataType) for f in dt.fields)
-        return 8
-
-    return max(1, sum(one(f.dataType) for f in schema.fields))
-
-
 def _cell_mean_agg(
     assigned: DataFrame,
-    dim: int,
     centroid_id: str = "centroid_id",
     vec_col: str = "embedding",
-    mean_path: str = "auto",
 ) -> DataFrame:
     """Element-wise per-cell mean of the raw vectors — the shared round
     body of :func:`ivf_train` / :func:`ivf_train_step`. Returns one row
     per NON-EMPTY cell: (centroid_id, n_members bigint, __mean
     array<double>).
 
-    Two plans, same numbers (both are sum-then-divide in doubles;
-    association differs only at ulp level across paths/partitionings,
-    absorbed by the trainers' round-6 output contract):
-
-    - ``"column"`` (auto-selected for dim <= IVF_MEAN_ARROW_MIN_DIM):
-      d ``avg`` aggregate columns — map-side partial, whole-stage
-      codegen, no Python — re-packed into one array.
-    - ``"arrow"`` (auto-selected above): a ``mapInPandas`` partial emits
-      at most one (cell, count, sum-vector) row per cell per batch —
-      ONE array column instead of d scalar aggregate expressions, so
-      the generated plan does not grow with d — folded per cell by an
-      ``applyInPandas`` over the tiny partial set (≤ n_partitions rows
-      per cell, k cells total).
+    A ``mapInPandas`` partial emits at most one (cell, count,
+    sum-vector) row per cell per batch, folded per cell by an
+    ``applyInPandas`` over the tiny partial set (≤ n_partitions rows per
+    cell, k cells total). The vector stays ONE array column, so the plan
+    does not grow with d: one ``avg`` aggregate per dimension cost more
+    to build than it saved in execution at every measured size (BASELINE
+    §mean-path-r10). Sum-then-divide in doubles; re-partitioning the
+    input re-associates the fold only at ulp level, absorbed by the
+    trainers' round-6 output contract.
     """
-    if mean_path == "auto":
-        threshold: float = IVF_MEAN_ARROW_MIN_DIM
-        if dim > 0:
-            from xena_gdc_etl_spark.operators.partitioning import (
-                SIZE_UNKNOWN_SENTINEL,
-                estimated_size_bytes,
-            )
-
-            size = estimated_size_bytes(assigned)
-            if size < SIZE_UNKNOWN_SENTINEL:
-                rows_est = size // _catalyst_row_bytes(assigned.schema)
-                threshold = _arrow_mean_min_dim(max(1, rows_est))
-        mean_path = "arrow" if dim > threshold else "column"
-    if mean_path == "column":
-        return (
-            assigned.groupBy(centroid_id)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_members"),
-                *[
-                    F.avg(F.col(vec_col).getItem(i)).alias(f"__c{i}")
-                    for i in range(dim)
-                ],
-            )
-            .select(
-                F.col(centroid_id),
-                F.col("n_members"),
-                F.array(*[F.col(f"__c{i}") for i in range(dim)]).alias(
-                    "__mean"
-                ),
-            )
-        )
-    if mean_path != "arrow":
-        raise ValueError(
-            f"mean_path must be 'auto', 'column' or 'arrow', got {mean_path!r}"
-        )
-
     partial_schema = StructType(
         [
             StructField(centroid_id, LongType()),
@@ -958,7 +829,6 @@ def ivf_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroid_id: str = "centroid_id",
-    mean_path: str = "auto",
 ) -> DataFrame:
     """Train IVF centroids with Lloyd's k-means — deterministic for a
     fixed input partitioning: init = the ``k`` smallest-id vectors
@@ -983,7 +853,6 @@ def ivf_train(
     to the joined form for a fixed partitioning).
     """
     vectors = vectors.filter(F.col(vec_col).isNotNull())  # nulls dropped
-    dim = len(vectors.select(vec_col).first()[0])
     init = (
         vectors.orderBy(id_col)
         .limit(k)
@@ -1024,12 +893,10 @@ def ivf_train(
             vec_col=vec_col,
             centroid_id=centroid_id,
         )
-        # element-wise mean per cell (_cell_mean_agg: d avg columns below
-        # IVF_MEAN_ARROW_MIN_DIM, an Arrow (sum,count) partial above);
-        # the collect is k rows of d doubles — index state, never data
-        rows = _cell_mean_agg(
-            assigned, dim, centroid_id, vec_col, mean_path
-        ).collect()
+        # element-wise mean per cell (_cell_mean_agg's Arrow (sum, count)
+        # partial); the collect is k rows of d doubles — index state,
+        # never data
+        rows = _cell_mean_agg(assigned, centroid_id, vec_col).collect()
         for r in rows:
             # a cell that attracted no vectors has no row and keeps its
             # previous centroid instead of silently vanishing
@@ -1081,8 +948,6 @@ def ivf_train_step(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroid_id: str = "centroid_id",
-    dim: int | None = None,
-    mean_path: str = "auto",
 ) -> DataFrame:
     """ONE Lloyd round under a FIXED centroid state, returned as a
     DataFrame — the per-round body of :func:`ivf_train` factored out so
@@ -1102,10 +967,6 @@ def ivf_train_step(
     partial-aggregated groupBy; nothing corpus-sized reaches the driver.
     """
     if isinstance(centroids, DataFrame):
-        if dim is None:
-            # one tiny job; callers that know their dimension pass it
-            # and skip this probe
-            dim = len(centroids.select(vec_col).first()[0])
         prev = centroids.select(
             F.col(centroid_id),
             F.col(vec_col).cast("array<double>").alias("__prev"),
@@ -1122,8 +983,6 @@ def ivf_train_step(
                 "ivf_train_step needs at least one non-None centroid "
                 "vector; the centroid sequence is empty or all-None"
             )
-        if dim is None:
-            dim = len(centroids[0][1])
         from xena_gdc_etl_spark.operators.partitioning import local_rows_df
 
         spark = vectors.sparkSession
@@ -1136,7 +995,7 @@ def ivf_train_step(
         vectors, centroids, id_col=id_col, vec_col=vec_col,
         centroid_id=centroid_id,
     )
-    agg = _cell_mean_agg(assigned, dim, centroid_id, vec_col, mean_path)
+    agg = _cell_mean_agg(assigned, centroid_id, vec_col)
     return (
         prev
         .join(agg, centroid_id, "left")
@@ -1338,6 +1197,35 @@ def semantic_dedup(
 # ---------------------------------------------------------------------------
 
 
+def _pq_codes(vm: np.ndarray, books: "list[np.ndarray]") -> np.ndarray:
+    """Nearest-subcentroid codes, (n, m) int32: per subspace the argmin
+    of the rounded-9 squared distance (first min ⇒ smallest id)."""
+    sub = books[0].shape[1]
+    codes = np.zeros((len(vm), len(books)), dtype=np.int32)
+    for j, book in enumerate(books):
+        sv = vm[:, j * sub : (j + 1) * sub]
+        d2 = ((sv[:, None, :] - book[None, :, :]) ** 2).sum(axis=2)
+        codes[:, j] = np.argmin(np.round(d2, 9), axis=1)
+    return codes
+
+
+def _pq_accumulate(
+    vm: np.ndarray, books: "list[np.ndarray]", sums: np.ndarray,
+    counts: np.ndarray,
+) -> None:
+    """Add each subvector of ``vm`` to its nearest subcentroid's running
+    (sum, count) — ``sums`` (m, k, sub) and ``counts`` (m, k), in place."""
+    codes = _pq_codes(vm, books)
+    m, k, sub = sums.shape
+    for j in range(m):
+        sv = vm[:, j * sub : (j + 1) * sub]
+        for c in range(k):
+            mask = codes[:, j] == c
+            if mask.any():
+                sums[j, c] += sv[mask].sum(axis=0)
+                counts[j, c] += int(mask.sum())
+
+
 def pq_train(
     vectors: DataFrame,
     m: int = 4,
@@ -1401,17 +1289,7 @@ def pq_train(
                 if pdf.empty:
                     continue
                 vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                for j in range(m):
-                    sv = vm[:, j * sub : (j + 1) * sub]
-                    d2 = ((sv[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(
-                        axis=2
-                    )
-                    nearest = np.argmin(np.round(d2, 9), axis=1)
-                    for c in range(k):
-                        mask = nearest == c
-                        if mask.any():
-                            sums[j, c] += sv[mask].sum(axis=0)
-                            counts[j, c] += int(mask.sum())
+                _pq_accumulate(vm, codebooks, sums, counts)
             rows = []
             for j in range(m):
                 for c in range(k):
@@ -1454,8 +1332,6 @@ def pq_encode(
     """
     spark = vectors.sparkSession
     vectors = vectors.filter(F.col(vec_col).isNotNull())  # nulls dropped
-    m = len(codebooks)
-    sub = codebooks[0].shape[1]
     bc = spark.sparkContext.broadcast(codebooks)
 
     out_schema = StructType(
@@ -1471,15 +1347,10 @@ def pq_encode(
             if pdf.empty:
                 continue
             vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            codes = np.zeros((len(vm), m), dtype=np.int32)
-            for j in range(m):
-                sv = vm[:, j * sub : (j + 1) * sub]
-                d2 = ((sv[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(np.round(d2, 9), axis=1)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(dtype=np.int64),
-                    "codes": list(codes),
+                    "codes": list(_pq_codes(vm, books)),
                 }
             )
 
@@ -1589,8 +1460,9 @@ def ivf_pq_train(
     ``max(n_cells, k_codebook)`` ids (one collect covers both), cosine
     assignment with round-6 + smallest-id tiebreak for IVF, round-9 L2
     argmin for PQ, empty groups keep their previous centroid. The PQ half
-    reproduces ``pq_train`` bit-for-bit (same batch accumulation, same
-    partial-fold shape) — pinned by the probe-widening equivalence test.
+    reproduces ``pq_train`` bit-for-bit (the same ``_pq_accumulate`` per
+    batch, the same partial-fold shape) — pinned by the probe-widening
+    equivalence test.
     Returns (cell centroid matrix (n_cells, d), list of m codebooks).
     """
     spark = vectors.sparkSession
@@ -1657,17 +1529,7 @@ def ivf_pq_train(
                             ivf_sums[j, c] += (
                                 vm[mask, j * sub : (j + 1) * sub].sum(axis=0)
                             )
-                for j in range(m):
-                    sv = vm[:, j * sub : (j + 1) * sub]
-                    d2 = ((sv[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(
-                        axis=2
-                    )
-                    nearest = np.argmin(np.round(d2, 9), axis=1)
-                    for c in range(k_codebook):
-                        mask = nearest == c
-                        if mask.any():
-                            pq_sums[j, c] += sv[mask].sum(axis=0)
-                            pq_counts[j, c] += int(mask.sum())
+                _pq_accumulate(vm, codebooks, pq_sums, pq_counts)
             rows = []
             for j in range(m):
                 for c in range(k_c):
@@ -1724,8 +1586,6 @@ def ivf_pq_encode(
     """
     spark = vectors.sparkSession
     vectors = vectors.filter(F.col(vec_col).isNotNull())  # nulls dropped
-    m = len(codebooks)
-    sub = codebooks[0].shape[1]
     bc = spark.sparkContext.broadcast((c_ids, c_norm, codebooks))
 
     out_schema = StructType(
@@ -1744,16 +1604,11 @@ def ivf_pq_encode(
             vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             vn = vm / _safe_norms(vm)
             nearest = ids[np.argmax(np.round(vn @ cmat.T, 6), axis=1)]
-            codes = np.zeros((len(vm), m), dtype=np.int32)
-            for j in range(m):
-                sv = vm[:, j * sub : (j + 1) * sub]
-                d2 = ((sv[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(np.round(d2, 9), axis=1)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(dtype=np.int64),
                     "centroid_id": nearest,
-                    "codes": list(codes),
+                    "codes": list(_pq_codes(vm, books)),
                 }
             )
 

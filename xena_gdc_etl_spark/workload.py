@@ -2865,7 +2865,7 @@ def kmeans_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a limit+collect job (plus a k-core-sliced local frame) per call
     # just to round-trip constants the caller already holds
     cents = list(enumerate(_kmeans_frozen_centroids()))
-    stepped = sim.ivf_train_step(emb, cents, dim=_KM_DIM)
+    stepped = sim.ivf_train_step(emb, cents)
     return stepped.select(
         "centroid_id",
         "n_members",
