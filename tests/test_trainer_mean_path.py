@@ -133,12 +133,23 @@ def test_empty_cell_keeps_previous_on_arrow_path(spark):
     assert got[1] == (0, [-1.0, 0.0, 0.0, 0.0])
 
 
+def _assert_plan_is_one_fold(spark, dim: int) -> None:
+    vecs = _vectors(spark, dim, rows=16)
+    cents = _centroids(spark, dim, k=2)
+    plan = sim.ivf_train_step(vecs, cents)._jdf.queryExecution().toString()
+    assert "FlatMapGroupsInPandas" in plan, dim
+    # no per-dimension aggregate expressions (a per-dimension plan would
+    # put d avg() calls in this string)
+    assert plan.count("avg(") < 10, dim
+
+
+def test_auto_selects_arrow_above_threshold(spark):
+    # d=512: the width where the per-dimension avg() plan hit its
+    # plan-size cliff still plans as one applyInPandas fold
+    _assert_plan_is_one_fold(spark, 512)
+
+
 def test_column_expression_count_is_bounded(spark):
-    # the plan does not grow with d: one applyInPandas fold and no
-    # per-dimension avg() at the fixture width or at d=512
-    for dim in (D, 512):
-        vecs = _vectors(spark, dim, rows=16)
-        cents = _centroids(spark, dim, k=2)
-        plan = sim.ivf_train_step(vecs, cents)._jdf.queryExecution().toString()
-        assert "FlatMapGroupsInPandas" in plan, dim
-        assert plan.count("avg(") < 10, dim
+    # the plan does not grow with d: at the fixture width it is the same
+    # single fold as at d=512
+    _assert_plan_is_one_fold(spark, D)
