@@ -28,6 +28,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+# Full-row consumer: xxhash64 over EVERY column, folded to one row. A bare
+# count() lets Catalyst prune unused projections, so projection-heavy
+# queries (scrub_pii, doc_fingerprint, snv_vaf) timed as near no-ops; the
+# driver's gate hashes every value, and the bench should cost what the
+# driver costs.
+from perfbench.serve import consume  # noqa: E402
 from xena_gdc_etl_spark.session import get_spark  # noqa: E402
 from xena_gdc_etl_spark.workload import QUERIES  # noqa: E402
 
@@ -227,19 +233,6 @@ def main() -> None:
     _lr.logistic_train_step(
         _wfeat, ["f0", "f1"], "y", [0.0, 0.0], 0.0
     ).count()
-
-    def consume(df) -> int:
-        """Full-row consumer: xxhash64 over EVERY column, folded to one
-        row. A bare count() lets Catalyst prune unused projections, so
-        projection-heavy queries (scrub_pii, doc_fingerprint, snv_vaf)
-        timed as near no-ops; the driver's gate hashes every value, and
-        the bench should cost what the driver costs.
-        """
-        h = F.xxhash64(*[F.col(c) for c in df.columns])
-        row = df.select(h.alias("__h")).agg(
-            F.count("__h").alias("n"), F.bit_xor("__h")  # xor: no overflow
-        ).collect()[0]
-        return row["n"]
 
     # Drift probes: the round-6 bench showed the shared host slowing ~2×
     # DURING the run (q1_end_repeat 2.1× the in-order q1), which

@@ -13,7 +13,6 @@ Columns:
 - operators: xena_gdc_etl_spark/operators modules the query's source
   (plus any `_shared_*` workload helpers it calls) imports, or reaches
   through a module-level alias of workload.py (`mx.`, `sv.`, ...)
-- streaming twin: streaming/ functions whose docstring names the query
 - knobs: scale/cost knobs the query source sets explicitly (from the
   curated knob-name list below)
 
@@ -44,7 +43,6 @@ KNOBS = [
     "band_size",
     "max_iterations",
     "target_cell_rows",
-    "watermark",
 ]
 
 
@@ -73,16 +71,9 @@ def _module_aliases(workload) -> dict[str, str]:
 
 
 def build() -> str:
-    from xena_gdc_etl_spark import streaming, workload
+    from xena_gdc_etl_spark import workload
 
     aliases = _module_aliases(workload)
-
-    twins: dict[str, list[str]] = {}
-    for name, fn in inspect.getmembers(streaming, inspect.isfunction):
-        doc = fn.__doc__ or ""
-        for m in set(re.findall(r"``([a-z0-9_]+)``", doc)):
-            if m in workload.QUERIES:
-                twins.setdefault(m, []).append(name)
 
     lines = [
         "# OPERATORS — generated query/operator index",
@@ -95,8 +86,8 @@ def build() -> str:
         f"({len(workload.ORACLES)} with a full DuckDB oracle, "
         f"{len(workload.QUERIES) - len(workload.ORACLES)} rows-only).",
         "",
-        "| query | impl | oracle | operators | streaming twin | knobs |",
-        "| --- | --- | --- | --- | --- | --- |",
+        "| query | impl | oracle | operators | knobs |",
+        "| --- | --- | --- | --- | --- |",
     ]
     for key in sorted(workload.QUERIES):
         fn = workload.QUERIES[key]
@@ -109,12 +100,11 @@ def build() -> str:
         )
         knobs = sorted(k for k in KNOBS if re.search(rf"\b{k}\s*=", src))
         lines.append(
-            "| {k} | workload.py:{ln} | {o} | {m} | {t} | {kn} |".format(
+            "| {k} | workload.py:{ln} | {o} | {m} | {kn} |".format(
                 k=key,
                 ln=line,
                 o="full" if key in workload.ORACLES else "rows-only",
                 m=", ".join(mods) or "—",
-                t=", ".join(sorted(twins.get(key, []))) or "—",
                 kn=", ".join(knobs) or "—",
             )
         )

@@ -32,8 +32,8 @@ constants, runs the query once to warm and then once as the request
 ``perfbench/serve.py`` times: a ``workload`` span around the query
 builder, an ``exec`` span around the full-row xxhash consumer, and the
 consumed frame's Catalyst phase times. One row per cell goes to
-``--out``: min and median wall seconds (build + exec), median build
-seconds, and per-trial medians of the build jobs, the exec jobs, stages,
+``--out``: the min, first quartile, median and third quartile of the
+trials' wall seconds (build + exec), median build seconds, and per-trial medians of the build jobs, the exec jobs, stages,
 tasks and shuffle-write bytes, and the Catalyst milliseconds (analysis,
 optimization and planning), with the cell's ``(rows, xor)``.
 
@@ -127,6 +127,11 @@ def _row(name: str, label: str, variant: str | None, runs: list) -> dict:
     builds = [b for b, _, _ in runs]
     execs = [e for _, e, _ in runs]
     total = [b.seconds + e.seconds for b, e, _ in runs]
+    q1, _, q3 = (
+        statistics.quantiles(total, n=4, method="inclusive")
+        if len(total) > 1
+        else total * 3
+    )
 
     def med(spans, read):
         return statistics.median(read(s) for s in spans)
@@ -138,7 +143,9 @@ def _row(name: str, label: str, variant: str | None, runs: list) -> dict:
         "variant": variant,
         "trials": len(runs),
         "min_s": round(min(total), 4),
+        "q1_s": round(q1, 4),
         "median_s": round(statistics.median(total), 4),
+        "q3_s": round(q3, 4),
         "build_s": round(med(builds, lambda s: s.seconds), 4),
         "build_jobs": med(builds, lambda s: s.counts["jobs"]),
         "exec_jobs": med(execs, lambda s: s.counts["jobs"]),

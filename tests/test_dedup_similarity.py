@@ -27,8 +27,13 @@ def test_dedup_exact_groups_identical_texts(spark):
 
 
 def test_minhash_identical_docs_same_signature(spark):
-    df = docs_df(spark, ["the quick brown fox jumps", "the quick brown fox jumps"])
+    # docs 2 ("ab", shorter than k) and 3 (empty) have no shingles, so
+    # they get no signature row at all
+    df = docs_df(
+        spark, ["the quick brown fox jumps", "the quick brown fox jumps", "ab", ""]
+    )
     sig = dd.minhash_signatures(dd.shingles(df, k=5, distinct=False)).collect()
+    assert sorted(r.doc_id for r in sig) == [0, 1]
     s0 = [r for r in sig if r.doc_id == 0][0]
     s1 = [r for r in sig if r.doc_id == 1][0]
     assert [s0[f"mh{j}"] for j in range(8)] == [s1[f"mh{j}"] for j in range(8)]

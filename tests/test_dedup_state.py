@@ -157,7 +157,7 @@ def test_winnow_artifact_roundtrip_and_probe(spark, tmp_path):
     )
 
     # probing against the ARTIFACT equals the batch operator: join the
-    # train fps to the loaded set the same way the streaming twin does
+    # train fps to the loaded set (a left join, then a per-doc count)
     want = sorted(
         (r.doc_id, r.n_fps, r.n_hit, r.contam_fp_frac)
         for r in tx.winnow_contamination(train, heldout).collect()

@@ -198,133 +198,6 @@ def test_incremental_dedup_daily_example(spark, tmp_path):
         assert rolled_map[d] == r, "frozen keep decision flipped"
 
 
-def test_streaming_incremental_probe_example(spark, tmp_path):
-    """The streaming serve example (examples/streaming_incremental_probe
-    .py) lands the SAME answers as the batch artifact loop: exact ==
-    incremental_dedup, distinct near pairs == incremental_lsh_probe."""
-    import importlib.util
-    import os
-
-    from pyspark.sql import functions as F
-
-    from xena_gdc_etl_spark.catalog import Catalog
-    from xena_gdc_etl_spark.workload import QUERIES
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-    def load(name):
-        spec = importlib.util.spec_from_file_location(
-            name, os.path.join(repo, "examples", f"{name}.py")
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        return mod
-
-    daily = load("incremental_dedup_daily")
-    serve = load("streaming_incremental_probe")
-
-    sf_dir = "/root/testdata/sf0.001"
-    docs = Catalog(spark, sf_dir).documents
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "serve")
-    daily.day0_snapshot(spark, docs.filter(F.col("doc_id") % 5 == 0), state)
-
-    arrivals_dir = str(tmp_path / "arrivals")
-    docs.filter(F.col("doc_id") % 5 != 0).select("doc_id", "text").write.parquet(
-        arrivals_dir
-    )
-    arrivals = spark.readStream.schema("doc_id long, text string").parquet(
-        arrivals_dir
-    )
-    exact_q, near_q = serve.serve_stream(spark, arrivals, state, out)
-    exact_q.awaitTermination(300)
-    near_q.awaitTermination(300)
-
-    got_exact = {
-        (r.doc_id, r.dup_of)
-        for r in spark.read.parquet(os.path.join(out, "exact")).collect()
-    }
-    want_exact = {
-        (r.doc_id, r.dup_of)
-        for r in QUERIES["incremental_dedup"](spark, sf_dir).collect()
-    }
-    assert got_exact == want_exact
-
-    got_near = {
-        (r.new_id, r.landed_id)
-        for r in spark.read.parquet(os.path.join(out, "near")).collect()
-    }
-    want_near = {
-        (r.new_id, r.landed_id)
-        for r in QUERIES["incremental_lsh_probe"](spark, sf_dir).collect()
-    }
-    assert got_near == want_near and got_near
-
-
-def test_streaming_decontamination_serve_example(spark, tmp_path):
-    """The decontamination serve loop (examples/
-    streaming_decontamination_serve.py) lands the batch
-    winnow_contamination answers off the frozen fingerprint artifact."""
-    import importlib.util
-    import os
-
-    from pyspark.sql import functions as F
-
-    from xena_gdc_etl_spark.catalog import Catalog
-    from xena_gdc_etl_spark.operators import text as tx
-    from xena_gdc_etl_spark.sources.winnow_index import (
-        save_winnow_fingerprints,
-    )
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "decserve",
-        os.path.join(repo, "examples", "streaming_decontamination_serve.py"),
-    )
-    ex = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(ex)
-
-    docs = Catalog(spark, "/root/testdata/sf0.001").documents
-    heldout = docs.filter(F.col("doc_id") % 10 == 0)
-    train = docs.filter(F.col("doc_id") % 10 != 0).limit(60)
-
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "serve")
-    save_winnow_fingerprints(
-        heldout, os.path.join(state, "winnow"), k=ex.K, w=ex.W
-    )
-
-    arrivals_dir = os.path.join(out, "_arrivals")
-    train.select(
-        "doc_id", "text",
-        F.to_timestamp(F.lit("2026-01-01 00:00:00")).alias("ts"),
-    ).coalesce(1).write.parquet(arrivals_dir)
-    for hb_id, hb_ts in ((-1, "2026-01-03"), (-2, "2026-01-05")):
-        spark.createDataFrame(
-            [(hb_id, "hb")], "doc_id long, text string"
-        ).select(
-            "doc_id", "text",
-            F.to_timestamp(F.lit(f"{hb_ts} 00:00:00")).alias("ts"),
-        ).coalesce(1).write.mode("append").parquet(arrivals_dir)
-    arrivals = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals_dir)
-    )
-    q = ex.serve_stream(spark, arrivals, state, out)
-    q.awaitTermination(300)
-
-    got = sorted(
-        (r.doc_id, r.n_fps, r.n_hit, r.contam_fp_frac)
-        for r in spark.read.parquet(os.path.join(out, "scores")).collect()
-    )
-    want = sorted(
-        (r.doc_id, r.n_fps, r.n_hit, r.contam_fp_frac)
-        for r in tx.winnow_contamination(train, heldout).collect()
-    )
-    assert got == want and got
-
-
 def test_bpe_tokenizer_train_example(spark, sf_dir):
     """The tokenizer story end-to-end: bpe_train → bpe_encode →
     sequence_pack over TRAINED subword counts. Pins the pipeline's

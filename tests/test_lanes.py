@@ -14,9 +14,9 @@ from xena_gdc_etl_spark.operators import partitioning as pt
 
 VARIANT = "xena_gdc_etl_spark.operators.partitioning.SPREAD_BYTES_PER_CORE=1"
 ROW_KEYS = {
-    "query", "data", "variant", "trials", "min_s", "median_s", "build_s",
-    "build_jobs", "exec_jobs", "stages", "tasks", "shuffle_bytes",
-    "catalyst_ms", "rows", "xor",
+    "query", "data", "variant", "trials", "min_s", "q1_s", "median_s",
+    "q3_s", "build_s", "build_jobs", "exec_jobs", "stages", "tasks",
+    "shuffle_bytes", "catalyst_ms", "rows", "xor",
 }
 
 
@@ -52,6 +52,9 @@ def test_lane_variant_matches_default_and_is_restored(spark, sf_dir, monkeypatch
     assert seen == [default] * 2 + [1] * 4 + [default] * 2
     assert [r["variant"] for r in rows] == [None, VARIANT]
     assert all(set(r) == ROW_KEYS and r["trials"] == 2 for r in rows)
+    assert all(
+        r["min_s"] <= r["q1_s"] <= r["median_s"] <= r["q3_s"] for r in rows
+    )
     assert rows[0]["rows"] > 0
     assert (rows[0]["rows"], rows[0]["xor"]) == (rows[1]["rows"], rows[1]["xor"])
     assert rows[0]["shuffle_bytes"] > rows[1]["shuffle_bytes"]

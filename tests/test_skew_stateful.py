@@ -1,16 +1,8 @@
-"""Salted-join equivalence + custom stateful streaming operator."""
+"""Salted-join equivalence: the salted join returns the plain join's rows."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
-import pytest
-from pyspark.sql import functions as F
-
-from xena_gdc_etl_spark.catalog import Catalog
 from xena_gdc_etl_spark.operators.skew import salted_join
-from xena_gdc_etl_spark.streaming.stateful import streaming_running_totals
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -29,253 +21,3 @@ def test_salted_join_left_keeps_unmatched(spark):
     small = spark.createDataFrame([(1, "dim")], ["k", "name"])
     rows = {(r.k, r.v, r.name) for r in salted_join(big, small, ["k"], how="left").collect()}
     assert rows == {(1, "a", "dim"), (99, "b", None)}
-
-
-def test_streaming_running_totals_across_microbatches(spark):
-    d = tempfile.mkdtemp(prefix="stateful_")
-    chk = tempfile.mkdtemp(prefix="chk_")
-    try:
-        events = Catalog(spark, "/root/testdata/sf0.001").events
-        # several input files → several micro-batches with maxFilesPerTrigger
-        events.repartition(3).write.mode("overwrite").parquet(d)
-        expected = {
-            r.event_type: (r.n, round(r.total, 6))
-            for r in events.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-            .collect()
-        }
-        schema = spark.read.parquet(d).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
-        q = (
-            streaming_running_totals(stream)
-            .writeStream.format("memory")
-            .queryName("running_totals")
-            .outputMode("update")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        sink = spark.table("running_totals")
-        # multiple emissions per key (one per micro-batch containing the key)
-        assert sink.count() > sink.select("event_type").distinct().count()
-        # the last emission per key is the lifetime total == batch aggregate
-        last = {
-            r.event_type: (r.n, round(r.total, 6))
-            for r in sink.withColumn("i", F.monotonically_increasing_id())
-            .orderBy(F.col("i").desc())
-            .dropDuplicates(["event_type"])
-            .collect()
-        }
-        assert last == expected
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(chk, ignore_errors=True)
-
-
-def test_streaming_funnel_matches_batch_query(spark):
-    """streaming_funnel's final per-user depth == the batch event_funnel
-    stage membership, with micro-batches split by file."""
-    import shutil
-
-    from xena_gdc_etl_spark.streaming.stateful import streaming_funnel
-    from xena_gdc_etl_spark.workload import QUERIES
-
-    d = tempfile.mkdtemp(prefix="funnel_")
-    chk = tempfile.mkdtemp(prefix="funnel_chk_")
-    try:
-        events = Catalog(spark, "/root/testdata/sf0.001").events.select(
-            "user_id", "event_type", "ts"
-        )
-        # split by ts order so cross-batch arrival matches event time —
-        # the regime where bounded state is exact (see operator docstring)
-        events.orderBy("ts").coalesce(1).write.mode("overwrite").parquet(d)
-        schema = spark.read.parquet(d).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
-        q = (
-            streaming_funnel(stream)
-            .writeStream.format("memory")
-            .queryName("funnel_sink")
-            .outputMode("update")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        sink = spark.table("funnel_sink")
-        last = {
-            r.user_id: r.stage_depth
-            for r in sink.withColumn("i", F.monotonically_increasing_id())
-            .orderBy(F.col("i").desc())
-            .dropDuplicates(["user_id"])
-            .collect()
-        }
-        batch = QUERIES["event_funnel"](spark, "/root/testdata/sf0.001").collect()[0]
-        depths = list(last.values())
-        assert sum(1 for v in depths if v >= 1) == batch.n_view
-        assert sum(1 for v in depths if v >= 2) == batch.n_view_click
-        assert sum(1 for v in depths if v >= 3) == batch.n_funnel
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(chk, ignore_errors=True)
-
-
-def test_streaming_funnel_with_event_time_eviction(spark):
-    """With a watermark + idle timeout, the funnel still converges to the
-    batch answer on ts-ordered batches (eviction emits the final depth)."""
-    import shutil
-
-    from xena_gdc_etl_spark.streaming.stateful import streaming_funnel
-    from xena_gdc_etl_spark.workload import QUERIES
-
-    d = tempfile.mkdtemp(prefix="funnel_ev_")
-    chk = tempfile.mkdtemp(prefix="funnel_ev_chk_")
-    try:
-        events = Catalog(spark, "/root/testdata/sf0.001").events.select(
-            "user_id", "event_type", "ts"
-        )
-        events.orderBy("ts").coalesce(1).write.mode("overwrite").parquet(d)
-        schema = spark.read.parquet(d).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-            .withWatermark("ts", "10 minutes")
-        )
-        q = (
-            streaming_funnel(stream, idle_timeout_ms=60_000)
-            .writeStream.format("memory")
-            .queryName("funnel_ev_sink")
-            .outputMode("update")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        sink = spark.table("funnel_ev_sink")
-        last = {
-            r.user_id: r.stage_depth
-            for r in sink.withColumn("i", F.monotonically_increasing_id())
-            .orderBy(F.col("i").desc())
-            .dropDuplicates(["user_id"])
-            .collect()
-        }
-        batch = QUERIES["event_funnel"](spark, "/root/testdata/sf0.001").collect()[0]
-        depths = list(last.values())
-        assert sum(1 for v in depths if v >= 1) == batch.n_view
-        assert sum(1 for v in depths if v >= 3) == batch.n_funnel
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(chk, ignore_errors=True)
-
-
-def test_streaming_funnel_composes_with_partitioned_sink(spark, tmp_path):
-    """End-to-end composition: streaming_funnel with idle-eviction landed
-    through the engine's partitioned parquet sink (foreachBatch →
-    write_partitioned). The landed table is an append-only update LOG
-    partitioned by stage_depth; the per-user final depth recovered from
-    it matches the batch event_funnel query."""
-    import os
-
-    from xena_gdc_etl_spark.streaming import stream_to_partitioned_parquet
-    from xena_gdc_etl_spark.streaming.stateful import streaming_funnel
-    from xena_gdc_etl_spark.workload import QUERIES
-
-    d = str(tmp_path / "events")
-    events = Catalog(spark, "/root/testdata/sf0.001").events.select(
-        "user_id", "event_type", "ts"
-    )
-    events.orderBy("ts").coalesce(1).write.mode("overwrite").parquet(d)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-        .withWatermark("ts", "10 minutes")
-    )
-    landed = str(tmp_path / "funnel_log")
-    q = stream_to_partitioned_parquet(
-        streaming_funnel(stream, idle_timeout_ms=60_000),
-        landed,
-        checkpoint=str(tmp_path / "chk"),
-        partition_by=["stage_depth"],
-        output_mode="update",
-    )
-    q.awaitTermination(300)
-    assert any(p.startswith("stage_depth=") for p in os.listdir(landed))
-    # depths only grow per user (eviction emits the final = max depth),
-    # so max-per-user over the update log IS the final depth
-    final = {
-        r.user_id: r.d
-        for r in spark.read.parquet(landed)
-        .groupBy("user_id")
-        .agg(F.max("stage_depth").alias("d"))
-        .collect()
-    }
-    batch = QUERIES["event_funnel"](spark, "/root/testdata/sf0.001").collect()[0]
-    depths = list(final.values())
-    assert sum(1 for v in depths if v >= 1) == batch.n_view
-    assert sum(1 for v in depths if v >= 2) == batch.n_view_click
-    assert sum(1 for v in depths if v >= 3) == batch.n_funnel
-
-
-def test_stateful_key_types_derived_from_input(spark):
-    """The output key type follows the INPUT schema (round-16 review):
-    a bigint-keyed running-totals stream and a string-keyed funnel both
-    previously died in the Arrow conversion against hardcoded types."""
-    import tempfile
-
-    from xena_gdc_etl_spark.streaming.stateful import (
-        streaming_funnel,
-        streaming_running_totals,
-    )
-
-    d, chk1, chk2 = (tempfile.mkdtemp(prefix=p) for p in ("kt_", "c1_", "c2_"))
-    df = spark.createDataFrame(
-        [
-            ("u1", "view", 1.0, "2026-01-01 00:00:00"),
-            ("u1", "click", 2.0, "2026-01-01 00:05:00"),
-            ("u2", "view", 3.0, "2026-01-01 00:00:00"),
-        ],
-        "user_id string, event_type string, value double, ts_s string",
-    ).select(
-        "user_id", "event_type", "value",
-        F.to_timestamp("ts_s").alias("ts"),
-    )
-    df.write.mode("overwrite").parquet(d)
-    schema = spark.read.parquet(d).schema
-    stream = spark.readStream.schema(schema).parquet(d)
-    # string-keyed funnel (was hardcoded bigint)
-    q1 = (
-        streaming_funnel(stream, user_col="user_id")
-        .writeStream.format("memory").queryName("kt_funnel")
-        .outputMode("update")
-        .option("checkpointLocation", chk1)
-        .trigger(availableNow=True).start()
-    )
-    q1.awaitTermination(120)
-    depths = {r.user_id: r.stage_depth for r in spark.table("kt_funnel").collect()}
-    assert depths == {"u1": 2, "u2": 1}
-    # bigint-keyed running totals (was hardcoded string)
-    stream2 = spark.readStream.schema(schema).parquet(d)
-    q2 = (
-        streaming_running_totals(
-            stream2.withColumn("k", F.length("user_id").cast("bigint")),
-            key_col="k",
-        )
-        .writeStream.format("memory").queryName("kt_totals")
-        .outputMode("update")
-        .option("checkpointLocation", chk2)
-        .trigger(availableNow=True).start()
-    )
-    q2.awaitTermination(120)
-    rows = {r.k: (r.n, r.total) for r in spark.table("kt_totals").collect()}
-    assert rows == {2: (3, 6.0)}

@@ -124,6 +124,8 @@ def test_winnow_contamination_guarantee(spark):
             # disjoint vocabulary: no shared 8-token span possible
             (2, "uno dos tres cuatro cinco seis siete ocho nueve diez "
                 "once doce trece catorce quince"),
+            # fewer than k tokens: no fingerprints, so no output row
+            (4, "ab cd"),
         ],
         "doc_id long, text string",
     )
@@ -133,6 +135,7 @@ def test_winnow_contamination_guarantee(spark):
     }
     assert got[1][1] >= 1, f"guaranteed shared fingerprint missing: {got}"
     assert got[2][1] == 0, f"disjoint doc reported hits: {got}"
+    assert 4 not in got, f"fingerprint-less doc has a row: {got}"
     # and a SHORT shared substring (< 8 tokens) may legitimately be
     # missed — the guarantee is one-directional; just assert no crash
     short = spark.createDataFrame(

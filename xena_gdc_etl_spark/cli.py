@@ -135,7 +135,7 @@ def create_parser() -> argparse.ArgumentParser:
 
     # ---- durable-artifact builders: the once-per-corpus-freeze jobs a
     # deployment schedules so every later consumer (day-N incremental
-    # dedup, ANN serving, streaming scorers) loads state instead of
+    # dedup, ANN serving, decontamination probes) loads state instead of
     # rescanning the corpus (sources/{token_stats,minhash_index,
     # ann_index}.py — each writes its tables then a written-last
     # sentinel, so an interrupted build is never mistaken for a
@@ -213,8 +213,8 @@ def create_parser() -> argparse.ArgumentParser:
     bwi = sub.add_parser(
         "build-winnow-index",
         help="freeze the held-out suite's winnow fingerprint set for "
-        "standing decontamination (batch + streaming probes load it "
-        "instead of re-fingerprinting the suite)",
+        "standing decontamination (probes load it instead of "
+        "re-fingerprinting the suite)",
     )
     bwi.add_argument("--docs", required=True, help="held-out docs parquet")
     bwi.add_argument("--out", required=True, help="artifact directory")

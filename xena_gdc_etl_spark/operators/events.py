@@ -1,8 +1,7 @@
-"""Event-stream operators (batch plans that are Structured-Streaming-ready).
+"""Event-stream operators (batch plans over the ``events`` table).
 
-``windowed_agg`` uses ``F.window`` so the identical plan runs under
-``readStream`` (see xena_gdc_etl_spark/streaming). ``sessionize`` is the
-gap-based session assignment the reference's follow-up-history logic implies
+``windowed_agg`` buckets events into tumbling ``F.window`` windows.
+``sessionize`` is the gap-based session assignment the reference's follow-up-history logic implies
 (most-recent-record per entity over time), generalized to event data.
 """
 
@@ -20,8 +19,7 @@ def windowed_agg(
     window_duration: str = "1 hour",
 ) -> DataFrame:
     """Tumbling-window count/avg per key. Epoch-aligned windows (same
-    semantics as date_trunc for whole-unit durations). Map-side partial agg;
-    under streaming this becomes a watermarked stateful agg.
+    semantics as date_trunc for whole-unit durations). Map-side partial agg.
     """
     return (
         events.groupBy(F.window(F.col(ts_col), window_duration), F.col(key_col))
@@ -47,8 +45,7 @@ def sessionize(
 ) -> DataFrame:
     """Gap-based sessionization: a new session starts when the time since the
     user's previous event exceeds the gap. lag + conditional cumulative sum —
-    one shuffle on the user key, deterministic via the id tiebreak. The
-    streaming twin uses applyInPandasWithState / session_window.
+    one shuffle on the user key, deterministic via the id tiebreak.
     """
     order = [F.col(ts_col), F.col(id_col)]
     w = Window.partitionBy(user_col).orderBy(*order)

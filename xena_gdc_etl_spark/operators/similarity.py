@@ -528,13 +528,10 @@ def ivf_assign(
     vec_col: str = "embedding",
     centroid_id: str = "centroid_id",
     max_driver_rows: int = DEFAULT_MAX_BROADCAST_ROWS,
-    keep_cols: "tuple[str, ...]" = (),
 ) -> DataFrame:
     """Assign every vector to its nearest centroid (rounded cosine; ties →
     smallest centroid id). The centroid matrix ships to every task; one
     matmul per Arrow batch, no shuffle and no per-row window.
-    ``keep_cols``: extra input columns carried through unchanged (e.g. an
-    event-time column for the streaming purity twin).
 
     ``centroids`` may be a DataFrame (collected here, bounded) or a
     driver-side sequence of ``(centroid_id, vector)`` tuples. The matrix
@@ -549,13 +546,12 @@ def ivf_assign(
     # null vectors/centroids are dropped, not crashed on (see cosine_topk)
     vectors = vectors.filter(F.col(vec_col).isNotNull())
     crows = _centroid_rows(centroids, vec_col, centroid_id, max_driver_rows)
-    in_schema = vectors.select(id_col, vec_col, *keep_cols).schema
+    in_schema = vectors.select(id_col, vec_col).schema
     out_schema = StructType(
         [
             in_schema[id_col],
             StructField(centroid_id, LongType()),
             in_schema[vec_col],
-            *[in_schema[c] for c in keep_cols],
         ]
     )
     if not crows:
@@ -578,22 +574,17 @@ def ivf_assign(
             vm /= _safe_norms(vm)
             sims = np.round(vm @ cmat.T, 6)
             nearest = ids[np.argmax(sims, axis=1)]
-            out = {
-                id_col: pdf[id_col],
-                centroid_id: nearest,
-                vec_col: pdf[vec_col],
-            }
-            for c in keep_cols:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    centroid_id: nearest,
+                    vec_col: pdf[vec_col],
+                }
+            )
 
     par = spark.sparkContext.defaultParallelism
-    selected = vectors.select(id_col, vec_col, *keep_cols)
-    if not selected.isStreaming:
-        # spread past scan parallelism when underfilled; a streaming
-        # source manages its own micro-batch partitioning (and a pre-map
-        # repartition would add a stateless shuffle per batch for nothing)
-        selected = _spread_to_cores(selected, par)
+    # spread past scan parallelism when underfilled
+    selected = _spread_to_cores(vectors.select(id_col, vec_col), par)
     return selected.mapInPandas(_assign, schema=out_schema)
 
 
@@ -664,11 +655,10 @@ def ivf_assign_probes(
                 }
             )
 
-    selected = vectors.select(id_col, vec_col)
-    if not selected.isStreaming:
-        selected = _spread_to_cores(
-            selected, spark.sparkContext.defaultParallelism
-        )
+    selected = _spread_to_cores(
+        vectors.select(id_col, vec_col),
+        spark.sparkContext.defaultParallelism,
+    )
     return selected.mapInPandas(_probe, schema=out_schema)
 
 

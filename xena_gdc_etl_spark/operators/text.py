@@ -872,17 +872,12 @@ def _winnow_fps_frame(
     text_col: str,
     k: int,
     w: int,
-    keep_cols: "tuple[str, ...]" = (),
 ) -> DataFrame:
-    """(id, [keep_cols...,] __fps sorted-distinct winnowed fingerprint
-    array) — the selector pipeline shared by :func:`winnow_fingerprints`
-    (per-doc digest) and :func:`winnow_contamination` (cross-set
-    intersection). ``keep_cols`` passes extra columns through untouched
-    (the streaming twin carries its event-time column this way — a pure
-    projection, so the frame stays streaming-legal). See
-    winnow_fingerprints for the algorithm, boundary conventions, and
+    """(id, __fps sorted-distinct winnowed fingerprint array) — the
+    selector pipeline shared by :func:`winnow_fingerprints` (per-doc
+    digest) and :func:`winnow_contamination` (cross-set intersection).
+    See winnow_fingerprints for the algorithm, boundary conventions, and
     the evaluation-shape constraint behind the zip_with chains."""
-    keep = [F.col(c) for c in keep_cols]
     empty = F.array().cast("array<bigint>")
 
     def shifted_fold(base: Column, length: Column, n: int,
@@ -900,13 +895,13 @@ def _winnow_fps_frame(
 
     toks = _tokens(F.lower(F.col(text_col)))
     staged = docs.select(
-        F.col(id_col), *keep, F.transform(toks, _char_fold).alias("__th")
+        F.col(id_col), F.transform(toks, _char_fold).alias("__th")
     )
     th, m = F.col("__th"), F.size(F.col("__th"))
     grams = F.when(
         m >= k, shifted_fold(th, m, k, WINNOW_GRAM_BASE)
     ).otherwise(empty)
-    staged = staged.select(F.col(id_col), *keep, grams.alias("__g"))
+    staged = staged.select(F.col(id_col), grams.alias("__g"))
     gr, g = F.col("__g"), F.size(F.col("__g"))
     # sliding window-min of width w via a min-chain (same shape: every
     # input is an explicit slice of the materialized gram column)
@@ -921,9 +916,7 @@ def _winnow_fps_frame(
         .otherwise(empty)
     )
     return staged.select(
-        F.col(id_col),
-        *keep,
-        F.array_sort(F.array_distinct(mins)).alias("__fps"),
+        F.col(id_col), F.array_sort(F.array_distinct(mins)).alias("__fps")
     )
 
 
@@ -996,10 +989,11 @@ def winnow_fingerprint_set(
     """The held-out side of winnow decontamination as a standalone
     one-column (fp bigint) DISTINCT frame — the artifact a standing
     decontamination service freezes once per eval-suite snapshot and
-    every probe (batch or streaming) joins against. Identical selector
-    and collapse as :func:`winnow_contamination`'s held side (pinned by
-    the streaming twin's batch-equivalence test); no persist seam — the
-    caller materializes it (parquet / cache) on its own lifecycle.
+    every probe joins against. Identical selector and collapse as
+    :func:`winnow_contamination`'s held side (pinned by
+    tests/test_dedup_state.py::test_winnow_artifact_roundtrip_and_probe,
+    which probes the reloaded artifact); no persist seam — the caller
+    materializes it (parquet / cache) on its own lifecycle.
     """
     return (
         _winnow_fps_frame(heldout, id_col, text_col, k, w)

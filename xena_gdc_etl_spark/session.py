@@ -34,7 +34,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus else 32
 
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         # AQE: runtime partition coalescing, skew-join splitting, plan re-opt.
@@ -62,10 +62,7 @@ def get_spark(
         # queries. 64 retained executions keeps recent diagnostics and
         # makes the soak's heap series flat (scripts/serve_soak.py,
         # BASELINE §serve-soak).
-        .config(
-            "spark.sql.ui.retainedExecutions",
-            os.environ.get("SPARK_GRAFT_RETAINED_EXECUTIONS", "64"),
-        )
+        .config("spark.sql.ui.retainedExecutions", "64")
         # ...and the job/stage/task stores (defaults 1000/1000/100k):
         # the A/B soak showed executions alone leaves ~1 MB/iter of
         # creep from task/stage records; with all four bounded the
@@ -73,39 +70,5 @@ def get_spark(
         .config("spark.ui.retainedJobs", "100")
         .config("spark.ui.retainedStages", "100")
         .config("spark.ui.retainedTasks", "2000")
+        .getOrCreate()
     )
-    # Streaming state-store posture (env-gated): the default
-    # HDFSBackedStateStoreProvider keeps every state row on the executor
-    # HEAP — fine for the bounded-state twins at lane scale, but at
-    # 100 TB/day the bounded-state claim must also hold off-heap.
-    # SPARK_GRAFT_STATE_STORE=rocksdb switches to the RocksDB provider
-    # (native memory + local disk), the setting a production deployment
-    # of the stateful twins would run with; the streaming lane pins a
-    # twin's row under it (BASELINE §streaming-lane-rocksdb).
-    # SPARK_GRAFT_STATE_STORE=rocksdb-changelog additionally enables
-    # changelog checkpointing: per-batch commits upload only the delta
-    # instead of a full snapshot (Spark leaves this OFF by default), the
-    # knob the r15 lane's 23-29% throughput cost pointed at — measured
-    # A/B in §streaming-lane-rocksdb.
-    state_store = os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower()
-    if state_store and not state_store.startswith("rocksdb"):
-        # fail LOUD on typos: a silently-ignored value would run the
-        # heap default while the streaming lane records rows under the
-        # env value as a variant label — mislabeled baseline data
-        raise ValueError(
-            "SPARK_GRAFT_STATE_STORE must be '', 'rocksdb' or "
-            f"'rocksdb-changelog'; got {state_store!r}"
-        )
-    if state_store.startswith("rocksdb"):
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        if "changelog" in state_store:
-            builder = builder.config(
-                "spark.sql.streaming.stateStore.rocksdb."
-                "changelogCheckpointing.enabled",
-                "true",
-            )
-    return builder.getOrCreate()

@@ -3,7 +3,7 @@
 The workload's session-scoped caches (shared IVF assignment, shared pair
 frames) simulate what a deployment does for real: train the quantizers
 ONCE, persist them, and let every consumer — batch dedup, ANN serving,
-streaming probes, the next day's incremental run — load kilobytes of
+the next day's incremental run — load kilobytes of
 state instead of retraining. This module is that persistence seam.
 
 Layout under ``<path>/``:

@@ -1,14 +1,14 @@
 """Durable held-out WINNOW FINGERPRINT artifact: the frozen side of
 standing decontamination.
 
-winnow_contamination / streaming_winnow_decontamination probe training
-docs against the held-out suite's fingerprint set. The held-out suite
-changes rarely (an eval-suite freeze), while training docs arrive
-continuously — so the fingerprint set is exactly the build-once →
-persist → consume shape the other sources/ artifacts follow (ann_index,
-token_stats, minhash_index, dedup_state). This module freezes the
-one-column (fp bigint) DISTINCT set with the parameters that make
-fingerprints comparable stamped in a written-last sentinel:
+winnow_contamination probes training docs against the held-out suite's
+fingerprint set. The held-out suite changes rarely (an eval-suite
+freeze), while training docs arrive continuously — so the fingerprint
+set is exactly the build-once → persist → consume shape the other
+sources/ artifacts follow (ann_index, token_stats, minhash_index,
+dedup_state). This module freezes the one-column (fp bigint) DISTINCT
+set with the parameters that make fingerprints comparable stamped in a
+written-last sentinel:
 
 - ``k`` (token k-gram width) and ``w`` (winnowing window): fingerprints
   selected under different (k, w) are different hash spaces AND a

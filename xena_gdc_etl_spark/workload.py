@@ -640,7 +640,7 @@ def xena_eql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# 18. Tumbling-window aggregation over events (streaming-ready plan).
+# 18. Tumbling-window aggregation over events.
 # --------------------------------------------------------------------------
 @query(
     "events_window",
