@@ -33,8 +33,9 @@ constants, runs the query once to warm and then once as the request
 builder, an ``exec`` span around the full-row xxhash consumer, and the
 consumed frame's Catalyst phase times. One row per cell goes to
 ``--out``: the min, first quartile, median and third quartile of the
-trials' wall seconds (build + exec), median build seconds, and per-trial medians of the build jobs, the exec jobs, stages,
-tasks and shuffle-write bytes, and the Catalyst milliseconds (analysis,
+trials' wall seconds (build + exec), median build seconds, and
+per-trial medians of the build jobs, the exec jobs, stages, tasks and
+shuffle-write bytes, and the Catalyst milliseconds (analysis,
 optimization and planning), with the cell's ``(rows, xor)``.
 
 Routing assertion: every routing constant pair is documented as

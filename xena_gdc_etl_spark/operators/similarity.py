@@ -582,9 +582,10 @@ def ivf_assign(
                 }
             )
 
-    par = spark.sparkContext.defaultParallelism
-    # spread past scan parallelism when underfilled
-    selected = _spread_to_cores(vectors.select(id_col, vec_col), par)
+    selected = _spread_to_cores(
+        vectors.select(id_col, vec_col),
+        spark.sparkContext.defaultParallelism,
+    )
     return selected.mapInPandas(_assign, schema=out_schema)
 
 
