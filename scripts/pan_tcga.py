@@ -48,7 +48,12 @@ def pan_merge(
     from xena_gdc_etl_spark.gdc_pipelines import DTYPE_SPECS
     from xena_gdc_etl_spark.metadata import build_metadata, write_metadata
     from xena_gdc_etl_spark.operators.matrix import union_matrices
-    from xena_gdc_etl_spark.sources.xena_tsv import read_xena_tsv, write_xena_tsv
+    from xena_gdc_etl_spark.sources.xena_tsv import (
+        read_wide_tsv,
+        read_xena_tsv,
+        write_wide_tsv,
+        write_xena_tsv,
+    )
 
     out_dir = out_dir or os.path.join(root_dir, PANCAN_PROJECT, "Xena_Matrices")
     os.makedirs(out_dir, exist_ok=True)
@@ -70,12 +75,7 @@ def pan_merge(
         else:
             # survival / phenotype / segment tables: schema-aligned row union
             # of the per-project TSVs (the reference's axis=0 concat)
-            df = spark.read.options(
-                sep="\t", header=True, nullValue="NA"
-            ).csv(paths)
-            df.coalesce(1).write.options(
-                sep="\t", header=True, nullValue="NA"
-            ).mode("overwrite").csv(out)
+            write_wide_tsv(read_wide_tsv(spark, paths), out)
         meta = build_metadata(
             PANCAN_PROJECT,
             dtype if dtype in DTYPE_SPECS or dtype in ("survival", "clinical")

@@ -113,6 +113,36 @@ def test_xena_tsv_roundtrip(spark, tmp_path):
     assert got == {("s1", "g1"): 1.5, ("s2", "g1"): 2.5, ("s1", "g2"): 3.5}
 
 
+def test_read_xena_tsv_fires_no_jobs(spark, tmp_path, job_ids):
+    """The schema comes from the header line on the driver: building the
+    long frame, ordinals included, runs no Spark job (inferSchema ran
+    two per file)."""
+    long_df = spark.createDataFrame(
+        [("s1", "g1", 1.5), ("s2", "g1", 2.5)], ["sample", "feature", "value"]
+    )
+    out = str(tmp_path / "matrix.tsv")
+    write_xena_tsv(long_df, out)
+    back, ids = job_ids(lambda: read_xena_tsv(spark, out, with_ordinal=True))
+    assert ids == []
+    assert sorted(back.collect()) == [("s1", "g1", 1.5, 0), ("s2", "g1", 2.5, 1)]
+
+
+def test_read_xena_tsv_header_only_and_no_samples(spark, tmp_path):
+    """A header-only matrix reads as an empty long frame with the usual
+    schema; a header with no sample column is rejected by name."""
+    only_header = tmp_path / "h.tsv"
+    _write_tsv(only_header, ["feature", "S1", "S2"], [])
+    back = read_xena_tsv(spark, str(only_header))
+    assert back.collect() == []
+    assert back.dtypes == [
+        ("sample", "string"), ("feature", "string"), ("value", "double")
+    ]
+    no_samples = tmp_path / "n.tsv"
+    _write_tsv(no_samples, ["feature"], [["g1"]])
+    with pytest.raises(ValueError, match="no sample columns"):
+        read_xena_tsv(spark, str(no_samples))
+
+
 def test_metadata_build_and_write(tmp_path):
     matrix = str(tmp_path / "m.tsv")
     open(matrix, "w").write("x\n")
@@ -170,6 +200,60 @@ def test_cli_xena_eql_and_merge(spark, tmp_path):
     )
     assert merged.returncode == 0, merged.stderr
     assert glob.glob(os.path.join(outdir, "out.tsv", "*.csv"))
+
+
+def test_cli_xena_eql_and_merge_mixed_column_types(spark, tmp_path):
+    """One all-integer sample column, one decimal and one all-NA column:
+    every value column reads as double from the header, so xena-eql and
+    merge-xena no longer crash on per-column inferred types
+    (STACK_COLUMN_DIFF_TYPES)."""
+    mixed = tmp_path / "mixed.tsv"
+    _write_tsv(
+        mixed,
+        ["feature", "S1", "S2", "S3"],
+        [["g1", 1, 1.5, "NA"], ["g2", 2, 2.5, "NA"]],
+    )
+    cells = {
+        ("S1", "g1"): 1.0, ("S1", "g2"): 2.0, ("S2", "g1"): 1.5,
+        ("S2", "g2"): 2.5, ("S3", "g1"): None, ("S3", "g2"): None,
+    }
+    same = str(tmp_path / "same.tsv")
+    write_xena_tsv(
+        spark.createDataFrame(
+            [(s, f, v) for (s, f), v in cells.items()],
+            "sample string, feature string, value double",
+        ),
+        same,
+    )
+    eql = run_cli("xena-eql", str(mixed), same)
+    assert eql.returncode == 0, eql.stderr
+    assert "Equal." in eql.stdout
+
+    other = tmp_path / "other.tsv"
+    _write_tsv(other, ["feature", "S4"], [["g1", 7], ["g2", 8]])
+    outdir = str(tmp_path / "merged")
+    merged = run_cli(
+        "merge-xena", "-f", str(mixed), str(other), "-t", "star_counts",
+        "-o", outdir, "-n", "out.tsv",
+    )
+    assert merged.returncode == 0, merged.stderr
+    back = read_xena_tsv(spark, os.path.join(outdir, "out.tsv"))
+    got = {(r.sample, r.feature): r.value for r in back.collect()}
+    assert got == {**cells, ("S4", "g1"): 7.0, ("S4", "g2"): 8.0}
+
+
+def test_cli_xena_eql_fails_on_non_numeric_cell(spark, tmp_path, capsys):
+    """A value cell that is not a number fails the read loudly instead of
+    becoming a null that could compare equal."""
+    from xena_gdc_etl_spark import cli
+
+    bad = tmp_path / "bad.tsv"
+    _write_tsv(bad, ["feature", "S1"], [["g1", 1.0], ["g2", "oops"]])
+    good = tmp_path / "good.tsv"
+    _write_tsv(good, ["feature", "S1"], [["g1", 1.0], ["g2", "NA"]])
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        cli.main(["xena-eql", str(bad), str(good)])
+    assert "Equal." not in capsys.readouterr().out
 
 
 def test_xena_dataset_spark_end_to_end(spark, tmp_path):

@@ -278,3 +278,21 @@ def test_read_landed_matrix_fires_no_listing_jobs(spark, tmp_path):
     assert len(job_ids) <= 2, descriptions
     assert not [d for d in descriptions if d.startswith("Listing leaf files")]
     assert long_raw.count() == 2 * len(uuids)
+
+
+def test_read_landed_matrix_header_only_files(spark, tmp_path):
+    """Landed files holding only their header line parse to an empty long
+    table with the usual columns, not an error."""
+    from xena_gdc_etl_spark.gdc2xena import read_landed_matrix
+    from xena_gdc_etl_spark.sources.download import download_files
+
+    def fetch(url: str):
+        return f"{url.rsplit('/', 1)[1]}.tsv", iter([b"gene_id\tunstranded\n"])
+
+    manifest = spark.createDataFrame([("ua", "S-a"), ("ub", "S-b")], ["uuid", "sample"])
+    status = download_files(manifest, str(tmp_path / "landed"), fetcher=fetch)
+    got = read_landed_matrix(spark, manifest, status, "gene_id", "unstranded")
+    assert got.collect() == []
+    assert got.dtypes == [
+        ("sample", "string"), ("feature", "string"), ("value", "double")
+    ]

@@ -166,11 +166,6 @@ def test_spread_shuffles_only_consumed_columns(spark, sf_dir):
     )
 
 
-def test_streaming_frame_untouched(spark):
-    stream = spark.readStream.format("rate").load()
-    assert pt.spread(stream) is stream
-
-
 def test_spread_min_bytes_floor(spark):
     # below the floor a KNOWN-size frame stays unspread (constant-fan-out
     # consumers); at/above it the normal underfill logic applies; UNKNOWN

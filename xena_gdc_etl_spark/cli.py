@@ -563,7 +563,9 @@ def main(argv: list[str] | None = None) -> int:
             trim_sample_suffix,
         )
         from xena_gdc_etl_spark.sources.xena_tsv import (
+            read_wide_tsv,
             read_xena_tsv,
+            tsv_header,
             write_wide_tsv,
             write_xena_tsv,
         )
@@ -574,19 +576,15 @@ def main(argv: list[str] | None = None) -> int:
             f"following datatype: {dtype}."
         )
         col_form = dtype in SAMPLE_COLUMN_DTYPES
-        if col_form:
+        trim = SUFFIX_TRIM_PROJECTS.get(options.project)
+        if col_form and trim is None:
             # samples are COLUMN names, first column is the feature id.
             # __col_idx carries each sample column's FILE position so
             # keep-first dedup matches the reference's
             # columns.duplicated() file-order semantics; the original
             # index header (e.g. 'Ensembl_ID') is preserved on write.
-            wide = spark.read.options(
-                sep="\t", header=True, nullValue="NA"
-            ).csv(options.file)
-            index_header = wide.columns[0]
-            long_df = read_xena_tsv(
-                spark, options.file, long=True, with_ordinal=True
-            )
+            index_header = tsv_header(options.file)[0]
+            long_df = read_xena_tsv(spark, options.file, with_ordinal=True)
         else:
             # row form: first column is 'sample', features are columns.
             # The reference renames the sample column then
@@ -595,14 +593,12 @@ def main(argv: list[str] | None = None) -> int:
             # value BOTH survive. That is a wide-native distinct(); a
             # long melt + per-cell pivot would collapse the conflict
             # with an arbitrary F.first (round-9 advisor finding), so
-            # the row form stays wide end-to-end. Everything reads as
-            # string (the output is a TSV again, no precision at stake).
-            wide = spark.read.options(
-                sep="\t", header=True, nullValue="NA"
-            ).csv(options.file)
-            sample_first = wide.columns[0]
+            # the row form stays wide end-to-end. The suffix-trim column
+            # form below renames wide too. Everything reads as string
+            # (the output is a TSV again, no precision at stake).
+            wide = read_wide_tsv(spark, options.file)
+            index_header = sample_first = wide.columns[0]
 
-        trim = SUFFIX_TRIM_PROJECTS.get(options.project)
         if trim is not None:
             # special projects: fixed-suffix rename, no GDC fetch, no dedup
             if col_form:
@@ -651,9 +647,7 @@ def main(argv: list[str] | None = None) -> int:
                 if options.gdc_cases.endswith(".parquet"):
                     mapping = spark.read.parquet(options.gdc_cases)
                 else:
-                    mapping = spark.read.options(
-                        sep="\t", header=True
-                    ).csv(options.gdc_cases)
+                    mapping = read_wide_tsv(spark, options.gdc_cases)
             else:
                 # live GDC fetch (reference get_gdc_data): cases of the
                 # project with their samples' submitter ids, exploded to

@@ -18,8 +18,6 @@ reference's on-disk layout (``<root>/<project>/Raw_Data/...``).
 
 from __future__ import annotations
 
-import csv
-import gzip
 import json
 import logging
 import os
@@ -30,7 +28,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+
+from xena_gdc_etl_spark.sources.xena_tsv import tsv_header, tsv_reader
 
 # dtypes routed to each dataset kind (reference gdc2xena.py:86-92)
 PHENO_DTYPES = ("clinical", "biospecimen", "raw_phenotype", "GDC_phenotype")
@@ -201,23 +200,6 @@ def gdc2xena(
     return results
 
 
-def _tsv_header(path: str) -> list[str]:
-    """Column names of a landed TSV's first line, made safe the way Spark's
-    CSV header inference does it: an empty name becomes ``_c<i>`` and a
-    case-insensitive duplicate gets its index appended. ``.gz`` files are
-    read through gzip, as Spark's reader decompresses them."""
-    opener = gzip.open if path.endswith(".gz") else open
-    with opener(path, "rt", encoding="utf-8", newline="") as fh:
-        row = next(csv.reader(fh, delimiter="\t"), [])
-    lowered = [name.lower() for name in row]
-    return [
-        f"_c{i}" if not name
-        else f"{name}{i}" if lowered.count(name.lower()) > 1
-        else name
-        for i, name in enumerate(row)
-    ]
-
-
 def read_landed_matrix(
     spark: SparkSession,
     manifest: DataFrame,
@@ -240,7 +222,8 @@ def read_landed_matrix(
       the driver; more than 32 explicit paths would run a parallel
       listing job on every read.
     - The schema is the header of the first non-empty landed file (all
-      columns strings), so no job infers it over the files.
+      columns strings, read in the Xena dialect, so ``NA`` is null), so
+      no job infers it over the files.
     - A ``_metadata.file_name`` filter keeps exactly the status's landed
       files. Spark applies it while listing, so failed downloads' stale
       files, orphaned ``.part`` tmps and unrelated files are pruned before
@@ -254,13 +237,9 @@ def read_landed_matrix(
     paths = [r.path for r in status.select("path").collect() if r.path]
     if not paths:
         raise ValueError("no successfully downloaded files to parse")
-    header = next(filter(None, map(_tsv_header, sorted(paths))), [])
-    raw = (
-        spark.read.schema(
-            StructType([StructField(name, StringType()) for name in header])
-        )
-        .options(sep="\t", header=True)
-        .csv(sorted({os.path.dirname(p) for p in paths}))
+    header = next(filter(None, map(tsv_header, sorted(paths))), [])
+    raw = tsv_reader(spark, header).csv(
+        sorted({os.path.dirname(p) for p in paths})
     )
     raw = raw.filter(
         raw.metadataColumn("_metadata")

@@ -149,7 +149,6 @@ def matrix_equal(
     left: DataFrame,
     right: DataFrame,
     keys: Sequence[str],
-    tol: float = 0.0,
 ) -> DataFrame:
     """Order-insensitive matrix equality — the ``xge xena-eql`` CLI
     (/root/reference/xena_gdc_etl/main.py:27 sorts both axes then
@@ -164,11 +163,8 @@ def matrix_equal(
     mismatch = F.lit(False)
     for c in value_cols:
         l, r = F.col(f"__l_{c}"), F.col(f"__r_{c}")
-        if tol > 0:
-            ne = F.abs(l - r) > tol
-        else:
-            ne = l != r
-        mismatch = mismatch | F.coalesce(ne, F.lit(True)) & ~(l.isNull() & r.isNull())
+        both_null = l.isNull() & r.isNull()
+        mismatch = mismatch | F.coalesce(l != r, F.lit(True)) & ~both_null
     return joined.agg(
         F.count(F.lit(1)).alias("compared_rows"),
         # coalesce: sum over zero rows is null, but "no rows compared" is

@@ -136,8 +136,8 @@ def spread(
     min_bytes: int = 0,
 ) -> DataFrame:
     """Repartition ``df`` to ``parallelism`` iff the plan says it is
-    underfilled (see module docstring); identity on streams and on
-    frames that already fill the cores.
+    underfilled (see module docstring); identity on frames that already
+    fill the cores.
 
     ``min_bytes``: identity when the KNOWN size estimate is below this
     floor — checked first, so it also wins over an explicit Repartition
@@ -151,10 +151,6 @@ def spread(
     saves (measured: the 0.6 MiB sf0.1 embedding frame's assign runs
     0.71 s unspread vs 1.00 s spread on 32 cores). UNKNOWN sizes never
     hit the floor — they keep the spread."""
-    if df.isStreaming:
-        # micro-batch sources manage their own partitioning; probing a
-        # stream is meaningless (and .rdd is illegal on one)
-        return df
     par = parallelism or df.sparkSession.sparkContext.defaultParallelism
     size = estimated_size_bytes(df)
     if size < min_bytes:

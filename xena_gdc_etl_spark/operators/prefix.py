@@ -97,15 +97,12 @@ def _below_carry_crossover(df: DataFrame, min_rows: int) -> bool:
     UNKNOWN Catalyst stats (sizeInBytes = Long.Max default — JDBC/RDD
     sources) count as huge, exactly like partitioning.spread's treatment:
     the skip exists to never probe-scan something web-scale, and an
-    unknown size cannot prove the frame small. Streaming inputs skip the
-    probe too (count() would throw) and keep tail-carry.
+    unknown size cannot prove the frame small.
     """
     from xena_gdc_etl_spark.operators.partitioning import (
         estimated_size_bytes,
     )
 
-    if df.isStreaming:
-        return False
     if estimated_size_bytes(df) >= _CARRY_COUNT_SKIP_BYTES:
         return False
     return df.count() < min_rows

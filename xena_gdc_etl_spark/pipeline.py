@@ -14,6 +14,7 @@ lazy plan — Catalyst sees the whole pipeline.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +32,26 @@ from xena_gdc_etl_spark.sources.xena_tsv import write_wide_tsv, write_xena_tsv
 
 def _projects_str(projects: str | list[str]) -> str:
     return ",".join(projects) if isinstance(projects, list) else projects
+
+
+def _export(
+    ds,
+    matrix: DataFrame,
+    write: Callable[[DataFrame, str], None],
+    meta_dtype: str,
+    name: str | None,
+) -> str:
+    """Write dataset ``ds``'s ``matrix`` with ``write`` into the reference
+    layout ``<root>/<projects>/Xena_Matrices/<name>`` (xena_dataset.py:460),
+    ``name`` defaulting to ``<projects>.<xena_dtype>.tsv``, and put its
+    JSON metadata sidecar next to it; returns the matrix path."""
+    projects = _projects_str(ds.projects)
+    name = name or f"{projects}.{ds.xena_dtype}.tsv"
+    out = os.path.join(ds.root_dir, projects, "Xena_Matrices", name)
+    write(matrix, out)
+    meta = build_metadata(ds.projects, meta_dtype, out, ds.gdc_release)
+    write_metadata(meta, out)
+    return out
 
 
 @dataclass
@@ -62,25 +83,6 @@ class XenaDatasetSpark:
         the GDC API filtering server-side."""
         return self.gdc_filter.apply(spark.read.parquet(source_path))
 
-    def download(
-        self,
-        manifest: DataFrame,
-        download_dir: str,
-        md5_col: str | None = None,
-        fetcher=None,
-    ) -> DataFrame:
-        """The reference's literal step 1 (``XenaDataset.download``,
-        xena_dataset.py:597: per-UUID fetch loop via ``download_map``) as a
-        cluster fan-out: hand a UUID manifest to ``sources.download`` and
-        get back a status table (path, md5, md5_ok per file). Callers then
-        parse the landed files into the long-format table ``load`` reads.
-        """
-        from xena_gdc_etl_spark.sources.download import download_files
-
-        return download_files(
-            manifest, download_dir, md5_col=md5_col, fetcher=fetcher
-        )
-
     # -- step 2: per-dtype transform ---------------------------------------
     def transform(self, raw: DataFrame) -> DataFrame:
         kind = DTYPE_SPECS[self.xena_dtype].kind
@@ -91,29 +93,11 @@ class XenaDatasetSpark:
         return transform_maf_dtype(raw, self.xena_dtype)
 
     # -- step 3: sink + metadata sidecar -----------------------------------
-    @property
-    def matrix_dir(self) -> str:
-        # reference layout: <root>/<projects>/Xena_Matrices (xena_dataset.py:460)
-        return os.path.join(
-            self.root_dir, _projects_str(self.projects), "Xena_Matrices"
-        )
-
     def export(self, matrix: DataFrame, name: str | None = None) -> str:
-        name = name or f"{_projects_str(self.projects)}.{self.xena_dtype}.tsv"
-        out = os.path.join(self.matrix_dir, name)
-        if DTYPE_SPECS[self.xena_dtype].kind == "matrix":
-            write_xena_tsv(matrix, out)
-        else:
-            # segment/MAF matrices are row-stacked tables, not pivoted
-            write_wide_tsv(matrix, out)
-        self.metadata(out)
-        return out
-
-    def metadata(self, matrix_path: str) -> str:
-        meta = build_metadata(
-            self.projects, self.xena_dtype, matrix_path, self.gdc_release
-        )
-        return write_metadata(meta, matrix_path)
+        # segment/MAF matrices are row-stacked tables, not pivoted
+        matrix_kind = DTYPE_SPECS[self.xena_dtype].kind == "matrix"
+        write = write_xena_tsv if matrix_kind else write_wide_tsv
+        return _export(self, matrix, write, self.xena_dtype, name)
 
     # -- one-call pipeline --------------------------------------------------
     def run(self, spark: SparkSession, source_path: str) -> str:
@@ -194,21 +178,8 @@ class GDCPhenosetSpark:
             merged = coalesce_join(clin, bio, on=sample_col, how="full")
         return merged
 
-    @property
-    def matrix_dir(self) -> str:
-        return os.path.join(
-            self.root_dir, _projects_str(self.projects), "Xena_Matrices"
-        )
-
     def export(self, matrix: DataFrame, name: str | None = None) -> str:
-        name = name or f"{_projects_str(self.projects)}.{self.xena_dtype}.tsv"
-        out = os.path.join(self.matrix_dir, name)
-        write_wide_tsv(matrix, out)
-        meta = build_metadata(
-            self.projects, "clinical", out, self.gdc_release
-        )
-        write_metadata(meta, out)
-        return out
+        return _export(self, matrix, write_wide_tsv, "clinical", name)
 
     def run(
         self,
@@ -245,22 +216,12 @@ class GDCSurvivalsetSpark:
 
         return survival_matrix(survival, case_samples, case_key)
 
-    @property
-    def matrix_dir(self) -> str:
-        return os.path.join(
-            self.root_dir, _projects_str(self.projects), "Xena_Matrices"
-        )
-
     def export(self, matrix: DataFrame, name: str | None = None) -> str:
-        name = name or f"{_projects_str(self.projects)}.survival.tsv"
-        out = os.path.join(self.matrix_dir, name)
         # Xena's header spells it "OS.time" (xena_dataset.py:1545); the
         # engine keeps OS_time internally (dots in Spark names fight column
         # resolution) and renames only at the sink.
-        write_wide_tsv(matrix.withColumnRenamed("OS_time", "OS.time"), out)
-        meta = build_metadata(self.projects, "survival", out, self.gdc_release)
-        write_metadata(meta, out)
-        return out
+        renamed = matrix.withColumnRenamed("OS_time", "OS.time")
+        return _export(self, renamed, write_wide_tsv, "survival", name)
 
     def run(
         self,

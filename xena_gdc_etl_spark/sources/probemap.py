@@ -41,9 +41,7 @@ def gtf_to_probemap(
     ``feature == 'gene'`` → (id, gene, chrom, chromStart, chromEnd,
     strand), gene_id/gene_name pulled out of the attribute column with
     the same ``gene_id "…";`` grammar the awk match() uses."""
-    raw = spark.read.options(
-        sep="\t", comment="#", header=False, inferSchema=False
-    ).csv(gtf_path)
+    raw = spark.read.options(sep="\t", comment="#", header=False).csv(gtf_path)
     if len(raw.columns) != len(_GTF_COLS):
         raise ValueError(
             f"gtf_to_probemap: expected 9 tab-separated GTF columns, got "

@@ -1,32 +1,97 @@
-"""Xena-matrix TSV reader/writer.
+"""Xena-matrix TSV reader/writer — the one place that knows the format.
 
 The reference's on-disk interchange format is a wide tab-separated matrix
 with the row index in the first column (written by ``to_csv(sep='\\t')``
 throughout /root/reference/xena_gdc_etl/xena_dataset.py, read back by
 ``pd.read_csv(sep='\\t', index_col=0)`` in utils.py:122 and main.py:28).
 
-Reading converts wide → the engine's long format; writing pivots long →
-wide. The wide shape is an EDGE format only: fine for export of bounded
-matrices, wrong as an internal representation at scale.
+Every read takes its schema from the file's header line (``tsv_header``)
+on the driver, so no job infers types over the data. Reading converts
+wide → the engine's long format; writing pivots long → wide. The wide
+shape is an EDGE format only: fine for export of bounded matrices, wrong
+as an internal representation at scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import csv
+import glob
+import gzip
+import os
+
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.types import (
+    DataType,
+    DoubleType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from xena_gdc_etl_spark.operators.matrix import melt_long
+
+# the one read/write dialect: tab-separated, a header line, "NA" for null
+_DIALECT = {"sep": "\t", "header": True, "nullValue": "NA"}
+
+
+def tsv_header(path: str) -> list[str]:
+    """Column names of a TSV's first line, made safe the way Spark's CSV
+    header inference does it: an empty name becomes ``_c<i>`` and a
+    case-insensitive duplicate gets its index appended. A directory (a
+    Spark output) gives the header of its first ``part-*`` file; ``.gz``
+    files are read through gzip, as Spark's reader decompresses them. An
+    empty file or directory gives ``[]``."""
+    if os.path.isdir(path):
+        parts = sorted(glob.glob(os.path.join(path, "part-*")))
+        if not parts:
+            return []
+        path = parts[0]
+    opener = gzip.open if path.endswith(".gz") else open
+    with opener(path, "rt", encoding="utf-8", newline="") as fh:
+        row = next(csv.reader(fh, delimiter="\t"), [])
+    lowered = [name.lower() for name in row]
+    return [
+        f"_c{i}" if not name
+        else f"{name}{i}" if lowered.count(name.lower()) > 1
+        else name
+        for i, name in enumerate(row)
+    ]
+
+
+def tsv_reader(
+    spark: SparkSession, header: list[str], value_type: DataType = StringType()
+) -> DataFrameReader:
+    """A reader in the Xena dialect whose schema is ``header``: the first
+    (index) column string, every other column ``value_type``."""
+    schema = StructType(
+        [
+            StructField(name, value_type if i else StringType())
+            for i, name in enumerate(header)
+        ]
+    )
+    return spark.read.schema(schema).options(**_DIALECT)
+
+
+def read_wide_tsv(spark: SparkSession, paths: str | list[str]) -> DataFrame:
+    """Read TSV files or Spark output directories as they are, every
+    column a string, with the first non-empty header as the schema. Rows
+    of later files map onto it by position, as Spark's CSV reader does."""
+    paths = [paths] if isinstance(paths, str) else paths
+    header = next(filter(None, map(tsv_header, paths)), [])
+    return tsv_reader(spark, header).csv(paths)
 
 
 def read_xena_tsv(
     spark: SparkSession,
     path: str,
-    id_col: str | None = None,
-    long: bool = True,
     with_ordinal: bool = False,
 ) -> DataFrame:
-    """Read a Xena TSV. With ``long=True`` returns the engine-native long
-    form (sample, feature, value) where ``feature`` is the first column's
-    values and samples are the remaining column names.
+    """Read a Xena TSV as the engine-native long form (sample, feature,
+    value): ``feature`` is the first column's values, the samples are the
+    remaining column names, and every value is a double. A cell that does
+    not parse as a number fails the read (``FAILFAST``) instead of
+    turning into a null. A file whose header names no sample column
+    raises ``ValueError``; a header-only file gives an empty frame.
 
     ``with_ordinal=True`` additionally carries ``__col_idx`` — each cell's
     original FILE column position — so downstream keep-first dedup
@@ -35,17 +100,19 @@ def read_xena_tsv(
     The ordinal map is tiny (one row per column header, already
     driver-side) and joins in broadcast.
     """
-    wide = spark.read.options(
-        sep="\t", header=True, inferSchema=True, nullValue="NA"
-    ).csv(path)
-    if not long:
-        return wide
-    first = id_col or wide.columns[0]
-    value_cols = [c for c in wide.columns if c != first]
+    header = tsv_header(path)
+    if len(header) < 2:
+        raise ValueError(f"read_xena_tsv: {path} has no sample columns")
+    wide = (
+        tsv_reader(spark, header, DoubleType())
+        .option("mode", "FAILFAST")
+        .csv(path)
+    )
+    value_cols = header[1:]
     # Rename the id column BEFORE melting: Xena matrices commonly head
     # their index column "sample", which would collide with the melted
     # sample-name column and make every later reference ambiguous.
-    wide = wide.withColumnRenamed(first, "__feature_id")
+    wide = wide.withColumnRenamed(header[0], "__feature_id")
     melted = melt_long(
         wide, "__feature_id", value_cols, feature_name="sample",
         value_name="value",
@@ -54,7 +121,6 @@ def read_xena_tsv(
         "sample", "feature", "value"
     )
     if with_ordinal:
-        from pyspark.sql import functions as F
         from pyspark.sql.functions import broadcast
 
         ordinals = spark.createDataFrame(
@@ -113,9 +179,7 @@ def write_xena_tsv(
     )
     if feature_header:
         wide = wide.withColumnRenamed(feature_col, feature_header)
-    wide.coalesce(1).write.options(sep="\t", header=True, nullValue="NA").mode(
-        "overwrite"
-    ).csv(path)
+    write_wide_tsv(wide, path)
 
 
 def write_wide_tsv(wide_df: DataFrame, path: str) -> None:
@@ -125,6 +189,4 @@ def write_wide_tsv(wide_df: DataFrame, path: str) -> None:
     reference's ``drop_duplicates()`` keeps BOTH rows when two samples
     rename onto the same case but differ in any value, and a pivot with
     ``F.first`` would silently collapse them (round-9 advisor finding)."""
-    wide_df.coalesce(1).write.options(
-        sep="\t", header=True, nullValue="NA"
-    ).mode("overwrite").csv(path)
+    wide_df.coalesce(1).write.options(**_DIALECT).mode("overwrite").csv(path)
