@@ -20,13 +20,7 @@ import gzip
 import os
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
-from pyspark.sql.types import (
-    DataType,
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from xena_gdc_etl_spark.operators.matrix import melt_long
 
@@ -58,17 +52,10 @@ def tsv_header(path: str) -> list[str]:
     ]
 
 
-def tsv_reader(
-    spark: SparkSession, header: list[str], value_type: DataType = StringType()
-) -> DataFrameReader:
-    """A reader in the Xena dialect whose schema is ``header``: the first
-    (index) column string, every other column ``value_type``."""
-    schema = StructType(
-        [
-            StructField(name, value_type if i else StringType())
-            for i, name in enumerate(header)
-        ]
-    )
+def tsv_reader(spark: SparkSession, header: list[str]) -> DataFrameReader:
+    """A reader in the Xena dialect whose schema is ``header``, every
+    column a string."""
+    schema = StructType([StructField(name, StringType()) for name in header])
     return spark.read.schema(schema).options(**_DIALECT)
 
 
@@ -103,12 +90,14 @@ def read_xena_tsv(
     header = tsv_header(path)
     if len(header) < 2:
         raise ValueError(f"read_xena_tsv: {path} has no sample columns")
-    wide = (
-        tsv_reader(spark, header, DoubleType())
-        .option("mode", "FAILFAST")
-        .csv(path)
-    )
     value_cols = header[1:]
+    schema = StructType(
+        [StructField(header[0], StringType())]
+        + [StructField(name, DoubleType()) for name in value_cols]
+    )
+    wide = (
+        spark.read.schema(schema).options(**_DIALECT, mode="FAILFAST").csv(path)
+    )
     # Rename the id column BEFORE melting: Xena matrices commonly head
     # their index column "sample", which would collide with the melted
     # sample-name column and make every later reference ambiguous.
