@@ -143,6 +143,17 @@ def test_read_xena_tsv_header_only_and_no_samples(spark, tmp_path):
         read_xena_tsv(spark, str(no_samples))
 
 
+def test_write_xena_tsv_refuses_empty_matrix(spark, tmp_path):
+    """A long frame with no rows has no sample columns to write, and an
+    index-only matrix cannot be read back: the writer raises, naming the
+    path, and leaves nothing behind."""
+    out = str(tmp_path / "empty.tsv")
+    empty = spark.createDataFrame([], "sample string, feature string, value double")
+    with pytest.raises(ValueError, match="empty.tsv"):
+        write_xena_tsv(empty, out)
+    assert not os.path.exists(out)
+
+
 def test_metadata_build_and_write(tmp_path):
     matrix = str(tmp_path / "m.tsv")
     open(matrix, "w").write("x\n")

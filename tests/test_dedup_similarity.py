@@ -1043,7 +1043,7 @@ def test_ivf_assign_probes_widen_search(spark):
     centroids = emb.filter(F.col("vec_id").isin(0, 2)).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    probes = sim.ivf_assign_probes(emb, centroids, nprobe=2)
+    probes = sim.ivf_assign(emb, centroids, nprobe=2)
     rows = probes.collect()
     assert len(rows) == 2 * emb.count()
     single = {r.vec_id: r.centroid_id for r in sim.ivf_assign(emb, centroids).collect()}
@@ -1060,7 +1060,7 @@ def test_ivf_assign_probes_widen_search(spark):
     q1 = sim.ivf_topk(assigned, assigned.filter(F.col("vec_id") == 1), k=3)
     q2 = sim.ivf_topk(
         assigned,
-        sim.ivf_assign_probes(
+        sim.ivf_assign(
             emb.filter(F.col("vec_id") == 1), centroids, nprobe=2
         ),
         k=3,
@@ -1069,6 +1069,134 @@ def test_ivf_assign_probes_widen_search(spark):
     s2 = sorted((r.sim for r in q2.collect()), reverse=True)
     assert len(s2) >= len(s1)
     assert all(b >= a for a, b in zip(s1, s2))  # widened search dominates
+
+
+def test_ivf_assign_multi_probe_accepts_driver_rows(spark):
+    """The multi-probe form takes the driver-side (centroid_id, vector)
+    sequence too, with the same rows as the DataFrame form."""
+    emb = _emb_df(spark)
+    cent_df = emb.filter(F.col("vec_id").isin(0, 2, 4)).select(
+        F.col("vec_id").alias("centroid_id"), "embedding"
+    )
+    cent_rows = [(r.centroid_id, list(r.embedding)) for r in cent_df.collect()]
+    a = sim.ivf_assign(emb, cent_df, nprobe=2)
+    b = sim.ivf_assign(emb, cent_rows, nprobe=2)
+    assert a.count() == 2 * emb.count()
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def _brute_topk(cands, k, descending):
+    """(query_id, match_id, score, rank) rows: each query's first k
+    candidates by score, then match_id ascending."""
+    out = []
+    for q in sorted({c[0] for c in cands}):
+        mine = sorted(
+            (c for c in cands if c[0] == q),
+            key=lambda c: (-c[2] if descending else c[2], c[1]),
+        )
+        out += [(q, mid, s, r + 1) for r, (_, mid, s) in enumerate(mine[:k])]
+    return sorted(out)
+
+
+def test_ivf_topk_randomized_brute_equivalence(spark):
+    """ivf_topk == a NumPy brute force over the assigned rows: for every
+    query row, every member row of the same cell whose id differs,
+    rounded cosine DESC, then id asc. Small integer vectors make tied
+    scores common; member and query ids repeat (dirty ingest)."""
+    import numpy as np
+
+    rng = np.random.default_rng(1414)
+    for case, (n, n_cells, nprobe, k) in enumerate([
+        (40, 3, 1, 4),
+        (90, 4, 2, 6),
+        (120, 5, 5, 3),
+    ]):
+        vecs = rng.integers(-1, 2, size=(n, 3)).astype(float)
+        ids = rng.integers(0, n // 2, size=n)
+        rows = [(int(ids[i]), [float(x) for x in vecs[i]]) for i in range(n)]
+        schema = "vec_id bigint, embedding array<double>"
+        emb = spark.createDataFrame(rows, schema)
+        cents = [(c, [float(x) for x in rng.normal(size=3)])
+                 for c in range(n_cells)]
+        assigned = sim.ivf_assign(emb, cents)
+        queries = sim.ivf_assign(
+            spark.createDataFrame(rows[: n // 4], schema), cents, nprobe=nprobe
+        )
+        got = sorted(
+            tuple(r) for r in sim.ivf_topk(assigned, queries, k=k).collect()
+        )
+
+        def unit(v):
+            v = np.array(v)
+            norm = np.linalg.norm(v)
+            return v / norm if norm else v
+
+        members = [(r.vec_id, r.centroid_id, unit(r.embedding))
+                   for r in assigned.collect()]
+        cands = [
+            (q.vec_id, mid, round(float(unit(q.embedding) @ mv), 6))
+            for q in queries.collect()
+            for mid, cell, mv in members
+            if cell == q.centroid_id and mid != q.vec_id
+        ]
+        assert len({c[2] for c in cands}) < len(cands) / 4, "ties are rare"
+        assert got == _brute_topk(cands, k, descending=True), f"case {case}"
+
+
+def test_ivf_pq_topk_all_cells_randomized_brute_equivalence(spark):
+    """ivf_pq_topk with nprobe = n_cells == a NumPy brute force over the
+    whole corpus: ADC distance (the m table lookups summed, rounded to 9
+    digits), then id asc, self rows excluded. The trained state comes
+    from ivf_pq_train on the same frame. The corpus repeats a few
+    vectors, so tie groups straddle the cut at k; corpus ids repeat,
+    including query ids."""
+    import numpy as np
+
+    rng = np.random.default_rng(2718)
+    n_cells, m, kc = 4, 2, 4
+    for case, (n, k) in enumerate([(40, 3), (80, 7)]):
+        pool = rng.integers(-1, 2, size=(5, 4)).astype(float)
+        vecs = pool[rng.integers(0, len(pool), size=n)]
+        ids = np.arange(n)
+        # repeats only among ids past the training init (the smallest
+        # max(n_cells, kc) ids), so the trained state is well defined
+        ids[n - 8:] = [12, 15, 12, 11, 15, 17, 19, 10]
+        emb = spark.createDataFrame(
+            [(int(ids[i]), [float(x) for x in vecs[i]]) for i in range(n)],
+            "vec_id bigint, embedding array<double>",
+        ).coalesce(1)
+        # one row per query id; ids 12 and 15 also repeat in the corpus
+        queries = spark.createDataFrame(
+            [(int(ids[i]), [float(x) for x in vecs[i]]) for i in (0, 3, 12, 15)],
+            "vec_id bigint, embedding array<double>",
+        )
+        got = sorted(
+            tuple(r)
+            for r in sim.ivf_pq_topk(
+                emb, queries, n_cells=n_cells, m=m, k_codebook=kc, k=k,
+                nprobe=n_cells, iterations=2,
+            ).collect()
+        )
+        _, books = sim.ivf_pq_train(emb, n_cells, m, kc, 2)
+        sub = 4 // m
+        codes = np.stack([
+            np.argmin(np.round(
+                ((vecs[:, None, j * sub:(j + 1) * sub] - books[j][None]) ** 2)
+                .sum(axis=2), 9), axis=1)
+            for j in range(m)
+        ], axis=1)
+        cands = []
+        for q in queries.collect():
+            qv = np.array(q.embedding)
+            tabs = np.stack([
+                ((qv[j * sub:(j + 1) * sub] - books[j]) ** 2).sum(axis=1)
+                for j in range(m)
+            ])
+            dist = np.round(tabs[np.arange(m)[None, :], codes].sum(axis=1), 9)
+            cands += [(q.vec_id, int(ids[i]), float(dist[i]))
+                      for i in range(n) if ids[i] != q.vec_id]
+        assert len({c[2] for c in cands}) < len(cands) / 4, "ties are rare"
+        assert got == _brute_topk(cands, k, descending=False), f"case {case}"
 
 
 def test_suggest_n_cells_scaling_and_clamps():

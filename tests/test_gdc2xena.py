@@ -119,6 +119,30 @@ def test_gdc2xena_cli_end_to_end(spark, tmp_path):
         )
 
 
+def test_gdc2xena_empty_matrix_is_unfinished(spark, tmp_path):
+    """A matrix dtype whose landed parquet has no rows exports nothing
+    and is listed in unfinished.json, as the reference's driver lists a
+    dataset with no data; the project's other dtypes still land."""
+    root = str(tmp_path / "empty_batch")
+    _write_fixture_root(spark, root, ["TCGA-EEE"])
+    spark.createDataFrame(
+        [], "sample string, feature string, value double"
+    ).write.mode("overwrite").parquet(
+        os.path.join(root, "TCGA-EEE", "Raw_Data", "star_counts.parquet")
+    )
+    results = gdc2xena(spark, root, ["TCGA-EEE"], ["star_counts", "survival"])
+    by_dtype = {r.dtype: r for r in results}
+    assert by_dtype["star_counts"].status == "error"
+    assert "ValueError" in by_dtype["star_counts"].error
+    assert by_dtype["survival"].status == "done"
+    assert json.load(open(os.path.join(root, "unfinished.json"))) == {
+        "TCGA-EEE": ["star_counts"]
+    }
+    assert not os.path.exists(
+        os.path.join(root, "TCGA-EEE", "Xena_Matrices", "TCGA-EEE.star_counts.tsv")
+    )
+
+
 def test_pan_tcga_merge_smoke(spark, tmp_path):
     # gdc2xena lands two projects; pan_merge unions them into GDC-PANCAN
     import importlib.util

@@ -305,6 +305,25 @@ def test_over_budget_evicts_oldest_beyond_newest_cap(spark, monkeypatch):
     assert _cache_empty(spark)
 
 
+def test_fills_within_cap_read_no_storage(spark, monkeypatch):
+    """With at most SEAM_CAP seams held the bound has nothing to evict,
+    so those fills read no storage; the first fill past the cap reads
+    it once."""
+    _fresh(spark)
+    calls = []
+    storage = seams._storage
+    monkeypatch.setattr(
+        seams, "_storage", lambda s: calls.append(s) or storage(s)
+    )
+    for i in range(seams.SEAM_CAP):
+        seam(spark.range(10 + i).selectExpr(f"id + {700 + i} as v"))
+    assert calls == []
+    seam(spark.range(10).selectExpr("id + 800 as v"))
+    assert len(calls) == 1
+    assert release(spark, "seam") == seams.SEAM_CAP + 1
+    assert _cache_empty(spark)
+
+
 def test_older_seams_stay_while_bytes_fit(spark, monkeypatch):
     """Eviction stops once the reading, less each evicted seam's cached
     bytes, fits the budget: the big oldest seam goes, and a small seam

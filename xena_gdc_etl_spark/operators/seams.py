@@ -64,7 +64,9 @@ seam's plan does not refresh it. ``release(spark, name=None)``
 deterministically unpersists what the store holds (one name, or
 everything) — the between-queries hook for benches and serving loops
 that want the cache manager empty. ``stats(spark)`` reads the per-name
-counters and the last storage reading the seam bound acted on.
+counters and takes its own storage reading for the session's cached
+bytes: the seam bound reads storage only when more than ``SEAM_CAP``
+seams are held, since with fewer it has nothing to evict.
 
 The store holds only handles (the cached bytes live in the JVM block
 manager); a session's store dies with the session via the
@@ -99,13 +101,12 @@ _LOCK = threading.Lock()
 
 
 class _Store:
-    __slots__ = ("lock", "slots", "counts", "seam_bytes")
+    __slots__ = ("lock", "slots", "counts")
 
     def __init__(self) -> None:
         self.lock = threading.RLock()
         self.slots: dict[str, OrderedDict] = {}
         self.counts: Counter = Counter()  # (name, "hits"|"misses"|"evictions")
-        self.seam_bytes: int | None = None  # last reading the bound acted on
 
     def evict_oldest(self, name: str) -> None:
         """Pop, count and unpersist ``name``'s oldest entry. Caller holds
@@ -210,10 +211,12 @@ def _bound_seams(st: _Store, spark: SparkSession) -> None:
     the session's cached bytes exceed the budget. Caller holds
     ``st.lock``."""
     slot = st.slots["seam"]
+    if len(slot) <= SEAM_CAP:
+        return
     reading = _storage(spark) if _BUDGET_FRACTION > 0 else None
     if reading is not None:
         cached, most = reading
-        held = st.seam_bytes = sum(cached.values())
+        held = sum(cached.values())
     # an unread figure counts as over budget: a SEAM_CAP-entry FIFO
     while len(slot) > SEAM_CAP and (
         reading is None or held > _BUDGET_FRACTION * most
@@ -286,11 +289,13 @@ def release(spark: SparkSession, name: str | None = None) -> int:
 def stats(spark: SparkSession) -> Counter:
     """The session's counts, keyed ``(name, kind)`` with kind one of
     ``hits``, ``misses``, ``evictions`` and ``entries`` (held now), plus
-    ``("seam", "bytes")``: the session's cached bytes at the last storage
-    reading the seam bound acted on."""
+    ``("seam", "bytes")``: the session's cached bytes (memory plus disk)
+    read now, absent when the block manager cannot be read."""
     st = _store(spark)
     with st.lock:
         held = Counter({(n, "entries"): len(v) for n, v in st.slots.items()})
-        if st.seam_bytes is not None:
-            held["seam", "bytes"] = st.seam_bytes
-        return st.counts + held
+        counts = st.counts + held
+    reading = _storage(spark)
+    if reading is not None:
+        counts["seam", "bytes"] = sum(reading[0].values())
+    return counts

@@ -41,6 +41,46 @@ def _safe_norms(m: np.ndarray) -> np.ndarray:
     return norms
 
 
+def _nearest_cells(
+    vm: np.ndarray, cn: np.ndarray, nprobe: int = 1
+) -> np.ndarray:
+    """The IVF nearest-cell kernel: for each row of ``vm``, the positions
+    in ``cn`` (unit centroid rows in ascending id order) of its
+    ``nprobe`` nearest cells, nearest first, shape (n, nprobe) — rounded
+    cosine, ties to the smaller id. ``vm`` is left as it is."""
+    sims = np.round((vm / _safe_norms(vm)) @ cn.T, 6)
+    if nprobe == 1:
+        # the first max is the stable sort's first entry
+        return np.argmax(sims, axis=1)[:, None]
+    return np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
+
+
+def _first_k_per_query(
+    qids: np.ndarray,
+    mids: np.ndarray,
+    scores: np.ndarray,
+    k: int,
+    score_col: str,
+    descending: bool,
+) -> pd.DataFrame:
+    """The batch-local finish of the cell-pruned top-ks: drop
+    self-matches, order each query's candidates by score (``descending``
+    or ascending), then match_id ascending, and keep its first ``k``.
+    It only selects rows; the scores come out as given."""
+    keep = qids != mids
+    qids, mids, scores = qids[keep], mids[keep], scores[keep]
+    order = np.lexsort((mids, -scores if descending else scores, qids))
+    qids, mids, scores = qids[order], mids[order], scores[order]
+    # qids is sorted, so each row's rank is its distance from the first
+    # row of its query
+    rank = np.arange(len(qids)) - np.searchsorted(qids, qids)
+    first = rank < k
+    return pd.DataFrame(
+        {"query_id": qids[first], "match_id": mids[first],
+         score_col: scores[first]}
+    )
+
+
 # The query/centroid sides of the broadcast ANN operators are collected to
 # the driver by design (they are the small side); this bound turns the
 # silent driver OOM of an oversized side into an actionable error.
@@ -111,6 +151,9 @@ TOPK_CHUNK_ROWS = 2048
 # while reading the candidate matrix with plain vectorized maxes/mins
 # instead of a per-row introselect.
 TOPK_BLOCK = 16
+# Id-hash slices per IVF cell in ivf_topk, so a hot cell spreads over
+# this many tasks; results do not depend on it.
+IVF_TOPK_SHARDS = 8
 
 
 def _spread_to_cores(df: DataFrame, par: int) -> DataFrame:
@@ -528,10 +571,18 @@ def ivf_assign(
     vec_col: str = "embedding",
     centroid_id: str = "centroid_id",
     max_driver_rows: int = DEFAULT_MAX_BROADCAST_ROWS,
+    nprobe: int = 1,
 ) -> DataFrame:
-    """Assign every vector to its nearest centroid (rounded cosine; ties →
-    smallest centroid id). The centroid matrix ships to every task; one
-    matmul per Arrow batch, no shuffle and no per-row window.
+    """Assign every vector to its ``nprobe`` nearest centroids (rounded
+    cosine; ties → smallest centroid id): one row per (vector, probed
+    cell). The centroid matrix ships to every task; one matmul per Arrow
+    batch, no shuffle and no per-row window.
+
+    ``nprobe`` > 1 is the standard IVF search widening (probe several
+    cells, not one) that trades candidate volume for recall. Feed the
+    result as ``queries_assigned`` into :func:`ivf_topk`: members live in
+    exactly one cell, so the per-cell candidate sets a multi-probed query
+    sees are disjoint and the global top-k window merges them exactly.
 
     ``centroids`` may be a DataFrame (collected here, bounded) or a
     driver-side sequence of ``(centroid_id, vector)`` tuples. The matrix
@@ -558,7 +609,7 @@ def ivf_assign(
         # empty-in → empty-out: an empty centroid frame (empty corpus
         # upstream) must not crash with a numpy AxisError mid-pipeline
         return spark.createDataFrame([], out_schema)
-    # sorted by centroid id so argmax's first-max rule == smallest-id tiebreak
+    # sorted by centroid id: _nearest_cells breaks ties by position
     crows.sort(key=lambda r: r.cid)
     c_ids = np.array([r.cid for r in crows], dtype=np.int64)
     cm = np.array([r.cv for r in crows], dtype=np.float64)
@@ -571,14 +622,13 @@ def ivf_assign(
             if pdf.empty:
                 continue
             vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vm /= _safe_norms(vm)
-            sims = np.round(vm @ cmat.T, 6)
-            nearest = ids[np.argmax(sims, axis=1)]
+            cells = _nearest_cells(vm, cmat, nprobe)
+            width = cells.shape[1]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
-                    centroid_id: nearest,
-                    vec_col: pdf[vec_col],
+                    id_col: pdf[id_col].to_numpy().repeat(width),
+                    centroid_id: ids[cells].reshape(-1),
+                    vec_col: pdf[vec_col].to_numpy().repeat(width),
                 }
             )
 
@@ -589,80 +639,6 @@ def ivf_assign(
     return selected.mapInPandas(_assign, schema=out_schema)
 
 
-def ivf_assign_probes(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
-    max_driver_rows: int = DEFAULT_MAX_BROADCAST_ROWS,
-) -> DataFrame:
-    """Multi-probe assignment: one row per (vector, cell) for the
-    ``nprobe`` NEAREST cells (rounded cosine; ties → smaller centroid id)
-    — the standard IVF search widening (probe several cells, not one) that
-    trades candidate volume for recall. Feed the result as
-    ``queries_assigned`` into :func:`ivf_topk`: members live in exactly
-    one cell, so the per-cell candidate sets a multi-probed query sees are
-    disjoint and the global top-k window merges them exactly. Same
-    broadcast-matmul shape as :func:`ivf_assign` — no shuffle, no per-row
-    work.
-    """
-    spark = vectors.sparkSession
-    # null vectors/centroids are dropped, not crashed on (see cosine_topk)
-    vectors = vectors.filter(F.col(vec_col).isNotNull())
-    crows = _collect_bounded(
-        centroids.filter(F.col(vec_col).isNotNull()).select(
-            F.col(centroid_id).alias("cid"), F.col(vec_col).alias("cv")
-        ),
-        "the centroid side of ivf_assign_probes",
-        max_driver_rows,
-    )
-    in_schema = vectors.select(id_col, vec_col).schema
-    out_schema = StructType(
-        [
-            in_schema[id_col],
-            StructField(centroid_id, LongType()),
-            in_schema[vec_col],
-        ]
-    )
-    if not crows:
-        # empty-in → empty-out, matching ivf_assign's empty posture
-        return spark.createDataFrame([], out_schema)
-    crows.sort(key=lambda r: r.cid)
-    c_ids = np.array([r.cid for r in crows], dtype=np.int64)
-    cm = np.array([r.cv for r in crows], dtype=np.float64)
-    cn = cm / _safe_norms(cm)
-    bc = spark.sparkContext.broadcast((c_ids, cn))
-    n_probe = min(int(nprobe), len(crows))
-
-    def _probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, cmat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vm /= _safe_norms(vm)
-            sims = np.round(vm @ cmat.T, 6)
-            # (sim desc, cid asc): ids are sorted ascending, so a stable
-            # argsort on -sims yields the smaller cid first among ties
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy().repeat(n_probe),
-                    centroid_id: ids[order].reshape(-1),
-                    vec_col: pdf[vec_col].to_numpy().repeat(n_probe),
-                }
-            )
-
-    selected = _spread_to_cores(
-        vectors.select(id_col, vec_col),
-        spark.sparkContext.defaultParallelism,
-    )
-    return selected.mapInPandas(_probe, schema=out_schema)
-
-
 def ivf_topk(
     assigned: DataFrame,
     queries_assigned: DataFrame,
@@ -670,19 +646,20 @@ def ivf_topk(
     vec_col: str = "embedding",
     centroid_id: str = "centroid_id",
     k: int = 5,
-    n_shards: int = 8,
 ) -> DataFrame:
     """Approximate top-k: score only vectors sharing the query's cell.
     The join key is the centroid id — candidate pruning happens in the join
-    itself, which is the whole point of IVF at scale.
+    itself, which is the whole point of IVF at scale. ``queries_assigned``
+    may carry several cells per query (``ivf_assign(..., nprobe=n)``).
 
     Cells are additionally SUB-SHARDED (deterministic id-hash into
-    ``n_shards`` slices, cell queries replicated to every slice) so a hot
-    cell never lands in one task: local top-k per (cell, shard), then a
-    global window over ≤ shards×k rows per query. Exact w.r.t. the
+    ``IVF_TOPK_SHARDS`` slices, cell queries replicated to every slice)
+    so a hot cell never lands in one task: local top-k per (cell, shard),
+    then a global window over ≤ shards×k rows per query. Exact w.r.t. the
     unsharded form — same candidate set, same rounding, same
     (sim desc, id) tiebreak — so results are shard-count-invariant.
     """
+    n_shards = IVF_TOPK_SHARDS
     q_keyed = queries_assigned.select(
         F.col(centroid_id), F.col(id_col).alias("__qid"), F.col(vec_col)
     )
@@ -712,19 +689,12 @@ def ivf_topk(
         vids = pdf[id_col].to_numpy(dtype=np.int64)
         vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
         vm /= _safe_norms(vm)
-        qids = vids[qmask]
-        cand_ids_all = vids[~qmask]
         sims = np.round(vm[~qmask] @ vm[qmask].T, 6)  # (n_members, n_q)
-        out_q, out_m, out_s = [], [], []
-        for j, qid in enumerate(qids):
-            mask = cand_ids_all != qid  # a query never matches itself
-            cand_ids = cand_ids_all[mask]
-            cand = sims[mask, j]
-            order = np.lexsort((cand_ids, -cand))[:k]
-            out_q.extend([qid] * len(order))
-            out_m.extend(cand_ids[order])
-            out_s.extend(cand[order])
-        return pd.DataFrame({"query_id": out_q, "match_id": out_m, "sim": out_s})
+        n_members, n_q = sims.shape
+        return _first_k_per_query(
+            np.tile(vids[qmask], n_members), vids[~qmask].repeat(n_q),
+            sims.reshape(-1), k, "sim", descending=True,
+        )
 
     local = (
         cells.groupBy(centroid_id, "__shard")
@@ -1217,6 +1187,47 @@ def _pq_accumulate(
                 counts[j, c] += int(mask.sum())
 
 
+def _lloyd_fold(
+    vectors: DataFrame,
+    keys: "tuple[str, ...]",
+    sub: int,
+    state,
+    partial: Callable[..., list],
+) -> "list[tuple[tuple, np.ndarray]]":
+    """One Lloyd round's (sum, count) fold, shared by the PQ trainers.
+    ``state`` is broadcast; ``partial(state, batches)`` returns one task's
+    ``(*keys, n, s0, …, s{sub-1})`` tuples — a group's member count and
+    the sum of its members' ``sub``-wide segments — which one
+    partial-aggregated groupBy sums per key and collects (groups × sub
+    doubles, never rows). Returns ``(key tuple, mean segment)`` for each
+    group with members: an empty group has no mean, so the caller keeps
+    its previous centroid."""
+    sums = [f"s{i}" for i in range(sub)]
+    cols = [*keys, "n", *sums]
+    schema = StructType(
+        [StructField(c, LongType()) for c in (*keys, "n")]
+        + [StructField(s, DoubleType()) for s in sums]
+    )
+    bc = vectors.sparkSession.sparkContext.broadcast(state)
+
+    def _partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        yield pd.DataFrame(partial(bc.value, batches), columns=cols)
+
+    rows = (
+        vectors.mapInPandas(_partials, schema=schema)
+        .groupBy(*keys)
+        .agg(F.sum("n").alias("n"), *[F.sum(s).alias(s) for s in sums])
+        .collect()
+    )
+    bc.destroy()
+    n_keys = len(keys)
+    return [
+        (tuple(r[:n_keys]), np.array(r[n_keys + 1:]) / r["n"])
+        for r in rows
+        if r["n"] > 0
+    ]
+
+
 def pq_train(
     vectors: DataFrame,
     m: int = 4,
@@ -1259,55 +1270,26 @@ def pq_train(
         for j in range(m)
     ]
 
-    spark = vectors.sparkSession
-    agg_schema = StructType(
-        [
-            StructField("subspace", LongType()),
-            StructField("centroid", LongType()),
-            StructField("n", LongType()),
-            *[StructField(f"s{i}", DoubleType()) for i in range(sub)],
+    def _partial(codebooks: list, batches: Iterator[pd.DataFrame]) -> list:
+        sums = np.zeros((m, k, sub))
+        counts = np.zeros((m, k), dtype=np.int64)
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            _pq_accumulate(vm, codebooks, sums, counts)
+        return [
+            (j, c, int(counts[j, c]), *sums[j, c].tolist())
+            for j in range(m)
+            for c in range(k)
         ]
-    )
 
     for _ in range(iterations):
-        bc = spark.sparkContext.broadcast([b.copy() for b in books])
-
-        def _partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            codebooks = bc.value
-            sums = np.zeros((m, k, sub))
-            counts = np.zeros((m, k), dtype=np.int64)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                _pq_accumulate(vm, codebooks, sums, counts)
-            rows = []
-            for j in range(m):
-                for c in range(k):
-                    rows.append(
-                        (j, c, int(counts[j, c]), *sums[j, c].tolist())
-                    )
-            yield pd.DataFrame(
-                rows, columns=["subspace", "centroid", "n"]
-                + [f"s{i}" for i in range(sub)],
-            )
-
-        partials = (
-            vectors.select(id_col, vec_col)
-            .mapInPandas(_partial, schema=agg_schema)
-            .groupBy("subspace", "centroid")
-            .agg(
-                F.sum("n").alias("n"),
-                *[F.sum(f"s{i}").alias(f"s{i}") for i in range(sub)],
-            )
-            .collect()
-        )
-        for r in partials:
-            j, c, n = r["subspace"], r["centroid"], r["n"]
-            if n > 0:
-                books[j][c] = np.array([r[f"s{i}"] for i in range(sub)]) / n
-            # empty cells keep their previous centroid (ivf_train contract)
-        bc.destroy()
+        for (j, c), seg in _lloyd_fold(
+            vectors.select(id_col, vec_col), ("subspace", "centroid"), sub,
+            [b.copy() for b in books], _partial,
+        ):
+            books[j][c] = seg
     return books
 
 
@@ -1452,11 +1434,10 @@ def ivf_pq_train(
     assignment with round-6 + smallest-id tiebreak for IVF, round-9 L2
     argmin for PQ, empty groups keep their previous centroid. The PQ half
     reproduces ``pq_train`` bit-for-bit (the same ``_pq_accumulate`` per
-    batch, the same partial-fold shape) — pinned by the probe-widening
+    batch, the same ``_lloyd_fold``) — pinned by the probe-widening
     equivalence test.
     Returns (cell centroid matrix (n_cells, d), list of m codebooks).
     """
-    spark = vectors.sparkSession
     n_init = max(n_cells, k_codebook)
     vectors = vectors.filter(F.col(vec_col).isNotNull())  # nulls dropped
     init_rows = (
@@ -1483,77 +1464,48 @@ def ivf_pq_train(
         for j in range(m)
     ]
 
-    agg_schema = StructType(
-        [
-            StructField("kind", LongType()),  # 0 = ivf segment, 1 = pq
-            StructField("subspace", LongType()),
-            StructField("centroid", LongType()),
-            StructField("n", LongType()),
-            *[StructField(f"s{i}", DoubleType()) for i in range(sub)],
+    def _partial(state: tuple, batches: Iterator[pd.DataFrame]) -> list:
+        cn, codebooks = state
+        k_c = len(cn)
+        ivf_sums = np.zeros((m, k_c, sub))
+        ivf_counts = np.zeros(k_c, dtype=np.int64)
+        pq_sums = np.zeros((m, k_codebook, sub))
+        pq_counts = np.zeros((m, k_codebook), dtype=np.int64)
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            nearest_cell = _nearest_cells(vm, cn)[:, 0]
+            for c in range(k_c):
+                mask = nearest_cell == c
+                if mask.any():
+                    ivf_counts[c] += int(mask.sum())
+                    for j in range(m):
+                        ivf_sums[j, c] += (
+                            vm[mask, j * sub : (j + 1) * sub].sum(axis=0)
+                        )
+            _pq_accumulate(vm, codebooks, pq_sums, pq_counts)
+        # kind 0 = an IVF cell's subspace segment, 1 = a PQ subcentroid
+        return [
+            (0, j, c, int(ivf_counts[c]), *ivf_sums[j, c].tolist())
+            for j in range(m)
+            for c in range(k_c)
+        ] + [
+            (1, j, c, int(pq_counts[j, c]), *pq_sums[j, c].tolist())
+            for j in range(m)
+            for c in range(k_codebook)
         ]
-    )
-    cols = ["kind", "subspace", "centroid", "n"] + [f"s{i}" for i in range(sub)]
 
     for _ in range(iterations):
-        bc = spark.sparkContext.broadcast(
-            (cents / _safe_norms(cents), [b.copy() for b in books])
-        )
-
-        def _partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cn, codebooks = bc.value
-            k_c = len(cn)
-            ivf_sums = np.zeros((m, k_c, sub))
-            ivf_counts = np.zeros(k_c, dtype=np.int64)
-            pq_sums = np.zeros((m, k_codebook, sub))
-            pq_counts = np.zeros((m, k_codebook), dtype=np.int64)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                vn = vm / _safe_norms(vm)
-                nearest_cell = np.argmax(np.round(vn @ cn.T, 6), axis=1)
-                for c in range(k_c):
-                    mask = nearest_cell == c
-                    if mask.any():
-                        ivf_counts[c] += int(mask.sum())
-                        for j in range(m):
-                            ivf_sums[j, c] += (
-                                vm[mask, j * sub : (j + 1) * sub].sum(axis=0)
-                            )
-                _pq_accumulate(vm, codebooks, pq_sums, pq_counts)
-            rows = []
-            for j in range(m):
-                for c in range(k_c):
-                    rows.append(
-                        (0, j, c, int(ivf_counts[c]), *ivf_sums[j, c].tolist())
-                    )
-            for j in range(m):
-                for c in range(k_codebook):
-                    rows.append(
-                        (1, j, c, int(pq_counts[j, c]), *pq_sums[j, c].tolist())
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-        partials = (
-            vectors.select(id_col, vec_col)
-            .mapInPandas(_partial, schema=agg_schema)
-            .groupBy("kind", "subspace", "centroid")
-            .agg(
-                F.sum("n").alias("n"),
-                *[F.sum(f"s{i}").alias(f"s{i}") for i in range(sub)],
-            )
-            .collect()
-        )
-        for r in partials:
-            j, c, n = r["subspace"], r["centroid"], r["n"]
-            if n <= 0:
-                continue  # empty groups keep their previous centroid
-            seg = np.array([r[f"s{i}"] for i in range(sub)]) / n
-            if r["kind"] == 0:
+        for (kind, j, c), seg in _lloyd_fold(
+            vectors.select(id_col, vec_col), ("kind", "subspace", "centroid"),
+            sub, (cents / _safe_norms(cents), [b.copy() for b in books]),
+            _partial,
+        ):
+            if kind == 0:
                 cents[c, j * sub : (j + 1) * sub] = seg
             else:
                 books[j][c] = seg
-        bc.destroy()
     return cents, books
 
 
@@ -1571,8 +1523,8 @@ def ivf_pq_encode(
     separate ``ivf_assign`` and ``pq_encode`` scans re-joined on the id
     (the pre-round-4 shape) paid a second full corpus scan plus a
     corpus-wide shuffle for nothing. Semantics are bit-identical to the
-    two-pass form: assignment = argmax of rounded cosine over id-sorted
-    centroids (first-max ⇒ smallest-id tiebreak), codes = per-subspace
+    two-pass form: assignment = ``_nearest_cells`` over id-sorted
+    centroids (rounded cosine, smallest-id tiebreak), codes = per-subspace
     argmin of rounded squared distance.
     """
     spark = vectors.sparkSession
@@ -1593,8 +1545,7 @@ def ivf_pq_encode(
             if pdf.empty:
                 continue
             vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vn = vm / _safe_norms(vm)
-            nearest = ids[np.argmax(np.round(vn @ cmat.T, 6), axis=1)]
+            nearest = ids[_nearest_cells(vm, cmat)[:, 0]]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(dtype=np.int64),
@@ -1661,11 +1612,7 @@ def ivf_pq_topk(
     )
     if not len(q_ids):
         return _empty_topk(spark, "adc_dist")
-    qn = qm / _safe_norms(qm)
-    sims = np.round(qn @ cn.T, 6)
-    order = np.lexsort(
-        (np.broadcast_to(c_ids, sims.shape), -sims), axis=1
-    )[:, : min(nprobe, len(c_ids))]
+    order = _nearest_cells(qm, cn, nprobe)
     from xena_gdc_etl_spark.operators.partitioning import local_rows_df
 
     # size-proportional slicing: default core-count slicing made every
@@ -1708,16 +1655,8 @@ def ivf_pq_topk(
             d = np.round(
                 tabs[qrow[:, None], np.arange(m)[None, :], cm_].sum(axis=1), 9
             )
-            out_q, out_m, out_d = [], [], []
-            for q in np.unique(qids):
-                msk = (qids == q) & (vids != q)
-                cand_ids, cand_d = vids[msk], d[msk]
-                sel = np.lexsort((cand_ids, cand_d))[:k]
-                out_q.extend([q] * len(sel))
-                out_m.extend(cand_ids[sel])
-                out_d.extend(cand_d[sel])
-            yield pd.DataFrame(
-                {"query_id": out_q, "match_id": out_m, "adc_dist": out_d}
+            yield _first_k_per_query(
+                qids, vids, d, k, "adc_dist", descending=False
             )
 
     local = cand.mapInPandas(_local_topk, schema=out_schema)

@@ -139,7 +139,8 @@ def write_xena_tsv(
     becomes the output HEADER, so it is collected driver-side by the
     bounded probe (``partitioning.collect_at_most``): an over-wide pivot
     — a driver-OOM-by-collect otherwise — fails with an actionable
-    ``ValueError`` naming the ``max_columns`` knob.
+    ``ValueError`` naming the ``max_columns`` knob, and an empty one
+    raises ``ValueError`` before anything is written.
 
     ``feature_header`` renames the output's first (index) column; the
     reference preserves the input matrix's index header (e.g.
@@ -159,6 +160,11 @@ def write_xena_tsv(
             f"header) has more than {max_columns} rows — a pivot this wide "
             "is not driver-sized (and not a sane TSV); export a bounded "
             "cohort or raise max_columns"
+        )
+    if not sample_rows:
+        raise ValueError(
+            f"write_xena_tsv: {path}: the long frame has no {sample_col!r} "
+            "values, and a matrix without sample columns cannot be read back"
         )
     samples = [r[0] for r in sample_rows]
     wide = (

@@ -1304,7 +1304,7 @@ def ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = emb.filter(
         F.col("vec_id") < _ivf_n_cells(spark, sf_dir)
     ).select(F.col("vec_id").alias("centroid_id"), "embedding")
-    probes = sim.ivf_assign_probes(
+    probes = sim.ivf_assign(
         emb.filter(F.col("vec_id") % 10 == 0), centroids, nprobe=2
     )
     return sim.ivf_topk(_shared_ivf_assigned(spark, sf_dir), probes, k=5)
