@@ -4,11 +4,10 @@
 
 For each datatype, find every per-project matrix that a ``gdc2xena`` batch
 run landed under ``<root>/TCGA-*/Xena_Matrices/``, union them into one
-GDC-PANCAN matrix, and write it with PANCAN metadata. The reference
-distinguishes merge axes (axis=1 appends sample columns for genomic
-matrices, axis=0 appends rows for segment/SNV/phenotype tables); in the
-engine's long format both are the same keyed row union, so one code path
-covers every dtype.
+GDC-PANCAN matrix, and write it with PANCAN metadata. The merge is the
+library's ``merge_xena``, the one behind the ``merge-xena`` subcommand:
+the dtype's kind picks a long-format union for genomic matrices and a
+row union for segment/SNV/phenotype/survival tables.
 
 Usage::
 
@@ -45,15 +44,8 @@ def pan_merge(
     """Merge per-project matrices into pan-cancer matrices; returns the
     written matrix paths. Datatypes with no per-project matrices are
     skipped with a message (parity with the reference's per-dtype loop)."""
-    from xena_gdc_etl_spark.gdc_pipelines import DTYPE_SPECS
     from xena_gdc_etl_spark.metadata import build_metadata, write_metadata
-    from xena_gdc_etl_spark.operators.matrix import union_matrices
-    from xena_gdc_etl_spark.sources.xena_tsv import (
-        read_wide_tsv,
-        read_xena_tsv,
-        write_wide_tsv,
-        write_xena_tsv,
-    )
+    from xena_gdc_etl_spark.pipeline import merge_xena
 
     out_dir = out_dir or os.path.join(root_dir, PANCAN_PROJECT, "Xena_Matrices")
     os.makedirs(out_dir, exist_ok=True)
@@ -68,21 +60,8 @@ def pan_merge(
             continue
         print(f"Merging {len(paths)} {dtype} matrices ...")
         out = os.path.join(out_dir, f"{PANCAN_PROJECT}.{dtype}.tsv")
-        spec = DTYPE_SPECS.get(dtype)
-        if spec is not None and spec.kind == "matrix":
-            merged = union_matrices([read_xena_tsv(spark, p) for p in paths])
-            write_xena_tsv(merged, out)
-        else:
-            # survival / phenotype / segment tables: schema-aligned row union
-            # of the per-project TSVs (the reference's axis=0 concat)
-            write_wide_tsv(read_wide_tsv(spark, paths), out)
-        meta = build_metadata(
-            PANCAN_PROJECT,
-            dtype if dtype in DTYPE_SPECS or dtype in ("survival", "clinical")
-            else "clinical",
-            out,
-            gdc_release,
-        )
+        merge_xena(spark, paths, dtype, out)
+        meta = build_metadata(PANCAN_PROJECT, dtype, out, gdc_release)
         # the reference renders the PANCAN cohort explicitly (panTCGA.py:62)
         meta["cohort"] = meta["xena_cohort"] = PANCAN_COHORT
         write_metadata(meta, out)

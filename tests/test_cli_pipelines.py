@@ -674,17 +674,130 @@ def test_cli_etl_source_writes_metadata_sidecar(spark, tmp_path):
     assert os.path.exists(out + ".json"), res.stdout
 
 
-def test_cli_etl_source_segment_dtype_guidance(spark, tmp_path):
-    src = str(tmp_path / "raw2")
+def test_cli_etl_source_segment_dtype(spark, tmp_path):
+    """etl --source routes by the dtype's kind: a segment parquet becomes
+    the renamed row-stacked segment table, written verbatim, plus its
+    sidecar."""
+    src = str(tmp_path / "seg")
     spark.createDataFrame(
-        [("s1", "g1", 3.0)], ["sample", "feature", "value"]
+        [("s1", "chr1", 100, 200, 0.5), ("s2", "chr2", 5, 50, -1.25)],
+        "sample string, Chromosome string, Start int, End int, Segment_Mean double",
     ).write.mode("overwrite").parquet(src)
+    out = str(tmp_path / "seg.tsv")
     res = run_cli(
-        "etl", "--source", src, "--dtype", "segment_cnv_DNAcopy",
-        "--out", str(tmp_path / "m2"),
+        "etl", "--source", src, "--dtype", "segment_cnv_DNAcopy", "--out", out,
+        "--project", "TCGA-ZZ",
     )
-    assert res.returncode == 2
-    assert "segment" in res.stderr and "manifest" in res.stderr
+    assert res.returncode == 0, res.stderr[-1500:]
+    assert _read_tsv_rows(out) == [
+        ["sample", "Chrom", "Start", "End", "value"],
+        ["s1", "chr1", "100", "200", "0.5"],
+        ["s2", "chr2", "5", "50", "-1.25"],
+    ]
+    meta = json.load(open(out + ".json"))
+    assert meta["type"] == "genomicSegment"
+    assert meta["xena_dtype"] == "segment_cnv_DNAcopy"
+
+
+def _read_tsv_rows(path):
+    """Header then the sorted body rows of a single-part TSV directory."""
+    import csv
+
+    (part,) = glob.glob(os.path.join(path, "part-*"))
+    rows = list(csv.reader(open(part), delimiter="\t"))
+    return rows[:1] + sorted(rows[1:])
+
+
+def test_registry_sidecar_type_follows_kind(tmp_path):
+    """Every registered dtype renders a sidecar whose ``type`` is the
+    table shape its kind writes, and every dtype the CLI offers resolves
+    in the registry."""
+    import argparse
+
+    from xena_gdc_etl_spark.cli import create_parser
+
+    types = {
+        "matrix": "genomicMatrix",
+        "segment": "genomicSegment",
+        "maf": "mutationVector",
+        "phenotype": "clinicalMatrix",
+        "survival": "clinicalMatrix",
+    }
+    for dtype, spec in DTYPE_SPECS.items():
+        meta = build_metadata("TCGA-BRCA", dtype, str(tmp_path / dtype))
+        assert meta["type"] == types[spec.kind], dtype
+        assert meta["label"], dtype
+    assert len(supported_dtypes()) == 22
+    assert all(DTYPE_SPECS[d].kind in ("matrix", "segment", "maf")
+               for d in supported_dtypes())
+    (sub,) = (
+        a for a in create_parser()._actions
+        if isinstance(a, argparse._SubParsersAction)
+    )
+    (pheno,) = (a for a in sub.choices["etl-pheno"]._actions if a.dest == "dtype")
+    assert sorted(pheno.choices) == [
+        "GDC_phenotype", "biospecimen", "clinical", "raw_phenotype"
+    ]
+    assert all(DTYPE_SPECS[d].kind == "phenotype" for d in pheno.choices)
+
+
+def test_export_and_merge_head_matrix_with_index_name(spark, tmp_path):
+    """Exported and merged matrix-kind files head their index column with
+    the dtype's index name, as the reference's set_index/to_csv does;
+    xena-eql still reads them."""
+    from xena_gdc_etl_spark.pipeline import XenaDatasetSpark
+
+    paths = []
+    for project in ("TCGA-AA", "TCGA-BB"):
+        raw = spark.createDataFrame(
+            [(f"{project}-s1", "ENSG1", 3.0), (f"{project}-s1", "ENSG2", 1.0)],
+            ["sample", "feature", "value"],
+        )
+        ds = XenaDatasetSpark(
+            projects=project, xena_dtype="star_counts", root_dir=str(tmp_path)
+        )
+        paths.append(ds.export(ds.transform(raw)))
+    outdir = str(tmp_path / "merged")
+    res = run_cli(
+        "merge-xena", "-f", *paths, "-t", "star_counts", "-o", outdir,
+        "-n", "m.tsv",
+    )
+    assert res.returncode == 0, res.stderr[-1500:]
+    merged = os.path.join(outdir, "m.tsv")
+    for path in (*paths, merged):
+        assert _read_tsv_rows(path)[0][0] == "Ensembl_ID", path
+    eql = run_cli("xena-eql", merged, merged)
+    assert eql.returncode == 0 and "Equal." in eql.stdout
+
+
+def test_cli_merge_xena_row_tables_union(tmp_path):
+    """Survival and segment files are row tables: merge-xena unions their
+    rows under the first file's header, values verbatim, instead of
+    reading them as numeric matrices (which fails on a string cell)."""
+    cases = {
+        "survival": (
+            ["sample", "OS", "OS.time", "_PATIENT"],
+            [["s1", "1", "912.0", "P1"]],
+            [["s3", "0", "30.0", "P2"], ["s4", "1", "5.0", "P3"]],
+        ),
+        "segment_cnv_DNAcopy": (
+            ["sample", "Chrom", "Start", "End", "value"],
+            [["s1", "chr1", "100", "200", "0.5"]],
+            [["s2", "chr2", "5", "50", "-1.25"]],
+        ),
+    }
+    for dtype, (header, rows_a, rows_b) in cases.items():
+        a, b = tmp_path / f"{dtype}.a.tsv", tmp_path / f"{dtype}.b.tsv"
+        _write_tsv(a, header, rows_a)
+        _write_tsv(b, header, rows_b)
+        outdir = str(tmp_path / f"merged-{dtype}")
+        res = run_cli(
+            "merge-xena", "-f", str(a), str(b), "-t", dtype, "-o", outdir,
+            "-n", "out.tsv",
+        )
+        assert res.returncode == 0, (dtype, res.stderr[-1500:])
+        got = _read_tsv_rows(os.path.join(outdir, "out.tsv"))
+        assert got == [header] + sorted(rows_a + rows_b), dtype
 
 
 def test_cli_postprocess_trim_collision_fails_loud(tmp_path):

@@ -1199,6 +1199,60 @@ def test_ivf_pq_topk_all_cells_randomized_brute_equivalence(spark):
         assert got == _brute_topk(cands, k, descending=False), f"case {case}"
 
 
+def test_ivf_pq_topk_duplicate_query_id_rows(spark):
+    """A query id given on two rows (vectors v and -v): every candidate is
+    scored against both rows' ADC tables and kept once, at its best
+    distance, so the result is the same in either row order, no match_id
+    repeats, and with every cell probed it equals a brute force taking
+    each candidate's minimum over the two rows."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    n, n_cells, m, kc, k = 40, 4, 2, 4, 3
+    vecs = rng.normal(size=(n, 4))
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id bigint, embedding array<double>",
+    ).coalesce(1)
+    v1 = [float(x) for x in vecs[7]]
+    rows = [(100, v1), (100, [-x for x in v1])]
+
+    def run(query_rows):
+        queries = spark.createDataFrame(
+            query_rows, "vec_id bigint, embedding array<double>"
+        )
+        return sorted(
+            tuple(r)
+            for r in sim.ivf_pq_topk(
+                emb, queries, n_cells=n_cells, m=m, k_codebook=kc, k=k,
+                nprobe=n_cells, iterations=2,
+            ).collect()
+        )
+
+    got = run(rows)
+    assert got == run(rows[::-1])
+    assert len({r[1] for r in got}) == len(got) == k
+
+    _, books = sim.ivf_pq_train(emb, n_cells, m, kc, 2)
+    sub = 4 // m
+    codes = np.stack([
+        np.argmin(np.round(
+            ((vecs[:, None, j * sub:(j + 1) * sub] - books[j][None]) ** 2)
+            .sum(axis=2), 9), axis=1)
+        for j in range(m)
+    ], axis=1)
+    dists = []
+    for _, qv in rows:
+        tabs = np.stack([
+            ((np.array(qv)[j * sub:(j + 1) * sub] - books[j]) ** 2).sum(axis=1)
+            for j in range(m)
+        ])
+        dists.append(np.round(tabs[np.arange(m)[None, :], codes].sum(axis=1), 9))
+    best = np.minimum(*dists)
+    cands = [(100, i, float(best[i])) for i in range(n)]
+    assert got == _brute_topk(cands, k, descending=False)
+
+
 def test_suggest_n_cells_scaling_and_clamps():
     """n_cells ≈ rows/target, clamped to [min_cells, broadcast cap];
     degenerate inputs fail loudly."""
@@ -1321,14 +1375,11 @@ def test_simhash_pairs_match_blocks_equivalence(spark):
                          match_blocks=2)
 
 
-def test_simhash_pairs_expansion_routing(spark):
-    """Pair expansion routes by bucket profile: combination banding
-    (match_blocks > 1, keyspace >> N so buckets are tiny) keeps the
-    single flatten/transform expression; the saturated-key one-band
-    profile uses the two-Generate codegen expansion (measured faster on
-    big buckets, round 18). Both are correctness-pinned against brute
-    force above; this pins the routing so a refactor can't silently
-    collapse the branches."""
+def test_simhash_pairs_one_expansion_form(spark):
+    """Pair expansion is the two-Generate codegen form for every bucket
+    profile: combination banding (match_blocks > 1, tiny buckets) and the
+    saturated-key one-band profile alike, with no interpreted lambda
+    expression. Both are correctness-pinned against brute force above."""
     df = spark.createDataFrame(
         [(0, 7), (1, 7)], "doc_id bigint, simhash bigint"
     )
@@ -1338,8 +1389,8 @@ def test_simhash_pairs_expansion_routing(spark):
     classic = dd.simhash_pairs(
         df, bits=64, bands=4, max_distance=3
     )._jdf.queryExecution().executedPlan().toString()
-    assert "posexplode" not in manku and "lambdafunction" in manku
-    assert "posexplode" in classic and "lambdafunction" not in classic
+    for plan in (manku, classic):
+        assert "posexplode" in plan and "lambdafunction" not in plan
 
 
 def test_sq_l2_topk_exact_and_dup_id_safe(spark):

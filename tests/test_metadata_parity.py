@@ -6,10 +6,9 @@ METADATA_VARIABLES (constants.py:71).
 
 from __future__ import annotations
 
+from xena_gdc_etl_spark.gdc_pipelines import DTYPE_SPECS
 from xena_gdc_etl_spark.metadata import (
     GDC_XENA_COHORT,
-    METADATA_VARIABLES,
-    TEMPLATE_FAMILY,
     build_metadata,
     xena_cohort,
 )
@@ -22,10 +21,11 @@ def test_cohort_map_fallback():
 
 
 def test_every_dtype_has_family_and_vars_cover_reference():
-    # METADATA_VARIABLES keys must match the reference inventory
+    # registry entries (template variables + family) must match the
+    # reference inventory (METADATA_VARIABLES / METADATA_TEMPLATE)
     for dtype in ("star_tpm", "methylation450", "protein", "somaticmutation_wxs"):
-        assert dtype in METADATA_VARIABLES
-        assert dtype in TEMPLATE_FAMILY
+        assert DTYPE_SPECS[dtype].variables
+        assert DTYPE_SPECS[dtype].family
 
 
 def test_rna_template_fields(tmp_path):

@@ -1,5 +1,5 @@
 """Command-line interface — parity with the reference's ``xge`` tool
-(/root/reference/xena_gdc_etl/main.py: subcommands etl, metadata, xena-eql,
+(xena_gdc_etl/main.py: subcommands etl, metadata, xena-eql,
 merge-xena, gdc-check-new), re-targeted at the Spark engine's sources.
 
     python -m xena_gdc_etl_spark.cli etl --source DIR --dtype star_counts ...
@@ -17,6 +17,8 @@ import sys
 
 
 def create_parser() -> argparse.ArgumentParser:
+    from xena_gdc_etl_spark.gdc_pipelines import dtypes_of
+
     parser = argparse.ArgumentParser(
         prog="xge-spark", description="Spark-native Xena/GDC ETL engine"
     )
@@ -52,9 +54,7 @@ def create_parser() -> argparse.ArgumentParser:
     pheno.add_argument("--biospecimen", default=None, help="biospecimen parquet path")
     pheno.add_argument("--project", required=True)
     pheno.add_argument(
-        "--dtype",
-        default="GDC_phenotype",
-        choices=["clinical", "biospecimen", "raw_phenotype", "GDC_phenotype"],
+        "--dtype", default="GDC_phenotype", choices=dtypes_of("phenotype")
     )
     pheno.add_argument("--root-dir", default=".")
     pheno.add_argument("--release", default="")
@@ -414,9 +414,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if options.subcomm == "etl":
-        from xena_gdc_etl_spark.gdc_pipelines import transform_matrix_dtype
-        from xena_gdc_etl_spark.sources.xena_tsv import write_xena_tsv
-
         if options.manifest:
             # reference main.py:19 etl → download THEN transform
             if not (options.download_dir and options.project):
@@ -444,39 +441,25 @@ def main(argv: list[str] | None = None) -> int:
         if not (options.source and options.out):
             print("etl needs --source and --out (or --manifest)", file=sys.stderr)
             return 2
-        raw = spark.read.parquet(options.source)
-        from xena_gdc_etl_spark.gdc_pipelines import DTYPE_SPECS
-
-        kind = getattr(DTYPE_SPECS.get(options.dtype), "kind", "matrix")
-        if kind != "matrix":
-            # fail with GUIDANCE, not a raw transform traceback: segment/
-            # MAF dtypes route through their dedicated pipeline kinds
-            print(
-                f"--dtype {options.dtype} is a {kind} dtype: use the "
-                "--manifest path (XenaDatasetSpark routes by kind) "
-                "instead of --source",
-                file=sys.stderr,
-            )
-            return 2
-        matrix = transform_matrix_dtype(
-            raw,
-            options.dtype,
-            sample_col=options.sample_col,
-            feature_col=options.feature_col,
-            value_col=options.value_col,
-        )
-        write_xena_tsv(matrix, options.out)
-        # metadata sidecar like every other landing path (the manifest
-        # route and gdc2xena both emit one; a Xena loader needs it)
         from xena_gdc_etl_spark.metadata import build_metadata, write_metadata
+        from xena_gdc_etl_spark.pipeline import XenaDatasetSpark, write_dataset
 
+        # the dtype's kind picks the transform and the sink, as for the
+        # manifest route and gdc2xena
+        project = options.project or "unknown"
+        ds = XenaDatasetSpark(projects=project, xena_dtype=options.dtype)
+        raw = spark.read.parquet(options.source).withColumnsRenamed(
+            {
+                options.sample_col: "sample",
+                options.feature_col: "feature",
+                options.value_col: "value",
+            }
+        )
+        write_dataset(options.dtype, ds.transform(raw), options.out)
+        # metadata sidecar like every other landing path (a Xena loader
+        # needs it)
         meta_path = write_metadata(
-            build_metadata(
-                options.project or "unknown",
-                options.dtype,
-                options.out,
-                options.release or "",
-            ),
+            build_metadata(project, options.dtype, options.out, options.release),
             options.out,
         )
         print(f"Xena matrix is saved at {options.out}.")
@@ -536,17 +519,11 @@ def main(argv: list[str] | None = None) -> int:
         return 0 if equal else 1
 
     if options.subcomm == "merge-xena":
-        from xena_gdc_etl_spark.operators.matrix import union_matrices
-        from xena_gdc_etl_spark.sources.xena_tsv import read_xena_tsv, write_xena_tsv
+        from xena_gdc_etl_spark.pipeline import merge_xena
 
-        frames = [read_xena_tsv(spark, f) for f in options.files]
-        # Long-format union covers both reference merge axes: axis=0 appends
-        # samples, axis=1 appends features — in long form both are row unions
-        # keyed by (sample, feature).
-        merged = union_matrices(frames)
         name = options.name or f"{options.cohort or 'MergedCohort'}.{options.datatype}.tsv"
         out = f"{options.outdir.rstrip('/')}/{name}"
-        write_xena_tsv(merged, out)
+        merge_xena(spark, options.files, options.datatype, out)
         print(f'Merged "{options.datatype}" matrix is ready at {out}')
         return 0
 
@@ -556,8 +533,8 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
         from pyspark.sql.functions import broadcast
 
+        from xena_gdc_etl_spark.gdc_pipelines import DTYPE_SPECS
         from xena_gdc_etl_spark.operators.mapping import (
-            SAMPLE_COLUMN_DTYPES,
             SUFFIX_TRIM_PROJECTS,
             postprocess_rename_dedup,
             trim_sample_suffix,
@@ -575,7 +552,7 @@ def main(argv: list[str] | None = None) -> int:
             f"{options.project} data will be postprocessed for the "
             f"following datatype: {dtype}."
         )
-        col_form = dtype in SAMPLE_COLUMN_DTYPES
+        col_form = getattr(DTYPE_SPECS.get(dtype), "sample_columns", False)
         trim = SUFFIX_TRIM_PROJECTS.get(options.project)
         if col_form and trim is None:
             # samples are COLUMN names, first column is the feature id.

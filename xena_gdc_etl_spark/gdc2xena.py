@@ -1,14 +1,15 @@
 """Batch ETL orchestration — the reference's top-level ``gdc2xena`` driver
-(/root/reference/xena_gdc_etl/gdc2xena.py:40) re-expressed for the Spark
-engine.
+(xena_gdc_etl/gdc2xena.py:40) re-expressed for the Spark engine.
 
 The reference iterates projects × dtypes, builds the matching dataset kind
 (GDCOmicset / GDCPhenoset / GDCSurvivalset), runs download → transform →
 metadata per dataset, records failures to a timestamped ``etl_*.err`` log
 plus ``unfinished.json`` (gdc2xena.py:79-110), and continues past errors so
 one bad dataset never kills a 30-project import. This module keeps that
-contract; the per-dataset work is the Spark pipeline classes, so the loop
-stays a thin driver — all heavy lifting is cluster-side plans.
+contract; the dtype's kind in the registry (``gdc_pipelines.DTYPE_SPECS``)
+picks the dataset class, and the per-dataset work is the Spark pipeline
+classes, so the loop stays a thin driver — all heavy lifting is
+cluster-side plans.
 
 Source resolution is injectable: the sandbox has no GDC network access, so
 ``gdc2xena`` takes a ``sources`` callable mapping (project, dtype) to the
@@ -29,11 +30,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xena_gdc_etl_spark.gdc_pipelines import DTYPE_SPECS
 from xena_gdc_etl_spark.sources.xena_tsv import tsv_header, tsv_reader
-
-# dtypes routed to each dataset kind (reference gdc2xena.py:86-92)
-PHENO_DTYPES = ("clinical", "biospecimen", "raw_phenotype", "GDC_phenotype")
-SURVIVAL_DTYPE = "survival"
 
 
 @dataclass
@@ -53,13 +51,14 @@ def default_sources(root_dir: str) -> Callable[[str, str], dict]:
 
     def resolve(project: str, dtype: str) -> dict:
         raw = os.path.join(root_dir, project, "Raw_Data")
-        if dtype == SURVIVAL_DTYPE:
+        kind = getattr(DTYPE_SPECS.get(dtype), "kind", None)
+        if kind == "survival":
             return {
                 "survival": os.path.join(raw, "survival.parquet"),
                 "case_samples": os.path.join(raw, "case_samples.parquet"),
                 "raw_dir": raw,
             }
-        if dtype in PHENO_DTYPES:
+        if kind == "phenotype":
             bio = os.path.join(raw, "biospecimen.parquet")
             return {
                 "clinical": os.path.join(raw, "clinical.parquet"),
@@ -90,12 +89,14 @@ def _run_one(
         XenaDatasetSpark,
     )
 
-    if dtype == SURVIVAL_DTYPE:
+    # routed by the registry kind (reference gdc2xena.py:86-92)
+    kind = getattr(DTYPE_SPECS.get(dtype), "kind", None)
+    if kind == "survival":
         ds = GDCSurvivalsetSpark(
             projects=project, root_dir=root_dir, gdc_release=gdc_release
         )
         return ds.run(spark, src["survival"], src["case_samples"])
-    if dtype in PHENO_DTYPES:
+    if kind == "phenotype":
         ds = GDCPhenosetSpark(
             projects=project,
             xena_dtype=dtype,

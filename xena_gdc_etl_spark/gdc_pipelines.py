@@ -1,13 +1,23 @@
-"""Dataset-type pipeline registry — the engine's ``GDCOmicset`` parity.
+"""Dtype registry — the one description of every dataset type the engine
+writes, and the per-kind transforms.
 
 The reference binds each ``xena_dtype`` to a transform recipe
-(/root/reference/xena_gdc_etl/xena_dataset.py:927-1022 ``_RAWS2MATRIX_FUNCS``):
-which raw columns to read, the row index name, whether repeats are averaged,
-whether the matrix is log2(x+1)-transformed, NA filling, and rows to drop.
-Here the same registry drives DataFrame pipelines over LONG-format input
-(sample, feature, value) — the scalable shape of "one column per sample
-file". ``raw_long`` frames come from any source (parquet fact tables, melted
-TSVs); the per-dtype semantics are identical.
+(xena_gdc_etl/xena_dataset.py:927-1022 ``_RAWS2MATRIX_FUNCS``)
+and a metadata template (constants.py:43 ``METADATA_TEMPLATE``, filled
+from constants.py:71 ``METADATA_VARIABLES``). Here one :class:`DtypeSpec`
+per dtype carries both: its template family and variables, and the
+postprocess sample-column flag. Everything else is a function of the
+family (``FAMILIES``): the kind (matrix, segment, maf, phenotype or
+survival), whether values are log2(x+1)-transformed, the index header and
+the STAR summary rows to drop. Every layer reads this registry — the
+dataset pipelines pick their transform and sink by kind, ``build_metadata``
+renders the family's template, ``gdc2xena`` routes by kind and postprocess
+reads the sample-column flag.
+
+The matrix recipe runs over LONG-format input (sample, feature, value) —
+the scalable shape of "one column per sample file". ``raw_long`` frames
+come from any source (parquet fact tables, melted TSVs); the per-dtype
+semantics are identical.
 """
 
 from __future__ import annotations
@@ -33,45 +43,110 @@ STAR_SUMMARY_ROWS = (
     "N_ambiguous",
 )
 
+# Template family → (kind, log2(x+1) step, index header), each a function
+# of the family: its template (resources/template.<family>.meta.json)
+# names the table shape in ``type`` and says in its wrangling text whether
+# values were log2(x+1)-transformed, and a family's files share one
+# feature id.
+FAMILIES = {
+    "rna": ("matrix", True, "Ensembl_ID"),
+    "mirna": ("matrix", True, "miRNA_ID"),
+    "mirna_isoform": ("matrix", True, "isoform_coords"),
+    "ascat": ("matrix", False, "Ensembl_ID"),
+    "absolute": ("matrix", False, "Ensembl_ID"),
+    "methylation": ("matrix", False, "Composite Element REF"),
+    "protein": ("matrix", False, "peptide_target"),
+    "cnv": ("segment", False, "sample"),
+    "snv": ("maf", False, "sample"),
+    "clinical": ("phenotype", False, "sample"),
+    "survival": ("survival", False, "sample"),
+}
+
 
 @dataclass(frozen=True)
 class DtypeSpec:
-    """Per-dtype matrix semantics (mirrors a _RAWS2MATRIX_FUNCS entry)."""
+    """One registered dtype: its metadata template family and variables,
+    and whether postprocess reads it with samples as column names (the
+    reference's ``sample_columns`` list, postprocessing.py:78)."""
 
     name: str
-    index_name: str
-    log2tf: bool = True
-    average_repeats: bool = True
-    drop_features: tuple = ()
-    fillna: float | None = None
-    kind: str = "matrix"  # "matrix" | "segment" | "maf"
+    family: str
+    variables: dict = field(default_factory=dict)
+    sample_columns: bool = False
+
+    @property
+    def kind(self) -> str:
+        return FAMILIES[self.family][0]
+
+    @property
+    def log2tf(self) -> bool:
+        return FAMILIES[self.family][1]
+
+    @property
+    def index_name(self) -> str:
+        return FAMILIES[self.family][2]
+
+    @property
+    def drop_features(self) -> tuple:
+        return STAR_SUMMARY_ROWS if self.family == "rna" else ()
 
 
+def _probe_map(platform: str, num: str) -> dict:
+    return {"probe_map": f"{platform}.hg38.manifest.gencode.v36.probeMap", "platform_num": num}
+
+
+# Columns: name, template family, template variables, sample_columns.
 DTYPE_SPECS: dict[str, DtypeSpec] = {
     spec.name: spec
     for spec in [
-        DtypeSpec("star_counts", "Ensembl_ID", drop_features=STAR_SUMMARY_ROWS),
-        DtypeSpec("star_tpm", "Ensembl_ID", drop_features=STAR_SUMMARY_ROWS),
-        DtypeSpec("star_fpkm", "Ensembl_ID", drop_features=STAR_SUMMARY_ROWS),
-        DtypeSpec("star_fpkm-uq", "Ensembl_ID", drop_features=STAR_SUMMARY_ROWS),
-        DtypeSpec("mirna", "miRNA_ID"),
-        DtypeSpec("mirna_isoform", "isoform_coords"),
-        DtypeSpec("gene-level_ascat-ngs", "Ensembl_ID", log2tf=False, fillna=float("nan")),
-        DtypeSpec("gene-level_ascat2", "Ensembl_ID", log2tf=False, fillna=float("nan")),
-        DtypeSpec("gene-level_ascat3", "Ensembl_ID", log2tf=False, fillna=float("nan")),
-        DtypeSpec("gene-level_absolute", "Ensembl_ID", log2tf=False, fillna=float("nan")),
-        DtypeSpec("methylation_epic", "Composite Element REF", log2tf=False),
-        DtypeSpec("methylation_epic_v2", "Composite Element REF", log2tf=False),
-        DtypeSpec("methylation27", "Composite Element REF", log2tf=False),
-        DtypeSpec("methylation450", "Composite Element REF", log2tf=False),
-        DtypeSpec("protein", "peptide_target", log2tf=False),
-        DtypeSpec("segment_cnv_ascat-ngs", "sample", kind="segment", log2tf=False),
-        DtypeSpec("segment_cnv_DNAcopy", "sample", kind="segment", log2tf=False),
-        DtypeSpec("masked_cnv_DNAcopy", "sample", kind="segment", log2tf=False),
-        DtypeSpec("allele_cnv_ascat2", "sample", kind="segment", log2tf=False),
-        DtypeSpec("allele_cnv_ascat3", "sample", kind="segment", log2tf=False),
-        DtypeSpec("somaticmutation_wxs", "sample", kind="maf", log2tf=False),
-        DtypeSpec("somaticmutation_targeted", "sample", kind="maf", log2tf=False),
+        DtypeSpec("star_counts", "rna", {"gdc_type": "STAR - Counts"}, True),
+        DtypeSpec("star_tpm", "rna", {"gdc_type": "STAR - TPM", "unit": "tpm"}, True),
+        DtypeSpec("star_fpkm", "rna", {"gdc_type": "STAR - FPKM", "unit": "fpkm"}, True),
+        DtypeSpec("star_fpkm-uq", "rna", {"gdc_type": "STAR - FPKM-UQ", "unit": "fpkm-uq"}, True),
+        DtypeSpec("mirna", "mirna", {"gdc_type": "miRNA Expression Quantification"}, True),
+        DtypeSpec(
+            "mirna_isoform", "mirna_isoform", {"gdc_type": "Isoform Expression Quantification"}
+        ),
+        DtypeSpec("segment_cnv_ascat-ngs", "cnv", {"gdc_type": "Copy Number Segment (AscatNGS)"}),
+        DtypeSpec("segment_cnv_DNAcopy", "cnv", {"gdc_type": "Copy Number Segment (DNAcopy)"}),
+        DtypeSpec(
+            "masked_cnv_DNAcopy", "cnv", {"gdc_type": "Masked Copy Number Segment (DNAcopy)"}
+        ),
+        DtypeSpec(
+            "allele_cnv_ascat2", "cnv", {"gdc_type": "Allele-specific Copy Number Segment (ASCAT2)"}
+        ),
+        DtypeSpec(
+            "allele_cnv_ascat3", "cnv", {"gdc_type": "Allele-specific Copy Number Segment (ASCAT3)"}
+        ),
+        DtypeSpec("somaticmutation_wxs", "snv", {"gdc_type": "Ensemble Somatic Variant (WXS)"}),
+        DtypeSpec(
+            "somaticmutation_targeted",
+            "snv",
+            {"gdc_type": "Ensemble Somatic Variant (Targeted Sequencing)"},
+        ),
+        DtypeSpec(
+            "gene-level_ascat-ngs", "ascat", {"gdc_type": "Gene Level Copy Number (AscatNGS)"}, True
+        ),
+        DtypeSpec("gene-level_ascat2", "ascat", {"gdc_type": "Gene Level Copy Number (ASCAT2)"}),
+        DtypeSpec("gene-level_ascat3", "ascat", {"gdc_type": "Gene Level Copy Number (ASCAT3)"}),
+        DtypeSpec(
+            "gene-level_absolute", "absolute", {"gdc_type": "Gene Level Copy Number (ABSOLUTE)"}
+        ),
+        DtypeSpec("methylation_epic", "methylation", _probe_map("EPIC", "epic"), True),
+        DtypeSpec("methylation_epic_v2", "methylation", _probe_map("EPIC", "epic v2"), True),
+        DtypeSpec("methylation27", "methylation", _probe_map("HM27", "27")),
+        DtypeSpec("methylation450", "methylation", _probe_map("HM450", "450")),
+        DtypeSpec(
+            "protein",
+            "protein",
+            {"gdc_type": "Protein Expression Quantification", "platform": "rppa"},
+        ),
+        # phenotype and survival tables (reference gdc2xena.py:86-92)
+        DtypeSpec("clinical", "clinical"),
+        DtypeSpec("biospecimen", "clinical"),
+        DtypeSpec("raw_phenotype", "clinical"),
+        DtypeSpec("GDC_phenotype", "clinical"),
+        DtypeSpec("survival", "survival"),
     ]
 }
 
@@ -92,9 +167,14 @@ MAF_RENAMES = {
 }
 
 
+def dtypes_of(*kinds: str) -> list[str]:
+    """The registered dtypes of ``kinds``, in registry order."""
+    return [name for name, spec in DTYPE_SPECS.items() if spec.kind in kinds]
+
+
 def supported_dtypes() -> list[str]:
-    """Parity with ``GDCOmicset.get_supported_dtype()``."""
-    return sorted(DTYPE_SPECS)
+    """The omics dtypes — parity with ``GDCOmicset.get_supported_dtype()``."""
+    return sorted(dtypes_of("matrix", "segment", "maf"))
 
 
 def transform_matrix_dtype(

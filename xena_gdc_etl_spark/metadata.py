@@ -1,13 +1,14 @@
 """Matrix metadata generation — template-field parity with the reference.
 
 The reference renders a JSON sidecar per matrix from Jinja2 templates
-(/root/reference/xena_gdc_etl/xena_dataset.py ``metadata()``; templates in
+(xena_gdc_etl/xena_dataset.py ``metadata()``; templates in
 xena_gdc_etl/resources/template.*.meta.json) with per-dtype variables
 (constants.py:71 ``METADATA_VARIABLES``), a per-dtype template choice
 (constants.py:43 ``METADATA_TEMPLATE``) and cohort display names
-(constants.py:6 ``GDC_XENA_COHORT``). Here the same fields are rendered
-with the stdlib: each template family is a builder producing the identical
-key set (cohort/url/dataSubType/label/type/wrangler/version/unit/...), so a
+(constants.py:6 ``GDC_XENA_COHORT``). Here the dtype's template family and
+variables come from the dtype registry (``gdc_pipelines.DTYPE_SPECS``),
+and each family is a stdlib builder producing the identical key set
+(cohort/url/dataSubType/label/type/wrangler/version/unit/...), so a
 sidecar produced by this engine carries the fields a Xena loader expects.
 """
 
@@ -16,6 +17,8 @@ from __future__ import annotations
 import json
 import os
 import time
+
+from xena_gdc_etl_spark.gdc_pipelines import DTYPE_SPECS
 
 GDC_API_DATA_URL = "https://api.gdc.cancer.gov/data/"
 WRANGLER = "Xena GDC ETL script"
@@ -56,74 +59,6 @@ GDC_XENA_COHORT = {
     "TCGA-UCS": "GDC TCGA Uterine Carcinosarcoma (UCS)",
     "TCGA-CHOL": "GDC TCGA Bile Duct Cancer (CHOL)",
     "TCGA-DLBC": "GDC TCGA Large B-cell Lymphoma (DLBC)",
-}
-
-# Per-dtype template variables (constants.py:71 METADATA_VARIABLES).
-METADATA_VARIABLES: dict[str, dict] = {
-    "star_counts": {"gdc_type": "STAR - Counts"},
-    "star_tpm": {"gdc_type": "STAR - TPM", "unit": "tpm"},
-    "star_fpkm": {"gdc_type": "STAR - FPKM", "unit": "fpkm"},
-    "star_fpkm-uq": {"gdc_type": "STAR - FPKM-UQ", "unit": "fpkm-uq"},
-    "mirna": {"gdc_type": "miRNA Expression Quantification"},
-    "mirna_isoform": {"gdc_type": "Isoform Expression Quantification"},
-    "segment_cnv_ascat-ngs": {"gdc_type": "Copy Number Segment (AscatNGS)"},
-    "segment_cnv_DNAcopy": {"gdc_type": "Copy Number Segment (DNAcopy)"},
-    "masked_cnv_DNAcopy": {"gdc_type": "Masked Copy Number Segment (DNAcopy)"},
-    "allele_cnv_ascat2": {"gdc_type": "Allele-specific Copy Number Segment (ASCAT2)"},
-    "allele_cnv_ascat3": {"gdc_type": "Allele-specific Copy Number Segment (ASCAT3)"},
-    "somaticmutation_wxs": {"gdc_type": "Ensemble Somatic Variant (WXS)"},
-    "somaticmutation_targeted": {
-        "gdc_type": "Ensemble Somatic Variant (Targeted Sequencing)"
-    },
-    "gene-level_ascat-ngs": {"gdc_type": "Gene Level Copy Number (AscatNGS)"},
-    "gene-level_ascat2": {"gdc_type": "Gene Level Copy Number (ASCAT2)"},
-    "gene-level_ascat3": {"gdc_type": "Gene Level Copy Number (ASCAT3)"},
-    "gene-level_absolute": {"gdc_type": "Gene Level Copy Number (ABSOLUTE)"},
-    "methylation_epic": {
-        "probe_map": "EPIC.hg38.manifest.gencode.v36.probeMap",
-        "platform_num": "epic",
-    },
-    "methylation_epic_v2": {
-        "probe_map": "EPIC.hg38.manifest.gencode.v36.probeMap",
-        "platform_num": "epic v2",
-    },
-    "methylation27": {
-        "probe_map": "HM27.hg38.manifest.gencode.v36.probeMap",
-        "platform_num": "27",
-    },
-    "methylation450": {
-        "probe_map": "HM450.hg38.manifest.gencode.v36.probeMap",
-        "platform_num": "450",
-    },
-    "protein": {"gdc_type": "Protein Expression Quantification", "platform": "rppa"},
-}
-
-# dtype → template family (constants.py:43 METADATA_TEMPLATE).
-TEMPLATE_FAMILY = {
-    "star_counts": "rna",
-    "star_tpm": "rna",
-    "star_fpkm": "rna",
-    "star_fpkm-uq": "rna",
-    "mirna": "mirna",
-    "mirna_isoform": "mirna_isoform",
-    "segment_cnv_ascat-ngs": "cnv",
-    "segment_cnv_DNAcopy": "cnv",
-    "masked_cnv_DNAcopy": "cnv",
-    "allele_cnv_ascat2": "cnv",
-    "allele_cnv_ascat3": "cnv",
-    "somaticmutation_wxs": "snv",
-    "somaticmutation_targeted": "snv",
-    "gene-level_ascat-ngs": "ascat",
-    "gene-level_ascat2": "ascat",
-    "gene-level_ascat3": "ascat",
-    "gene-level_absolute": "absolute",
-    "methylation_epic": "methylation",
-    "methylation_epic_v2": "methylation",
-    "methylation27": "methylation",
-    "methylation450": "methylation",
-    "protein": "protein",
-    "clinical": "clinical",
-    "survival": "survival",
 }
 
 _GDC_DOCS = "https://docs.gdc.cancer.gov/Data/Bioinformatics_Pipelines/"
@@ -308,8 +243,8 @@ def build_metadata(
 ) -> dict:
     """Full metadata sidecar for one matrix: the reference's template
     variables (project/cohort/date/release, xena_dataset.py:553-576) plus
-    the rendered per-dtype template fields (templates + METADATA_VARIABLES
-    parity).
+    the fields of the dtype's template family, rendered with its registry
+    variables (templates + METADATA_VARIABLES parity).
     """
     projects = (
         ",".join(project_id) if isinstance(project_id, list) else project_id
@@ -320,8 +255,9 @@ def build_metadata(
         )
     else:
         date = time.strftime("%m-%d-%Y", time.gmtime())
-    family = TEMPLATE_FAMILY.get(xena_dtype, "")
-    rendered = _render_family(family, METADATA_VARIABLES.get(xena_dtype, {}))
+    spec = DTYPE_SPECS.get(xena_dtype)
+    family, variables = (spec.family, spec.variables) if spec else ("", {})
+    rendered = _render_family(family, variables)
     url = (f"{gdc_release}, " if gdc_release else "") + GDC_API_DATA_URL
     meta = {
         "project_id": projects,
@@ -337,16 +273,6 @@ def build_metadata(
     }
     meta.update(rendered)
     return meta
-
-
-# Backward-compatible label map (used by earlier tests/tools); the canonical
-# label now comes from the rendered template fields.
-TYPE_LABELS = {
-    dtype: _render_family(family, METADATA_VARIABLES.get(dtype, {})).get(
-        "label", dtype
-    )
-    for dtype, family in TEMPLATE_FAMILY.items()
-}
 
 
 def write_metadata(metadata: dict, matrix_path: str) -> str:

@@ -859,38 +859,6 @@ def simhash_pairs(
     )
     if max_bucket_size is not None:
         grouped = grouped.filter(F.size("ids") <= max_bucket_size)
-    if match_blocks > 1:
-        # Combination banding keys on match_blocks·width bits, so the key
-        # space dwarfs N by design and buckets are overwhelmingly size-2
-        # (~582 random candidates at 500k docs for the registered 30-bit
-        # config). At that profile the two-Generate expansion pays two
-        # generator rows plus an array slice per MEMBER for one or two
-        # struct comparisons of real work, so the codegen rewrite that
-        # wins on the big-bucket match_blocks=1 profile below has nothing
-        # to win here: a clean pairwise A/B at sf0.1 (round 18, idle
-        # host, 5 interleaved rounds) measured the two forms within noise
-        # (3.35 vs 3.36 s min). Route by profile and keep the single
-        # flatten/transform expression for combination banding — it is
-        # the exact form whose 100× lane evidence is pinned
-        # (BASELINE §sf10-r14b, e=0.120), so the scale claim needs no
-        # re-pin.
-        # Both forms emit identical rows (equality-checked in the A/B).
-        return (
-            grouped.select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(ids, (x, i) ->"
-                        " filter(transform(slice(ids, i + 2, size(ids)),"
-                        " y -> struct(x.i AS a, y.i AS b,"
-                        " CAST(bit_count(x.f ^ y.f) AS BIGINT) AS hamming)),"
-                        f" p -> p.hamming <= {int(max_distance)}"
-                        " AND p.a != p.b)))"
-                    )
-                ).alias("p")
-            )
-            .select("p.a", "p.b", "p.hamming")
-            .distinct()
-        )
     # Expansion as two stacked codegen explodes + a codegen Filter instead
     # of the nested transform/filter/flatten higher-order expression —
     # same rationale as lsh_candidate_pairs (lambdas stay interpreted

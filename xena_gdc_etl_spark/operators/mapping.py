@@ -79,22 +79,6 @@ def dedup_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
     return df.dropDuplicates(subset=list(subset) if subset else None)
 
 
-# Xena dtypes whose matrices carry SAMPLES AS COLUMN NAMES (the reference's
-# ``sample_columns`` list, postprocessing.py:78); every other dtype is the
-# row form with a 'sample' column.
-SAMPLE_COLUMN_DTYPES = frozenset(
-    {
-        "star_counts",
-        "star_tpm",
-        "star_fpkm",
-        "star_fpkm-uq",
-        "mirna",
-        "gene-level_ascat-ngs",
-        "methylation_epic",
-        "methylation_epic_v2",
-    }
-)
-
 # Projects the reference postprocesses WITHOUT a GDC fetch, by trimming a
 # fixed-length suffix off every sample id (postprocessing.py:121-145).
 SUFFIX_TRIM_PROJECTS = {
@@ -135,7 +119,8 @@ def postprocess_rename_dedup(
     - Rename: broadcast left join against the (sample, case) map; unmapped
       ids pass through (``rename_by_mapping``) — the reference's iterative
       per-column/per-row rename loop collapses into one hash join.
-    - Dedup, sample-column dtypes (postprocessing.py:83-88
+    - Dedup, sample-column dtypes (the registry's ``sample_columns`` flag;
+      postprocessing.py:83-88
       ``columns.duplicated()`` keep-first): two original sample columns that
       renamed onto the same case keep ONE value per (feature, case). The
       reference keeps the first in FILE column order. Pass ``order_col`` —
@@ -156,7 +141,9 @@ def postprocess_rename_dedup(
         map_from=sample_col,
         map_to="case",
     )
-    if data_type in SAMPLE_COLUMN_DTYPES:
+    from xena_gdc_etl_spark.gdc_pipelines import DTYPE_SPECS
+
+    if getattr(DTYPE_SPECS.get(data_type), "sample_columns", False):
         from pyspark.sql import Window
 
         order = (

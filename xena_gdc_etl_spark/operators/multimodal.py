@@ -30,15 +30,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("modality", StringType()),
-        StructField("format", StringType()),
-        StructField("payload", BinaryType()),
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),

@@ -107,8 +107,6 @@ def _below_carry_crossover(df: DataFrame, min_rows: int) -> bool:
         return False
     return df.count() < min_rows
 
-OrderSpec = "Column | str | tuple[Column | str, str]"
-
 
 def _normalize_order(order_cols: list) -> list[tuple[Column, bool]]:
     """Normalize order specs to (value column, is_descending).

@@ -1615,24 +1615,26 @@ def ivf_pq_topk(
     order = _nearest_cells(qm, cn, nprobe)
     from xena_gdc_etl_spark.operators.partitioning import local_rows_df
 
+    # One probe per (query id, cell), carrying the query ROWS that probe
+    # the cell: a query id given on several rows scores each candidate
+    # against every row's own ADC table and keeps the best, so each
+    # (query_id, match_id) comes out once whatever the row order.
+    rows_of: dict[tuple[int, int], list[int]] = {}
+    for qi in range(len(q_ids)):
+        for ci in order[qi]:
+            rows_of.setdefault((int(q_ids[qi]), int(c_ids[ci])), []).append(qi)
     # size-proportional slicing: default core-count slicing made every
     # consumption of this small probe list a task-per-core job
     probes = local_rows_df(
         spark,
-        [
-            (int(q_ids[qi]), int(c_ids[ci]))
-            for qi in range(len(q_ids))
-            for ci in order[qi]
-        ],
-        "query_id long, centroid_id long",
+        [(q, c, rows) for (q, c), rows in rows_of.items()],
+        "query_id long, centroid_id long, query_rows array<int>",
     )
 
-    tables = _adc_tables(qm, books)
-    qidx = {int(q): i for i, q in enumerate(q_ids)}
-    bc = spark.sparkContext.broadcast((qidx, tables))
+    bc = spark.sparkContext.broadcast(_adc_tables(qm, books))
 
     cand = inverted.join(F.broadcast(probes), "centroid_id").select(
-        "query_id", F.col(id_col), F.col("codes")
+        "query_id", "query_rows", F.col(id_col), F.col("codes")
     )
 
     out_schema = StructType(
@@ -1644,16 +1646,23 @@ def ivf_pq_topk(
     )
 
     def _local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx, tabs = bc.value
+        tabs = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             vids = pdf[id_col].to_numpy(dtype=np.int64)
             qids = pdf["query_id"].to_numpy(dtype=np.int64)
-            cm_ = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            qrow = np.array([idx[int(q)] for q in qids])
-            d = np.round(
-                tabs[qrow[:, None], np.arange(m)[None, :], cm_].sum(axis=1), 9
+            qrows = pdf["query_rows"].to_numpy()
+            n_rows = np.fromiter(map(len, qrows), np.int64, len(qrows))
+            qrow = np.concatenate(qrows).astype(np.int64)
+            cm_ = np.repeat(
+                np.stack(pdf["codes"].to_numpy()).astype(np.int64), n_rows, axis=0
+            )
+            d = np.minimum.reduceat(
+                np.round(
+                    tabs[qrow[:, None], np.arange(m)[None, :], cm_].sum(axis=1), 9
+                ),
+                np.cumsum(n_rows) - n_rows,
             )
             yield _first_k_per_query(
                 qids, vids, d, k, "adc_dist", descending=False

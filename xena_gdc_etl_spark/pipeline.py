@@ -1,20 +1,23 @@
 """End-to-end dataset pipeline — the engine's ``XenaDataset`` family.
 
 The reference orchestrates each dataset as download → transform → metadata
-(/root/reference/xena_gdc_etl/xena_dataset.py:308 ``XenaDataset``, :728
-``GDCOmicset``, :1232 ``GDCPhenoset``, :1417 ``GDCSurvivalset``). The Spark
-version keeps the same three-step surface but swaps the I/O model: the
-"download" step resolves a DataFrame from any source (parquet dir, Xena
-TSV) instead of fetching per-sample files, the transform is the registered
-per-dtype plan (gdc_pipelines), and the sink writes a Xena-TSV matrix plus
-the JSON metadata sidecar. Everything between source and sink is a single
-lazy plan — Catalyst sees the whole pipeline.
+(xena_gdc_etl/xena_dataset.py:308 ``XenaDataset``, :728 ``GDCOmicset``,
+:1232 ``GDCPhenoset``, :1417 ``GDCSurvivalset``). The Spark version keeps
+the same three-step surface but swaps the I/O model: the "download" step
+resolves a DataFrame from any source (parquet dir, Xena TSV) instead of
+fetching per-sample files, the transform is the registered per-dtype plan
+(gdc_pipelines), and the sink writes a Xena TSV plus the JSON metadata
+sidecar. The dtype's kind in the registry picks both the transform and the
+sink: the matrix kind pivots into a Xena matrix headed by the dtype's
+index name, every other kind is a row-stacked table written verbatim.
+``merge_xena`` unions per-project files of one dtype through the same
+choice. Everything between source and sink is a single lazy plan —
+Catalyst sees the whole pipeline.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,34 +25,70 @@ from pyspark.sql import DataFrame, SparkSession
 from xena_gdc_etl_spark.filters import FilterSpec
 from xena_gdc_etl_spark.gdc_pipelines import (
     DTYPE_SPECS,
+    dtypes_of,
+    supported_dtypes,
     transform_maf_dtype,
     transform_matrix_dtype,
     transform_segment_dtype,
 )
 from xena_gdc_etl_spark.metadata import build_metadata, write_metadata
-from xena_gdc_etl_spark.sources.xena_tsv import write_wide_tsv, write_xena_tsv
+from xena_gdc_etl_spark.operators.matrix import union_matrices
+from xena_gdc_etl_spark.sources.xena_tsv import (
+    read_wide_tsv,
+    read_xena_tsv,
+    write_wide_tsv,
+    write_xena_tsv,
+)
+
+
+def _pivots(dtype: str) -> bool:
+    """Matrix-kind dtypes, and any dtype outside the registry, pivot."""
+    spec = DTYPE_SPECS.get(dtype)
+    return spec is None or spec.kind == "matrix"
+
+
+def write_dataset(dtype: str, frame: DataFrame, out: str) -> None:
+    """Write ``frame`` to ``out`` with the sink of ``dtype``'s kind: the
+    matrix kind pivots long (sample, feature, value) rows into a Xena
+    matrix whose first column is headed by the dtype's index name (the
+    reference's ``set_index``/``to_csv``); every other kind is a
+    row-stacked table written verbatim. A dtype outside the registry is
+    written as a matrix headed ``feature``."""
+    if _pivots(dtype):
+        index_name = getattr(DTYPE_SPECS.get(dtype), "index_name", None)
+        write_xena_tsv(frame, out, feature_header=index_name)
+    else:
+        write_wide_tsv(frame, out)
+
+
+def merge_xena(spark: SparkSession, paths: list[str], dtype: str, out: str) -> None:
+    """Merge Xena files of one dtype into ``out`` (the reference's
+    ``merge-xena`` and panTCGA merge). Matrix-kind files are unioned as
+    long (sample, feature, value) rows, which covers both reference merge
+    axes; the tables of every other kind are row-unioned onto the first
+    file's header (the reference's axis=0 concat)."""
+    if _pivots(dtype):
+        frame = union_matrices([read_xena_tsv(spark, p) for p in paths])
+    else:
+        frame = read_wide_tsv(spark, paths)
+    write_dataset(dtype, frame, out)
 
 
 def _projects_str(projects: str | list[str]) -> str:
     return ",".join(projects) if isinstance(projects, list) else projects
 
 
-def _export(
-    ds,
-    matrix: DataFrame,
-    write: Callable[[DataFrame, str], None],
-    meta_dtype: str,
-    name: str | None,
-) -> str:
-    """Write dataset ``ds``'s ``matrix`` with ``write`` into the reference
-    layout ``<root>/<projects>/Xena_Matrices/<name>`` (xena_dataset.py:460),
-    ``name`` defaulting to ``<projects>.<xena_dtype>.tsv``, and put its
-    JSON metadata sidecar next to it; returns the matrix path."""
+def _export(ds, frame: DataFrame, name: str | None) -> str:
+    """Write dataset ``ds``'s ``frame`` with its dtype's sink into the
+    reference layout ``<root>/<projects>/Xena_Matrices/<name>``
+    (xena_dataset.py:460), ``name`` defaulting to
+    ``<projects>.<xena_dtype>.tsv``, and put its JSON metadata sidecar next
+    to it; returns the matrix path."""
     projects = _projects_str(ds.projects)
     name = name or f"{projects}.{ds.xena_dtype}.tsv"
     out = os.path.join(ds.root_dir, projects, "Xena_Matrices", name)
-    write(matrix, out)
-    meta = build_metadata(ds.projects, meta_dtype, out, ds.gdc_release)
+    write_dataset(ds.xena_dtype, frame, out)
+    meta = build_metadata(ds.projects, ds.xena_dtype, out, ds.gdc_release)
     write_metadata(meta, out)
     return out
 
@@ -71,7 +110,7 @@ class XenaDatasetSpark:
     gdc_release: str = ""
 
     def __post_init__(self) -> None:
-        if self.xena_dtype not in DTYPE_SPECS:
+        if self.xena_dtype not in supported_dtypes():
             raise ValueError(
                 f"Unsupported dtype {self.xena_dtype!r}; see supported_dtypes()"
             )
@@ -94,10 +133,7 @@ class XenaDatasetSpark:
 
     # -- step 3: sink + metadata sidecar -----------------------------------
     def export(self, matrix: DataFrame, name: str | None = None) -> str:
-        # segment/MAF matrices are row-stacked tables, not pivoted
-        matrix_kind = DTYPE_SPECS[self.xena_dtype].kind == "matrix"
-        write = write_xena_tsv if matrix_kind else write_wide_tsv
-        return _export(self, matrix, write, self.xena_dtype, name)
+        return _export(self, matrix, name)
 
     # -- one-call pipeline --------------------------------------------------
     def run(self, spark: SparkSession, source_path: str) -> str:
@@ -109,7 +145,7 @@ class XenaDatasetSpark:
 @dataclass
 class GDCPhenosetSpark:
     """Phenotype dataset — the reference's ``GDCPhenoset``
-    (/root/reference/xena_gdc_etl/xena_dataset.py:1232) re-expressed:
+    (xena_gdc_etl/xena_dataset.py:1232) re-expressed:
     case-level clinical merges onto sample-level biospecimen with
     clinical-over-biospecimen priority on overlapping columns
     (:1385 ``transform``), nested fields flatten into dotted columns
@@ -126,12 +162,11 @@ class GDCPhenosetSpark:
     root_dir: str = "."
     gdc_release: str = ""
 
-    _VALID = ("clinical", "biospecimen", "raw_phenotype", "GDC_phenotype")
-
     def __post_init__(self) -> None:
-        if self.xena_dtype not in self._VALID:
+        valid = dtypes_of("phenotype")
+        if self.xena_dtype not in valid:
             raise ValueError(
-                f"xena_dtype must be one of {self._VALID}, got {self.xena_dtype!r}"
+                f"xena_dtype must be one of {valid}, got {self.xena_dtype!r}"
             )
 
     def load(
@@ -179,7 +214,7 @@ class GDCPhenosetSpark:
         return merged
 
     def export(self, matrix: DataFrame, name: str | None = None) -> str:
-        return _export(self, matrix, write_wide_tsv, "clinical", name)
+        return _export(self, matrix, name)
 
     def run(
         self,
@@ -194,7 +229,7 @@ class GDCPhenosetSpark:
 @dataclass
 class GDCSurvivalsetSpark:
     """Survival dataset — the reference's ``GDCSurvivalset``
-    (/root/reference/xena_gdc_etl/xena_dataset.py:1417): the per-case
+    (xena_gdc_etl/xena_dataset.py:1417): the per-case
     survival table becomes the 4-column Xena survival matrix
     (sample, OS, OS.time, _PATIENT; :1520 ``transform``) with one row per
     sample of each case. ``survival_matrix`` broadcasts the per-case side
@@ -221,7 +256,7 @@ class GDCSurvivalsetSpark:
         # engine keeps OS_time internally (dots in Spark names fight column
         # resolution) and renames only at the sink.
         renamed = matrix.withColumnRenamed("OS_time", "OS.time")
-        return _export(self, renamed, write_wide_tsv, "survival", name)
+        return _export(self, renamed, name)
 
     def run(
         self,
