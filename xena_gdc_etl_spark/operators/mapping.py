@@ -119,10 +119,10 @@ def postprocess_rename_dedup(
     - Rename: broadcast left join against the (sample, case) map; unmapped
       ids pass through (``rename_by_mapping``) — the reference's iterative
       per-column/per-row rename loop collapses into one hash join.
-    - Dedup, sample-column dtypes (the registry's ``sample_columns`` flag;
-      postprocessing.py:83-88
-      ``columns.duplicated()`` keep-first): two original sample columns that
-      renamed onto the same case keep ONE value per (feature, case). The
+    - Dedup, dtypes whose registry entry sets ``sample_columns``
+      (postprocessing.py:83-88 ``columns.duplicated()`` keep-first): two
+      original sample columns that renamed onto the same case keep ONE
+      value per (feature, case). The
       reference keeps the first in FILE column order. Pass ``order_col`` —
       a column carrying each cell's ORIGINAL file column ordinal (e.g.
       ``read_xena_tsv(..., with_ordinal=True)``'s ``__col_idx``) — to
