@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -26,9 +27,12 @@ def job_ids(spark, request):
     """``job_ids(fn)`` runs ``fn`` under a job group of its own and
     returns ``(fn(), ids of the Spark jobs it fired)``."""
     sc = spark.sparkContext
+    calls = itertools.count()
 
     def run(fn):
-        group = f"jobs-{request.node.name}-{id(fn)}"
+        # a counter, not id(fn): a freed lambda's id is reused, and a
+        # reused group would count the earlier call's jobs again
+        group = f"jobs-{request.node.name}-{next(calls)}"
         sc.setJobGroup(group, request.node.name)
         try:
             out = fn()
@@ -38,6 +42,21 @@ def job_ids(spark, request):
         return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+def plan_nodes(spark, ids) -> list[tuple[str, str]]:
+    """(name, description) of every node in the final plan graph of each
+    SQL execution that ran one of the jobs ``ids``."""
+    sql = spark._jsparkSession.sharedState().statusStore()
+    execs = sql.executionsList()
+    out = []
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        if not any(ex.jobs().contains(j) for j in ids):
+            continue
+        nodes = sql.planGraph(ex.executionId()).allNodes()
+        out += [(nodes.apply(k).name(), nodes.apply(k).desc()) for k in range(nodes.size())]
+    return out
 
 
 def run_cli_inprocess(*args: str):

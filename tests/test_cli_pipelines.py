@@ -816,3 +816,40 @@ def test_cli_postprocess_trim_collision_fails_loud(tmp_path):
     )
     assert res.returncode == 2
     assert "collision" in res.stderr
+
+
+def test_merge_xena_header_is_union_of_input_headers(spark, tmp_path, job_ids):
+    """merge_xena pivots under the sorted union of its inputs' header
+    names: it fires only its write's jobs (one shuffle's map and result
+    stages, no header collect), and a sample named only by a header-only
+    input becomes an all-NA column."""
+    from conftest import plan_nodes
+
+    from xena_gdc_etl_spark.pipeline import merge_xena
+
+    a, b = tmp_path / "a.tsv", tmp_path / "b.tsv"
+    _write_tsv(a, ["Ensembl_ID", "s2", "s1"], [["g1", "1.0", "2.0"], ["g2", "NA", "3.0"]])
+    _write_tsv(b, ["Ensembl_ID", "s3"], [])
+    out = str(tmp_path / "merged.tsv")
+    _, ids = job_ids(lambda: merge_xena(spark, [str(a), str(b)], "star_counts", out))
+    assert len(ids) == 2
+    assert [n for n, _ in plan_nodes(spark, ids) if n == "Exchange"] == ["Exchange"]
+    assert _read_tsv_rows(out) == [
+        ["Ensembl_ID", "s1", "s2", "s3"],
+        ["g1", "2.0", "1.0", "NA"],
+        ["g2", "3.0", "NA", "NA"],
+    ]
+
+
+def test_merge_xena_of_header_only_inputs_raises(spark, tmp_path):
+    """Inputs with sample columns but no rows make an empty matrix: the
+    merge raises the empty-matrix ValueError and leaves no output."""
+    from xena_gdc_etl_spark.pipeline import merge_xena
+
+    a, b = tmp_path / "a.tsv", tmp_path / "b.tsv"
+    _write_tsv(a, ["Ensembl_ID", "s1"], [])
+    _write_tsv(b, ["Ensembl_ID", "s2"], [])
+    out = str(tmp_path / "merged.tsv")
+    with pytest.raises(ValueError, match="has no 'sample' values"):
+        merge_xena(spark, [str(a), str(b)], "star_counts", out)
+    assert not os.path.exists(out)

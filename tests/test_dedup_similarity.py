@@ -1660,3 +1660,50 @@ def test_simhash_lane_width_bound_rejected(spark):
         dd.simhash(df, bits=16, lane_width=8).collect()[0].simhash
         == dd.simhash(df, bits=16).collect()[0].simhash
     )
+
+
+@pytest.mark.parametrize("second", [7, 21])
+@pytest.mark.parametrize("op", ["cosine_topk", "sq_l2_topk", "pq_topk"])
+def test_broadcast_topk_duplicate_query_id_rows(spark, op, second):
+    """A query id given on two rows lists each match once, at its best
+    score over the rows: 40 random 4-d vectors, query id 100 given
+    ``vecs[7]`` and ``vecs[second]``, k=3 (the same vector twice listed
+    every match twice). The result equals a brute force over the two
+    single-row queries that keeps each match's best score."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    vecs = rng.normal(size=(40, 4))
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id bigint, embedding array<double>",
+    ).coalesce(1)
+    rows = [(100, [float(x) for x in vecs[i]]) for i in (7, second)]
+    if op == "pq_topk":
+        books = sim.pq_train(emb, m=2, k=4, iterations=2)
+        codes = sim.pq_encode(emb, books)
+
+        def run(query_rows, k):
+            queries = spark.createDataFrame(query_rows, "vec_id bigint, embedding array<double>")
+            return sim.pq_topk(codes, queries, books, k=k).collect()
+    else:
+        def run(query_rows, k):
+            queries = spark.createDataFrame(query_rows, "vec_id bigint, embedding array<double>")
+            return getattr(sim, op)(emb, queries, k=k).collect()
+
+    got = run(rows, 3)
+    assert [r.rank for r in sorted(got, key=lambda r: r.rank)] == [1, 2, 3]
+    assert len({r.match_id for r in got}) == len(got) == 3
+    assert sorted(got) == sorted(run(rows[::-1], 3))
+    # brute force: each match's best score over the two single-row queries
+    score_col = got[0].__fields__[2]
+    best = {}
+    for row in rows:
+        for r in run([row], 40):
+            s, prev = r[score_col], best.get(r.match_id)
+            if prev is None or (s > prev if op == "cosine_topk" else s < prev):
+                best[r.match_id] = s
+    order = sorted(best, key=lambda m: ((-best[m] if op == "cosine_topk" else best[m]), m))
+    assert [(r.match_id, r[score_col]) for r in sorted(got, key=lambda r: r.rank)] == [
+        (m, best[m]) for m in order[:3]
+    ]

@@ -320,3 +320,112 @@ def test_read_landed_matrix_header_only_files(spark, tmp_path):
     assert got.dtypes == [
         ("sample", "string"), ("feature", "string"), ("value", "double")
     ]
+
+
+def _land_bodies(spark, land: str, bodies: dict):
+    """Land ``bodies[uuid]`` as ``<uuid>.tsv`` through ``download_files``;
+    the manifest names uuid ``u`` sample ``S-u``."""
+    from xena_gdc_etl_spark.sources.download import download_files
+
+    def fetch(url: str, _bodies=dict(bodies)):
+        uuid = url.rsplit("/", 1)[1]
+        return f"{uuid}.tsv", iter([_bodies[uuid].encode()])
+
+    manifest = spark.createDataFrame(
+        [(u, f"S-{u}") for u in bodies], ["uuid", "sample"]
+    )
+    return manifest, download_files(manifest, land, fetcher=fetch)
+
+
+def _landed_export(spark, tmp_path, bodies: dict):
+    """(dataset, long rows, matrix path) of a star_counts export over
+    files landed from ``bodies``."""
+    from xena_gdc_etl_spark.gdc2xena import read_landed_matrix
+    from xena_gdc_etl_spark.pipeline import XenaDatasetSpark
+
+    manifest, status = _land_bodies(spark, str(tmp_path / "landed"), bodies)
+    long_raw = read_landed_matrix(spark, manifest, status, "gene_id", "unstranded")
+    root = str(tmp_path / "root")
+    ds = XenaDatasetSpark(projects="P", xena_dtype="star_counts", root_dir=root)
+    return ds, long_raw, os.path.join(root, "P", "Xena_Matrices", "P.star_counts.tsv")
+
+
+def test_export_of_header_only_landing_raises_and_leaves_no_matrix(spark, tmp_path):
+    """Every landed file holds only its header: the export raises the
+    empty-matrix ValueError and leaves no matrix directory, so gdc2xena
+    would list the dataset as unfinished."""
+    import pytest
+
+    ds, long_raw, out = _landed_export(
+        spark, tmp_path, {"ub": "gene_id\tunstranded\n", "uc": "gene_id\tunstranded\n"}
+    )
+    with pytest.raises(ValueError, match="has no 'sample' values"):
+        ds.export(ds.transform(long_raw))
+    assert not os.path.exists(out)
+    assert not os.path.exists(out + ".json")
+
+
+def test_export_header_only_landed_file_is_an_all_na_column(spark, tmp_path):
+    """A landed file is a column: a header-only file among files with data
+    exports as an all-NA column of its sample, in sorted header order."""
+    ds, long_raw, out = _landed_export(
+        spark,
+        tmp_path,
+        {
+            "ua": "gene_id\tunstranded\nENSG1\t1\nENSG2\t3\n",
+            "ub": "gene_id\tunstranded\n",
+            "uc": "gene_id\tunstranded\nENSG1\t7\n",
+        },
+    )
+    assert ds.export(ds.transform(long_raw)) == out
+    (part,) = glob.glob(os.path.join(out, "part-*"))
+    lines = open(part).read().splitlines()
+    assert lines[0].split("\t") == ["Ensembl_ID", "S-ua", "S-ub", "S-uc"]
+    rows = {line.split("\t")[0]: line.split("\t")[1:] for line in lines[1:]}
+    assert set(rows) == {"ENSG1", "ENSG2"}
+    assert [rows[f][1] for f in ("ENSG1", "ENSG2")] == ["NA", "NA"]
+    assert rows["ENSG2"][2] == "NA"
+
+
+def test_declared_header_over_max_columns_raises_before_writing(
+    spark, tmp_path, job_ids
+):
+    """A declared sample set wider than ``max_columns`` raises the
+    over-wide ValueError before any job runs or anything is written."""
+    import pytest
+
+    from xena_gdc_etl_spark.sources.xena_tsv import declared_samples, write_xena_tsv
+
+    body = "gene_id\tunstranded\nENSG1\t1\n"
+    _, long_raw, _ = _landed_export(
+        spark, tmp_path, {"ua": body, "ub": body, "uc": body}
+    )
+    assert declared_samples(long_raw) == ["S-ua", "S-ub", "S-uc"]
+    out = str(tmp_path / "wide.tsv")
+
+    def write():
+        with pytest.raises(ValueError, match="more than 2 rows"):
+            write_xena_tsv(long_raw, out, max_columns=2)
+
+    _, ids = job_ids(write)
+    assert ids == []
+    assert not os.path.exists(out)
+
+
+def test_export_of_landed_matrix_fires_no_header_collect(spark, tmp_path, job_ids):
+    """The export takes its header from the declared sample set: its jobs
+    are the write's own (the manifest broadcast, one shuffle's map and
+    result stages), it scans the landed files once, and the average plus
+    the pivot's two aggregates share one shuffle exchange."""
+    from conftest import plan_nodes
+
+    body = "gene_id\tunstranded\nENSG1\t1\nENSG2\t2\n"
+    ds, long_raw, out = _landed_export(
+        spark, tmp_path, {"ua": body, "ub": body, "uc": body}
+    )
+    got, ids = job_ids(lambda: ds.export(ds.transform(long_raw)))
+    assert got == out
+    assert len(ids) == 3
+    nodes = plan_nodes(spark, ids)
+    assert len([d for n, d in nodes if n.startswith("Scan") and "Format: CSV" in d]) == 1
+    assert [n for n, _ in nodes if n == "Exchange"] == ["Exchange"]

@@ -70,9 +70,11 @@ class Catalog:
     _NANOS_TS_COLS = {"events": ("ts",)}
 
     # DataFrames are immutable logical plans, so resolving a table once per
-    # (session, path) is safe — and skips the file-listing + footer-schema
-    # job `spark.read.parquet` runs on every call (a fixed per-query tax
-    # when a workload touches the same tables repeatedly). Keyed by a weakref
+    # (session, path) is safe — and skips the driver-side file listing and
+    # the schema-inference job `spark.read.parquet` runs on every call (an
+    # executor reading one footer: a fixed per-query tax when a workload
+    # touches the same tables repeatedly; `sources.parquet_source` reads
+    # that footer on the driver instead). Keyed by a weakref
     # to the session so a stopped+collected session never aliases a new one
     # (id() reuse), and dead entries vanish with their session.
     #

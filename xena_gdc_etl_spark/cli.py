@@ -423,10 +423,11 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 return 2
             from xena_gdc_etl_spark.gdc2xena import etl_download_transform
+            from xena_gdc_etl_spark.sources.parquet_source import read_parquet
 
             out, _status = etl_download_transform(
                 spark,
-                spark.read.parquet(options.manifest),
+                read_parquet(spark, options.manifest),
                 download_dir=options.download_dir,
                 dtype=options.dtype,
                 project=options.project,
@@ -443,12 +444,13 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         from xena_gdc_etl_spark.metadata import build_metadata, write_metadata
         from xena_gdc_etl_spark.pipeline import XenaDatasetSpark, write_dataset
+        from xena_gdc_etl_spark.sources.parquet_source import read_parquet
 
         # the dtype's kind picks the transform and the sink, as for the
         # manifest route and gdc2xena
         project = options.project or "unknown"
         ds = XenaDatasetSpark(projects=project, xena_dtype=options.dtype)
-        raw = spark.read.parquet(options.source).withColumnsRenamed(
+        raw = read_parquet(spark, options.source).withColumnsRenamed(
             {
                 options.sample_col: "sample",
                 options.feature_col: "feature",

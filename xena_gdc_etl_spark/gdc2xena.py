@@ -22,6 +22,7 @@ from __future__ import annotations
 import json
 import logging
 import os
+import re
 import shutil
 import time
 from collections.abc import Callable
@@ -31,7 +32,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xena_gdc_etl_spark.gdc_pipelines import DTYPE_SPECS
-from xena_gdc_etl_spark.sources.xena_tsv import tsv_header, tsv_reader
+from xena_gdc_etl_spark.sources.xena_tsv import SAMPLES_KEY, tsv_header, tsv_reader
+
+# The uuid of a landed file's path (``target_path`` names files
+# ``<uuid>.<ext>``). The extension is OPTIONAL: a download with no
+# Content-Disposition filename lands as the bare uuid, and a
+# dot-requiring pattern would extract '' and the manifest join would
+# silently drop every row of that file.
+_UUID = re.compile(r"([^/.]+)(?:\.[^/]*)?$")
 
 
 @dataclass
@@ -234,10 +242,27 @@ def read_landed_matrix(
     The file→sample mapping joins through the manifest (uuid → sample) on
     the uuid embedded in the landed filename (``target_path`` names files
     ``<uuid>.<ext>``); the manifest is tiny and broadcasts.
+
+    The ``sample`` column declares the sorted samples of the landed files
+    in its field metadata (``xena_tsv.SAMPLES_KEY``), read from the
+    manifest, which is collected once here. Transforms carry the
+    declaration through, and ``write_xena_tsv`` takes it as the export
+    header, so the export fires no header collect and scans the landed
+    files once. A landed file is a column: a header-only one exports as
+    an all-NA column. Filtering samples out after this leaves them in
+    the header.
     """
     paths = [r.path for r in status.select("path").collect() if r.path]
     if not paths:
         raise ValueError("no successfully downloaded files to parse")
+    landed = {_UUID.search(p).group(1) for p in paths}
+    samples = sorted(
+        {
+            r[1]
+            for r in manifest.select(uuid_col, sample_col).collect()
+            if r[0] in landed and r[1] is not None
+        }
+    )
     header = next(filter(None, map(tsv_header, sorted(paths))), [])
     raw = tsv_reader(spark, header).csv(
         sorted({os.path.dirname(p) for p in paths})
@@ -248,11 +273,7 @@ def read_landed_matrix(
         .isin([os.path.basename(p) for p in paths])
     ).withColumn(
         "__uuid",
-        # the extension is OPTIONAL: a download with no
-        # Content-Disposition filename lands as the bare uuid, and a
-        # dot-requiring pattern would extract '' and the manifest
-        # join would silently drop every row of that file
-        F.regexp_extract(F.input_file_name(), r"([^/.]+)(?:\.[^/]*)?$", 1),
+        F.regexp_extract(F.input_file_name(), _UUID.pattern, 1),
     )
     uuid_to_sample = manifest.select(
         F.col(uuid_col).alias("__uuid"), F.col(sample_col).alias("sample")
@@ -260,7 +281,7 @@ def read_landed_matrix(
     return (
         raw.join(F.broadcast(uuid_to_sample), "__uuid")
         .select(
-            "sample",
+            F.col("sample").alias("sample", metadata={SAMPLES_KEY: samples}),
             F.col(feature_col).alias("feature"),
             F.col(value_col).cast("double").alias("value"),
         )

@@ -186,6 +186,11 @@ def transform_matrix_dtype(
 ) -> DataFrame:
     """Run the dtype's matrix recipe over long-format raw data: drop summary
     features, average repeats, apply log2(x+1) when the dtype calls for it.
+
+    The rows are hash-partitioned by feature before the average. That one
+    exchange satisfies the average's (sample, feature) grouping and both
+    aggregates of the export's pivot (by (feature, sample), then by
+    feature), so a matrix write runs one shuffle instead of two.
     """
     spec = DTYPE_SPECS[dtype]
     if spec.kind != "matrix":
@@ -194,7 +199,7 @@ def transform_matrix_dtype(
     if spec.drop_features:
         df = df.filter(~F.col(feature_col).isin(*spec.drop_features))
     return merge_sample_cols(
-        df, sample_col, feature_col, value_col, log2tf=spec.log2tf
+        df.repartition(feature_col), sample_col, feature_col, value_col, log2tf=spec.log2tf
     )
 
 

@@ -271,14 +271,16 @@ def _broadcast_topk(
     ``TOPK_CHUNK_ROWS`` chunk by ``scorer`` and emits a SUPERSET of each
     query's batch-local top-k by the final criterion; :func:`_rank_topk`
     finishes over partitions×k-ish rows. The corpus never shuffles
-    (beyond the underfill spread). Output: (query_id, match_id,
-    ``score_col``, rank).
+    (beyond the underfill spread). A query id given on several rows lists
+    each match once, at its best score over those rows. Output:
+    (query_id, match_id, ``score_col``, rank).
     """
     spark = corpus.sparkSession
     if not len(q_ids):
         return _empty_topk(spark, score_col)
     bc = spark.sparkContext.broadcast((q_ids, qm))
     sink = -np.inf if descending else np.inf
+    repeated_ids = len(np.unique(q_ids)) < len(q_ids)
 
     def _local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Fully vectorized batch stage — no per-query Python loop: |Q|
@@ -366,13 +368,23 @@ def _broadcast_topk(
                     else:
                         mask &= buf <= (thr + margin)[:, None]
                 q_idx, v_idx = np.nonzero(mask)
-                yield pd.DataFrame(
+                out = pd.DataFrame(
                     {
                         "query_id": ids[q_idx],
                         "match_id": vids[v_idx],
                         score_col: rescore(rows, q_idx, v_idx, buf),
                     }
                 )
+                if repeated_ids:
+                    # a query id given on several rows keeps each corpus
+                    # row once, at its best score, as ivf_pq_topk does
+                    out = (
+                        out.assign(__v=v_idx)
+                        .sort_values(score_col, ascending=not descending, kind="stable")
+                        .drop_duplicates(["query_id", "__v"])
+                        .drop(columns="__v")
+                    )
+                yield out
 
     local = _spread_to_cores(
         corpus.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col),

@@ -33,9 +33,11 @@ from xena_gdc_etl_spark.gdc_pipelines import (
 )
 from xena_gdc_etl_spark.metadata import build_metadata, write_metadata
 from xena_gdc_etl_spark.operators.matrix import union_matrices
+from xena_gdc_etl_spark.sources.parquet_source import read_parquet
 from xena_gdc_etl_spark.sources.xena_tsv import (
     read_wide_tsv,
     read_xena_tsv,
+    tsv_header,
     write_wide_tsv,
     write_xena_tsv,
 )
@@ -47,16 +49,19 @@ def _pivots(dtype: str) -> bool:
     return spec is None or spec.kind == "matrix"
 
 
-def write_dataset(dtype: str, frame: DataFrame, out: str) -> None:
+def write_dataset(
+    dtype: str, frame: DataFrame, out: str, samples: list[str] | None = None
+) -> None:
     """Write ``frame`` to ``out`` with the sink of ``dtype``'s kind: the
     matrix kind pivots long (sample, feature, value) rows into a Xena
     matrix whose first column is headed by the dtype's index name (the
-    reference's ``set_index``/``to_csv``); every other kind is a
+    reference's ``set_index``/``to_csv``), with ``samples`` as its header
+    when given (see ``write_xena_tsv``); every other kind is a
     row-stacked table written verbatim. A dtype outside the registry is
     written as a matrix headed ``feature``."""
     if _pivots(dtype):
         index_name = getattr(DTYPE_SPECS.get(dtype), "index_name", None)
-        write_xena_tsv(frame, out, feature_header=index_name)
+        write_xena_tsv(frame, out, feature_header=index_name, samples=samples)
     else:
         write_wide_tsv(frame, out)
 
@@ -65,13 +70,17 @@ def merge_xena(spark: SparkSession, paths: list[str], dtype: str, out: str) -> N
     """Merge Xena files of one dtype into ``out`` (the reference's
     ``merge-xena`` and panTCGA merge). Matrix-kind files are unioned as
     long (sample, feature, value) rows, which covers both reference merge
-    axes; the tables of every other kind are row-unioned onto the first
-    file's header (the reference's axis=0 concat)."""
-    if _pivots(dtype):
-        frame = union_matrices([read_xena_tsv(spark, p) for p in paths])
-    else:
-        frame = read_wide_tsv(spark, paths)
-    write_dataset(dtype, frame, out)
+    axes, and pivot under the sorted union of the inputs' header names,
+    so the write fires no header collect; the rows are hash-partitioned
+    by feature once, which serves both of the pivot's aggregates. The
+    tables of every other kind are row-unioned onto the first file's
+    header (the reference's axis=0 concat)."""
+    if not _pivots(dtype):
+        write_dataset(dtype, read_wide_tsv(spark, paths), out)
+        return
+    frame = union_matrices([read_xena_tsv(spark, p) for p in paths])
+    samples = sorted({name for p in paths for name in tsv_header(p)[1:]})
+    write_dataset(dtype, frame.repartition("feature"), out, samples=samples)
 
 
 def _projects_str(projects: str | list[str]) -> str:
@@ -120,7 +129,7 @@ class XenaDatasetSpark:
         """Resolve raw data (long-format parquet) and apply the dataset's
         declarative filter — pushed into the scan, the engine-side analog of
         the GDC API filtering server-side."""
-        return self.gdc_filter.apply(spark.read.parquet(source_path))
+        return self.gdc_filter.apply(read_parquet(spark, source_path))
 
     # -- step 2: per-dtype transform ---------------------------------------
     def transform(self, raw: DataFrame) -> DataFrame:
@@ -172,10 +181,8 @@ class GDCPhenosetSpark:
     def load(
         self, spark: SparkSession, clinical_path: str, biospecimen_path: str | None = None
     ) -> tuple[DataFrame, DataFrame | None]:
-        clin = spark.read.parquet(clinical_path)
-        bio = (
-            spark.read.parquet(biospecimen_path) if biospecimen_path else None
-        )
+        clin = read_parquet(spark, clinical_path)
+        bio = read_parquet(spark, biospecimen_path) if biospecimen_path else None
         return clin, bio
 
     def transform(
@@ -265,6 +272,6 @@ class GDCSurvivalsetSpark:
         case_samples_path: str,
         case_key: str = "case_id",
     ) -> str:
-        surv = spark.read.parquet(survival_path)
-        samples = spark.read.parquet(case_samples_path)
+        surv = read_parquet(spark, survival_path)
+        samples = read_parquet(spark, case_samples_path)
         return self.export(self.transform(surv, samples, case_key))

@@ -10,6 +10,12 @@ on the driver, so no job infers types over the data. Reading converts
 wide → the engine's long format; writing pivots long → wide. The wide
 shape is an EDGE format only: fine for export of bounded matrices, wrong
 as an internal representation at scale.
+
+A write's header is its sample list. When the driver already knows it —
+passed in, or declared in the sample column's field metadata under
+``SAMPLES_KEY`` — the write fires no job before its own; otherwise a
+bounded collect finds it. With a known header the emptiness check runs
+after the write, on the driver, over the one written part file.
 """
 
 from __future__ import annotations
@@ -18,6 +24,7 @@ import csv
 import glob
 import gzip
 import os
+import shutil
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
@@ -26,6 +33,11 @@ from xena_gdc_etl_spark.operators.matrix import melt_long
 
 # the one read/write dialect: tab-separated, a header line, "NA" for null
 _DIALECT = {"sep": "\t", "header": True, "nullValue": "NA"}
+
+# Field-metadata key under which a long frame's sample column declares
+# its sample set — the export header — the way Spark ML declares a
+# nominal column's values in its field metadata.
+SAMPLES_KEY = "xena_samples"
 
 
 def tsv_header(path: str) -> list[str]:
@@ -122,6 +134,13 @@ def read_xena_tsv(
     return out
 
 
+def declared_samples(long_df: DataFrame, sample_col: str = "sample") -> list | None:
+    """The sample set ``sample_col``'s field metadata declares (under
+    ``SAMPLES_KEY``), or ``None`` when it declares none."""
+    fields = [f for f in long_df.schema.fields if f.name == sample_col]
+    return fields[0].metadata.get(SAMPLES_KEY) if fields else None
+
+
 def write_xena_tsv(
     long_df: DataFrame,
     path: str,
@@ -130,17 +149,32 @@ def write_xena_tsv(
     value_col: str = "value",
     max_columns: int = 50_000,
     feature_header: str | None = None,
+    samples: list[str] | None = None,
 ) -> None:
     """Export a long matrix as a Xena-style TSV directory (features as the
     index column, one column per sample — the reference's matrix layout).
     Pivot width = number of samples; exporting is only sane for bounded
     sample sets, which is exactly the reference's use case (TCGA cohorts
-    top out near 11k samples; pan-cancer ~12.6k). The distinct sample list
-    becomes the output HEADER, so it is collected driver-side by the
-    bounded probe (``partitioning.collect_at_most``): an over-wide pivot
-    — a driver-OOM-by-collect otherwise — fails with an actionable
-    ``ValueError`` naming the ``max_columns`` knob, and an empty one
-    raises ``ValueError`` before anything is written.
+    top out near 11k samples; pan-cancer ~12.6k).
+
+    The sample list is the output HEADER, in the order given. It comes
+    from the first of:
+
+    - ``samples``, when the caller knows it (``merge_xena`` passes the
+      sorted union of its inputs' headers);
+    - the set ``sample_col`` declares in its field metadata
+      (``declared_samples``; ``read_landed_matrix`` declares the sorted
+      samples of the landed files, and transforms carry it through);
+    - a bounded collect of the distinct sorted values
+      (``partitioning.collect_at_most``), which costs a scan and 3 jobs.
+
+    A known header fires no job before the write, and a sample without
+    rows becomes an all-NA column. More than ``max_columns`` samples — a
+    driver-OOM-by-collect otherwise — raise ``ValueError`` naming the
+    knob before anything is written, as does an empty sample set. A known
+    header cannot tell beforehand whether the frame has rows, so the
+    driver checks the written part file afterwards: a matrix with no data
+    row is removed and raises the same ``ValueError``.
 
     ``feature_header`` renames the output's first (index) column; the
     reference preserves the input matrix's index header (e.g.
@@ -151,22 +185,27 @@ def write_xena_tsv(
 
     from xena_gdc_etl_spark.operators.partitioning import collect_at_most
 
-    sample_rows = collect_at_most(
-        long_df.select(sample_col).distinct().orderBy(sample_col), max_columns
-    )
-    if sample_rows is None:
+    known = samples if samples is not None else declared_samples(long_df, sample_col)
+    if known is None:
+        sample_rows = collect_at_most(
+            long_df.select(sample_col).distinct().orderBy(sample_col), max_columns
+        )
+        samples = None if sample_rows is None else [r[0] for r in sample_rows]
+    else:
+        samples = known if len(known) <= max_columns else None
+    if samples is None:
         raise ValueError(
             f"write_xena_tsv: the distinct {sample_col!r} set (the output "
             f"header) has more than {max_columns} rows — a pivot this wide "
             "is not driver-sized (and not a sane TSV); export a bounded "
             "cohort or raise max_columns"
         )
-    if not sample_rows:
-        raise ValueError(
-            f"write_xena_tsv: {path}: the long frame has no {sample_col!r} "
-            "values, and a matrix without sample columns cannot be read back"
-        )
-    samples = [r[0] for r in sample_rows]
+    empty = ValueError(
+        f"write_xena_tsv: {path}: the long frame has no {sample_col!r} "
+        "values, and a matrix without sample columns cannot be read back"
+    )
+    if not samples:
+        raise empty
     wide = (
         long_df.groupBy(feature_col)
         .pivot(sample_col, [str(s) for s in samples])
@@ -175,6 +214,18 @@ def write_xena_tsv(
     if feature_header:
         wide = wide.withColumnRenamed(feature_col, feature_header)
     write_wide_tsv(wide, path)
+    if known is not None and not _has_data_row(path):
+        shutil.rmtree(path, ignore_errors=True)
+        raise empty
+
+
+def _has_data_row(path: str) -> bool:
+    """Whether a written TSV directory holds a line after its header."""
+    for part in glob.glob(os.path.join(path, "part-*")):
+        with open(part, "rb") as fh:
+            if fh.readline() and fh.readline():
+                return True
+    return False
 
 
 def write_wide_tsv(wide_df: DataFrame, path: str) -> None:
